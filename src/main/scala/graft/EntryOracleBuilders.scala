@@ -3284,8 +3284,8 @@ private[graft] trait EntryOracleBuilders { this: SparkEntry.type =>
     * embedder + `lower` cleaner (q40): crossJoin cosine → top-2 with
     * the lower-ref_row_id tie-break → rank pivot → exact-overwrite
     * (first-row-wins, definition-vs-all_text asymmetry, rank-2
-    * nulling). Every stage mirrors Matcher.mapLabels /
-    * overwriteExactMatches one-to-one. */
+    * nulling). Each stage is one step of Matcher.mapLabels' fused
+    * per-row kernel (MatchReference.report), written relationally. */
   private[graft] def labelMatchFrozenOracle: String = {
     def cos(av: String, an: String, bv: String, bn: String) =
       s"CASE WHEN $an * $bn = 0 THEN 0.0 ELSE list_dot_product($av, $bv) / ($an * $bn) END"

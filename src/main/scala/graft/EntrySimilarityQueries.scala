@@ -679,13 +679,8 @@ private[graft] trait EntrySimilarityQueries { this: SparkEntry.type =>
       .withColumn("all_text",
         coalesce(concat(col("CT_NAME"), lit(" "), col("CT_LABEL"), lit(" "),
           col("definition")), col("CT_NAME")))
-    // the prepared reference is referenced ~5× inside mapLabels (score
-    // side, per-rank attribute fetches, exact-match side); it is
-    // catalog-sized by construction, so cache the 301-row table once
-    // instead of re-running scan+embed+row_number per reference.
     val ref = Matcher.prepareReference(
       embedder.embed(part, "all_text", "embedding"), "embedding", Seq("CT_ID"))
-      .cache()
     Matcher.mapLabels(queries, ref, k = 2)
       .orderBy("source", "raw_input_label")
   }
@@ -722,7 +717,6 @@ private[graft] trait EntrySimilarityQueries { this: SparkEntry.type =>
     val queries = embedder.embed(raw, "cleaned_input_label", "qvec")
     val ref = Matcher.prepareReference(
       embedder.embed(part, "all_text", "embedding"), "embedding", Seq("CT_ID"))
-      .cache()
     Matcher.mapLabels(queries, ref, k = 2)
       .orderBy("source", "raw_input_label")
   }
@@ -756,13 +750,12 @@ private[graft] trait EntrySimilarityQueries { this: SparkEntry.type =>
     val queries = embedder.embed(raw, "cleaned_input_label", "qvec")
     val ref = Matcher.prepareReference(
       embedder.embed(part, "all_text", "embedding"), "embedding", Seq("CT_ID"))
-      .cache()
     Matcher.mapLabels(queries, ref, k = 2)
       .orderBy("source", "raw_input_label")
   }
 
-  /** The flagship matcher (q24's crossJoin → bounded-heap top-k →
-    * rank pivot → exact-overwrite, `main.py:171-221`) run with its two
+  /** The flagship matcher (q24's fused cosine → top-k → rank pivot →
+    * exact-overwrite projection, `main.py:171-221`) run with its two
     * non-SQL seams — embedder and label cleaner — swapped for
     * DuckDB-expressible substitutes (md5-derived frozen vectors;
     * `lower`). Same operator code end to end, so this converts the
@@ -788,7 +781,7 @@ private[graft] trait EntrySimilarityQueries { this: SparkEntry.type =>
         concat(col("CT_NAME"), lit(" "), col("CT_LABEL"), lit(" "), col("definition")))
       .withColumn("embedding", frozenVec(col("all_text")))
     val ref = Matcher.prepareReference(ref0, "embedding", Seq("CT_ID"),
-      cleaner = lower).cache()
+      cleaner = lower)
     Matcher.mapLabels(queries, ref, k = 2)
       .orderBy("source", "raw_input_label")
   }

@@ -26,10 +26,12 @@ import org.apache.spark.sql.types._
   * Output: `array<struct<score:double, id:bigint>>`, sorted by the
   * same (score DESC, id ASC) order — `element_at(out, r)` is the
   * rank-r match, exactly `row_number() = r` of the window form
-  * (parity pinned by MatcherSpec / GraftProperties).
+  * (parity pinned by GraftProperties).
   *
-  * Null scores or ids are skipped (they cannot occur in the matcher:
-  * the cosine kernel is zero-guarded, ids are row_numbers).
+  * Null scores or ids are skipped. Users: the ANN scans (Ann),
+  * Curation and LateInteraction; the flagship matcher keeps the same
+  * [[TopKBuffer]] inside its per-row kernel instead
+  * (graft.operators.MatchReportExpr).
   */
 object TopKByScoreAgg {
   import org.apache.spark.sql.graftbridge.{toColumn, toExpression}

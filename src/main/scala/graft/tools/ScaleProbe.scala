@@ -125,10 +125,8 @@ object ScaleProbe {
             col("definition")), col("CT_NAME")))
       val ref = Matcher.prepareReference(
         embedder.embed(part, "all_text", "embedding"), "embedding", Seq("CT_ID"))
-        .cache()
-      val n = Matcher.mapLabels(queries, ref, k = 2).count()
-      ref.unpersist()
-      n
+      // collect, not count(): a count would prune the report projection
+      Matcher.mapLabels(queries, ref, k = 2).collect().length.toLong
     }
     time("sessionize") { dir =>
       StreamOps.sessionize(

@@ -10,7 +10,9 @@ import graft.functions.{DotProductExpr, NormalizeExpr, TextNlp, TopKBuffer, Word
 
 /** Property-based invariants (SURVEY.md §5.2.3). The custom Catalyst
   * expressions are evaluated directly (interpreted eval path) — no
-  * SparkSession needed, so thousands of cases run in milliseconds. */
+  * SparkSession needed, so thousands of cases run in milliseconds.
+  * The one exception is the fused-matcher parity property, which runs
+  * the Spark pipeline the kernel replaced as its expected value. */
 object GraftProperties extends Properties("graft") {
 
   private val token: Gen[String] =
@@ -209,6 +211,62 @@ object GraftProperties extends Properties("graft") {
   property("TopKBuffer totally orders NaN greatest (window-form parity)") =
     forAll(scoredIdsWithNaN, Gen.choose(1, 5)) { (xs, k) =>
       sameEntries(contents(fill(k, xs)), topKExpectedTotal(xs, k))
+    }
+
+  // --- fused matcher kernel vs the crossJoin pipeline it replaced -------
+
+  private val matchElem: Gen[Double] = Gen.frequency(
+    8 -> Gen.choose(-1.0, 1.0),
+    3 -> Gen.oneOf(-1.0, 0.0, 0.5, 1.0), // repeated values force exact ties
+    1 -> Gen.const(Double.NaN))
+
+  private val matchVec: Gen[Seq[Double]] = Gen.frequency(
+    6 -> Gen.choose(1, 5).flatMap(d => Gen.listOfN(d, matchElem)), // unequal lengths
+    1 -> Gen.choose(1, 5).map(d => Seq.fill(d)(0.0)))             // zero vectors
+
+  private val matchCase: Gen[(List[Seq[Double]], List[Seq[Double]], Int)] = for {
+    pool <- Gen.choose(1, 4).flatMap(Gen.listOfN(_, matchVec))
+    nRef <- Gen.choose(1, 12)
+    // picks from a small pool: duplicate reference vectors tie exactly
+    refs <- Gen.listOfN(nRef, Gen.frequency(2 -> Gen.oneOf(pool), 1 -> matchVec))
+    nQ <- Gen.choose(1, 6)
+    qs <- Gen.listOfN(nQ, Gen.frequency(1 -> Gen.oneOf(refs), 3 -> matchVec))
+    k <- Gen.choose(1, 4)
+  } yield (qs, refs, k)
+
+  property("fused matcher top-k equals crossJoin → cosineWithNorms → sort → take k") =
+    forAll(matchCase) { case (qs, refs, k) =>
+      import org.apache.spark.sql.functions._
+      import graft.functions.VectorOps
+      import graft.operators.{MatchReference, Matcher}
+      val spark = SparkTestSession.spark
+      import spark.implicits._
+      val ref = Matcher.prepareReference(
+        refs.zipWithIndex.map { case (v, i) => (i, v) }.toDF("i", "embedding")
+          .select(col("i").cast("string").as("CT_ID"), col("i").cast("string").as("CT_NAME"),
+            lit("t").as("all_text"), lit("d").as("definition"), col("i"), col("embedding")),
+        "embedding", Seq("i"), cleaner = c => c)
+      // the replaced pipeline: score every pair, drop null scores,
+      // order by (score desc, ref_row_id asc), keep the first k
+      val expected = qs.zipWithIndex.map { case (v, i) => (i, v) }.toDF("qid", "qvec")
+        .withColumn("q_norm", VectorOps.l2Norm(col("qvec")))
+        .crossJoin(ref.select(col("ref_row_id"), col("embedding").as("ref_vec"), col("ref_norm")))
+        .withColumn("score", VectorOps.cosineWithNorms(
+          col("qvec"), col("q_norm"), col("ref_vec"), col("ref_norm")))
+        .filter(col("score").isNotNull)
+        .orderBy(col("qid"), col("score").desc, col("ref_row_id").asc)
+        .select("qid", "score", "ref_row_id").as[(Int, Double, Long)].collect()
+        .groupBy(_._1).map { case (q, xs) => q -> xs.toList.take(k).map(x => (x._2, x._3)) }
+      val packed = MatchReference.collect(ref, "embedding")
+      Prop.all(qs.zipWithIndex.map { case (v, qid) =>
+        val top = packed.topK(v.toArray, k)
+        val got = (0 until top.size).toList
+          .map(i => (top.scores(i), packed.ids(top.ids(i).toInt)))
+        val want = expected.getOrElse(qid, Nil)
+        Prop(got.length == want.length && got.zip(want).forall {
+          case ((s1, i1), (s2, i2)) => (s1 == s2 || (s1.isNaN && s2.isNaN)) && i1 == i2
+        }) :| s"query $qid: fused $got, pipeline $want"
+      }: _*)
     }
 
   // --- VocabAvgExpr: the quantized-sum exactness the q44 oracle rests on

@@ -21,8 +21,10 @@ class MatcherSpec extends SparkSpec with Matchers {
       .toDF("CT_ID", "CT_NAME", "CT_LABEL", "definition", "all_text", "embedding"),
     "embedding", Seq("CT_ID"))
 
+  // RDD-backed, so the report projection runs as generated code (a
+  // local Seq would let the optimizer fold it into a LocalRelation)
   private def queries(rows: (String, String, Seq[Double])*) =
-    rows.toSeq.toDF("source", "raw_input_label", "qvec")
+    spark.sparkContext.parallelize(rows.toSeq, 1).toDF("source", "raw_input_label", "qvec")
       .withColumn("cleaned_input_label",
         graft.functions.GraftUdfs.cleanLabel(col("raw_input_label")))
 
@@ -101,20 +103,88 @@ class MatcherSpec extends SparkSpec with Matchers {
     ref.select("ref_row_id").as[Long].collect().sorted shouldBe Array(1L, 2L, 3L)
   }
 
-  test("mapLabels plan shape: broadcast joins only, at most 3 shuffles, no sort-merge join") {
+  test("mapLabels plan shape: one projection, no join, no aggregate, no shuffle") {
+    import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-    val plan = Matcher.mapLabels(
-        queries(("test", "probe", Seq(1.0, 0.0))), ref, k = 2)
-      .queryExecution.executedPlan
-    val all = plan.collectWithSubqueries { case p => p }
-    // the design claim the operator's scaladoc makes: one query-side
-    // shuffle (the upstream distinct's, reused by the top-k aggregate)
-    // plus the catalog-sized reference's row_number sort — everything
-    // else broadcasts. A SortMergeJoin or extra exchange appearing
-    // here means a Spark upgrade or edit broke the physical shape.
-    all.count(_.isInstanceOf[ShuffleExchangeExec]) should be <= 3
-    all.count(_.isInstanceOf[SortMergeJoinExec]) shouldBe 0
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p.collectWithSubqueries { case n => n }
+    val q = queries(("test", "probe", Seq(1.0, 0.0)), ("test", "other", Seq(0.0, 1.0)))
+    val all = nodes(Matcher.mapLabels(q, ref, k = 2).queryExecution.executedPlan)
+    // the reference is collected at call time and broadcast by handle:
+    // the report is the query side plus one fused projection
+    all.count(_.isInstanceOf[BroadcastNestedLoopJoinExec]) shouldBe 0
+    all.count(_.isInstanceOf[ObjectHashAggregateExec]) shouldBe 0
+    all.count(_.isInstanceOf[BaseJoinExec]) shouldBe 0
+    all.count(_.isInstanceOf[ShuffleExchangeExec]) shouldBe
+      nodes(q.queryExecution.executedPlan).count(_.isInstanceOf[ShuffleExchangeExec])
+    // and that projection runs as generated code, not interpreted
+    all.collect { case w: WholeStageCodegenExec => w }
+      .exists(_.toString.contains("graft_match_report")) shouldBe true
+  }
+
+  test("generated and interpreted kernels agree (RDD-backed vs folded local queries)") {
+    val rows = Seq(("t", "tied query", Seq(1.0, 0.0)), ("t", "Basal Cells", Seq(0.3, 0.7)),
+      ("t", "zzz", Seq(0.0, 0.0)), ("t", "odd", Seq(-1.0, 2.0, 5.0)))
+    val local = rows.toDF("source", "raw_input_label", "qvec")
+      .withColumn("cleaned_input_label",
+        graft.functions.GraftUdfs.cleanLabel(col("raw_input_label")))
+    Matcher.mapLabels(local, ref, k = 3).collect().toSeq shouldBe
+      Matcher.mapLabels(queries(rows: _*), ref, k = 3).collect().toSeq
+  }
+
+  test("empty reference: empty report with the same schema") {
+    val empty = ref.limit(0)
+    val out = Matcher.mapLabels(queries(("t", "basal cell", Seq(1.0, 0.0))), empty, k = 2)
+    out.count() shouldBe 0L
+    out.schema shouldBe
+      Matcher.mapLabels(queries(("t", "basal cell", Seq(1.0, 0.0))), ref, k = 2).schema
+  }
+
+  test("null qvec: exact overwrite still applies, fuzzy slots are null") {
+    val rows = spark.sparkContext.parallelize(Seq(
+        ("t", "Basal Cells", null: Seq[Double]), ("t", "no such label", null: Seq[Double])), 1)
+      .toDF("source", "raw_input_label", "qvec")
+      .withColumn("cleaned_input_label",
+        graft.functions.GraftUdfs.cleanLabel(col("raw_input_label")))
+    val out = Matcher.mapLabels(rows, ref, k = 2).collect()
+      .map(r => r.getString(1) -> r).toMap
+    val exact = out("Basal Cells")
+    exact.getAs[Double]("match_score_1") shouldBe 1.0
+    exact.getAs[String]("matched_asctb_id_1") shouldBe "CL:2"
+    exact.isNullAt(exact.fieldIndex("match_score_2")) shouldBe true
+    val fuzzy = out("no such label")
+    Seq("match_score_1", "matched_asctb_id_1", "matched_asctb_label_1", "matched_asctb_text_1",
+        "match_score_2", "matched_asctb_id_2").foreach { c =>
+      fuzzy.isNullAt(fuzzy.fieldIndex(c)) shouldBe true
+    }
+  }
+
+  test("duplicate query rows: one report row per query row, each ranked on its own") {
+    // the report is a projection, so a duplicated (source,
+    // raw_input_label, cleaned_input_label) row yields the same row
+    // twice — callers dedupe upstream, as the flagship variants do —
+    // and no reference row fills two ranks of one report row
+    val out = Matcher.mapLabels(queries(("t", "tied query", Seq(1.0, 0.0)),
+      ("t", "tied query", Seq(1.0, 0.0))), ref, k = 2).collect()
+    out.length shouldBe 2
+    out.distinct.length shouldBe 1
+    out.map(_.getAs[String]("matched_asctb_id_1")).toSeq shouldBe Seq("CL:1", "CL:1")
+    out.map(_.getAs[String]("matched_asctb_id_2")).toSeq shouldBe Seq("CL:3", "CL:3")
+  }
+
+  test("mapLabels over a corpus-sized reference fails when it is called") {
+    val corpus = Matcher.prepareReference(spark.range(0, 1000)
+      .select(col("id").cast("string").as("CT_ID"), lit("n").as("CT_NAME"),
+        lit("t").as("all_text"), lit("d").as("definition"),
+        array(lit(1.0), lit(0.0)).as("embedding")),
+      "embedding", Seq("CT_ID"), maxCatalogRows = 100)
+    val e = intercept[Exception] {
+      Matcher.mapLabels(queries(("t", "x", Seq(1.0, 0.0))), corpus, k = 2)
+    }
+    val messages = Iterator.iterate(e: Throwable)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    messages should include("catalog-sized")
   }
 
   test("first-row-wins on duplicate cleaned reference names (main.py:119)") {

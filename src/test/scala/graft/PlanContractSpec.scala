@@ -4,10 +4,10 @@ import org.scalatest.matchers.should.Matchers
 
 /** Plan regression guard: no query may silently degrade into a
   * cartesian product or an unintended nested-loop join. The
-  * similarity tier (flagship matcher, brute-force ANN) uses an
-  * INTENTIONAL broadcast-nested-loop against a catalog-sized
-  * reference — those are whitelisted by name; everything else must
-  * plan as hash/sort-merge joins.
+  * brute-force similarity tier (ANN scans) uses an INTENTIONAL
+  * broadcast-nested-loop against a catalog-sized reference — those
+  * are whitelisted by name; everything else must plan as
+  * hash/sort-merge joins.
   */
 class PlanContractSpec extends SparkSpec with Matchers {
 
@@ -25,13 +25,12 @@ class PlanContractSpec extends SparkSpec with Matchers {
     "q227_stream_quantiles") // AvailableNow drain runs on construction
 
   /** Broadcast similarity scans (reference side catalog-sized by
-    * contract, guarded in Matcher/Ann — the nested loop IS the plan),
+    * contract, guarded in Ann — the nested loop IS the plan),
     * plus single-row scalar broadcasts (corpus stats in q60/q61: a
     * 1-row build side makes BNLJ the optimal join) and q22's
     * intentionally bounded 40×40 pair demo. */
   private val intentionalNestedLoop = Set(
-    "q24_label_match_report", "q25_knn_bruteforce", "q27_lsh_neardup",
-    "q32_ivf_topk", "q40_label_match_frozen",
+    "q25_knn_bruteforce", "q27_lsh_neardup", "q32_ivf_topk",
     "q22_ngram_jaccard", "q60_bm25", "q61_mixture_resample",
     "q73_corpus_pipeline",
     "q86_unigram_logprob", // 1-row corpus-total broadcast, like q60
@@ -96,14 +95,12 @@ class PlanContractSpec extends SparkSpec with Matchers {
     "q280_graph_ann")         // exact-rank broadcast scan beside the beam walk, like q25
 
   /** Queries whose plan legitimately carries a GLOBAL window (empty
-    * partitionSpec ⇒ a one-task sort of the window's input):
-    * prepareReference's positional row id — catalog-sized by guarded
-    * contract (q24/q40/q44). A SinglePartition exchange alone is NOT
-    * flagged: global aggregates finalize on one partition whose input
-    * is partial-aggregate-sized (q56/q60/q61/q73/q86's corpus
-    * stats) — benign by construction. */
+    * partitionSpec ⇒ a one-task sort of the window's input) over a
+    * table that is bounded by construction. A SinglePartition
+    * exchange alone is NOT flagged: global aggregates finalize on one
+    * partition whose input is partial-aggregate-sized
+    * (q56/q60/q61/q73/q86's corpus stats) — benign by construction. */
   private val intentionalGlobalWindow = Set(
-    "q24_label_match_report", "q40_label_match_frozen", "q44_label_match_w2v",
     "q114_mixture_quota", // remainder rank over the catalog-sized quota table
     "q261_temperature_mixture", // same remainder rank, temperature weights
     "q120_shard_manifest", // same quota stage inside the capstone
@@ -146,5 +143,17 @@ class PlanContractSpec extends SparkSpec with Matchers {
       }
     }
     offenders shouldBe empty
+  }
+
+  test("flagship variants leave the session CacheManager empty (q44 three times)") {
+    // q44 fits a fresh vocabulary per call, so a cached reference could
+    // never be found again: every call would add an InMemoryRelation
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    (1 to 3).foreach(_ => SparkEntry.queries("q44_label_match_w2v")(spark, sfDir).collect())
+    Seq("q24_label_match_report", "q40_label_match_frozen", "q148_label_match_cooc")
+      .foreach(q => SparkEntry.queries(q)(spark, sfDir).collect())
+    cache.isEmpty shouldBe true
   }
 }
