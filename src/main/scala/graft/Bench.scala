@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR
   * and prints ONE JSON line. A query that throws is recorded in
   * "failed" (its timing is time-to-failure) — a scale-only crash must
@@ -7,22 +6,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // TypedImperativeAggregate (TopKByScoreAgg) runs on
-      // ObjectHashAggregateExec, which falls back to SORT-based
-      // aggregation after 128 distinct keys per partition by default —
-      // re-introducing exactly the candidate-list sort the aggregate
-      // exists to avoid (measured 6x on the flagship at 8x data).
-      // States are ~100-byte bounded heaps, so a high threshold is safe.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.experimental.extraOptimizations =
-      Seq(graft.plans.PushFilterThroughExplode)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus)
     // Untimed warmup pass: first execution pays JVM/JIT warmup, codegen
     // compilation, Hadoop FS init and parquet footer reads — none of
     // which exist in a long-running cluster. Timed pass below measures

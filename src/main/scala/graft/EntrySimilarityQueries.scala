@@ -119,8 +119,9 @@ private[graft] trait EntrySimilarityQueries { this: SparkEntry.type =>
     * representative before signing, so it can neither flood a band
     * bucket past the cap (dragging its distinct-text neighbours out
     * with it) nor emit c² identical-pair output. Pairs between
-    * DISTINCT texts survive; the 32x/64x DedupScaleProbe rows show
-    * this composition flat at ~1x wall under a replica flood. */
+    * DISTINCT texts survive; under a 32x/64x replica flood this
+    * composition stays flat at 0.7x/1.04x of its 1x wall (PERF.md
+    * "Round 11: DedupScaleProbe", exact-collapse → minhash rows). */
   private[graft] def q151(s: SparkSession, dir: String): DataFrame =
     Dedup.minhashNearDuplicates(corpusWithBoilerplate(s, dir), "text", "doc_id",
         shingleSize = 3, numHashes = 8, rowsPerBand = 2, jaccardThreshold = 0.8,
@@ -1072,7 +1073,8 @@ private[graft] trait EntrySimilarityQueries { this: SparkEntry.type =>
     * round AND replays every hop of every query's walk (the q267
     * unrolled-chain discipline). Same query set and in-result
     * exact_rank as q265/q273, so graph-vs-IVF-PQ recall is read
-    * directly off the board (R15HnswProbe: 0.915+ vs 0.365). */
+    * directly off the board (recall@5 0.915 vs 0.365 at sf0.1:
+    * PERF.md "Round 15: HNSW-family scouting report"). */
   private[graft] def q280(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     // memoized: the streaming serve gate (q284) walks the SAME frozen

@@ -242,8 +242,9 @@ private[graft] trait EntryTextQueries { this: SparkEntry.type =>
     * (mergesPerAction=16): provably sequential-equivalent multi-merge
     * actions (Bpe.trainMergesBatched's prefix/chain/threat rules), so
     * the hash is unchanged while the gate exercises the scale path;
-    * the driver-local tail variant is pinned by BpeSpec and the
-    * BpeBatchProbe ledger row. */
+    * the driver-local tail variant is pinned by BpeSpec (64 merges:
+    * 7.4 s batched vs 24.5 s sequential, identical merge list —
+    * PERF.md "Round 10 BPE trainer scale modes"). */
   private[graft] def q123(s: SparkSession, dir: String): DataFrame =
     Bpe.trainMerges(t(s, dir, "documents"), "text", iterations = 8,
         mergesPerAction = 16)
@@ -1227,35 +1228,30 @@ private[graft] trait EntryTextQueries { this: SparkEntry.type =>
     * Returns per-doc (doc_id, trained_lang, score_micros, lang,
     * heur_lang, is_train). The oracle RETRAINS the whole model from
     * raw text (the q148/q154 discipline) — no learned literal
-    * crosses engines. */
-  private val langIdBaseMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private def langIdTrainedBase(s: SparkSession, dir: String): DataFrame = {
-    // q263 emits this spine and q264 aggregates it; the relational
-    // apply (per-gram md5 over the corpus) is the expensive half of
-    // both, so it runs once per (application, dir) and is pinned by
-    // an eager localCheckpoint — the q205/q220 LPA-memo discipline
-    // (stopped-context entries evicted on access). The model itself
-    // comes from the board-wide langIdCorpusModel memo.
-    langIdBaseMemo.entrySet().removeIf(
-      e => e.getValue.sparkSession.sparkContext.isStopped)
-    langIdBaseMemo.computeIfAbsent(
-      s"${s.sparkContext.applicationId}:$dir", _ => {
-        val docs = t(s, dir, "documents")
-          .select(col("doc_id"), col("text"), col("lang"))
-        val heur = TextAnalysis.languageId(
-          docs.select(col("doc_id"), col("text")))
-        val model = TextAnalysis.langIdCorpusModel(s, dir).model
-        TextAnalysis.langIdApply(docs.select(col("doc_id"), col("text")),
-            "doc_id", "text", model)
-          .join(docs.select(col("doc_id"), col("lang"),
-            (pmod(col("doc_id"), lit(5L)) =!= 0L).as("is_train")),
-            Seq("doc_id"))
-          .join(heur.select(col("doc_id"),
-            col("predicted_lang").as("heur_lang")), Seq("doc_id"))
-          .localCheckpoint()
-      })
-  }
+    * crosses engines.
+    *
+    * q263 emits this spine and q264 aggregates it; the relational
+    * apply (per-gram md5 over the corpus) is the expensive half of
+    * both, so it is pinned by an eager localCheckpoint and held in
+    * [[FittedCache]]. The model itself comes from the board-wide
+    * langIdCorpusModel memo. */
+  private def langIdTrainedBase(s: SparkSession, dir: String): DataFrame =
+    FittedCache.get(s, "EntryTextQueries.langIdTrainedBase",
+        Seq(s"$dir/documents.parquet"), Nil) {
+      val docs = t(s, dir, "documents")
+        .select(col("doc_id"), col("text"), col("lang"))
+      val heur = TextAnalysis.languageId(
+        docs.select(col("doc_id"), col("text")))
+      val model = TextAnalysis.langIdCorpusModel(s, dir).model
+      TextAnalysis.langIdApply(docs.select(col("doc_id"), col("text")),
+          "doc_id", "text", model)
+        .join(docs.select(col("doc_id"), col("lang"),
+          (pmod(col("doc_id"), lit(5L)) =!= 0L).as("is_train")),
+          Seq("doc_id"))
+        .join(heur.select(col("doc_id"),
+          col("predicted_lang").as("heur_lang")), Seq("doc_id"))
+        .localCheckpoint()
+    }
 
   /** TRAINED language ID, per-doc decisions: the multinomial-NB
     * hashed-char-trigram classifier (the langid.py / CLD model
@@ -1331,7 +1327,7 @@ private[graft] trait EntryTextQueries { this: SparkEntry.type =>
       .unionByName(langPlants.toDF("doc_id", "text", "lang"))
     // its own memoized model (documents ∪ plants ≠ the q263 corpus):
     // trained once per application, local weight frames downstream
-    val f = TextAnalysis.langIdFittedMemo(s, s"planted:$dir",
+    val f = TextAnalysis.langIdFittedMemo(s, "planted", dir,
       TextAnalysis.langIdTrain(
         docs.filter(pmod(col("doc_id"), lit(5L)) =!= 0L), "text", "lang"))
     // apply through the FUSED scorer (q271's certified fused ≡
@@ -1437,7 +1433,7 @@ private[graft] trait EntryTextQueries { this: SparkEntry.type =>
     // salted-hash 1/10 holdout, NOT doc_id % 10: doc_id blocks
     // correlate with source in the testdata, so the modulo split
     // would leave most sources with zero held-out docs. Scores are
-    // memoized per (application, dir) — q282/q289 read the same frame
+    // memoized in FittedCache — q282/q289 read the same frame
     val scored = TextAnalysis.sbCorpusScores(s, dir, scoreAll = false)
       .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
     TextAnalysis.perplexityBuckets(scored, "source", "doc_id")

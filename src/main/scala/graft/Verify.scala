@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,25 +11,8 @@ object Verify {
       case Array(s, o, q) => (s, o, Some(q.split(",").toSet))
       case _ => sys.error("usage: Verify <sfDir> <outDir> [q1,q2,...]")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // TypedImperativeAggregate (TopKByScoreAgg) runs on
-      // ObjectHashAggregateExec, which falls back to SORT-based
-      // aggregation after 128 distinct keys per partition by default —
-      // re-introducing exactly the candidate-list sort the aggregate
-      // exists to avoid (measured 6x on the flagship at 8x data).
-      // States are ~100-byte bounded heaps, so a high threshold is safe.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the engine's optimizer rule, via the public experimental hook
-    // (the spark.sql.extensions path needs builder-time config)
-    spark.experimental.extraOptimizations =
-      Seq(graft.plans.PushFilterThroughExplode)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries

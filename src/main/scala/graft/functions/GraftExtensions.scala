@@ -7,10 +7,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 /** SQL surface for the engine's native expressions.
   *
   * Two registration paths, same builders:
-  *  - cluster deployments: `spark.sql.extensions=graft.functions.GraftExtensions`
-  *    (the standard `SparkSessionExtensions` hook, applied at session
-  *    build time on every session of the cluster);
-  *  - an existing session (tests, notebooks): [[GraftExtensions.register]].
+  *  - `spark.sql.extensions=graft.functions.GraftExtensions` (the
+  *    standard `SparkSessionExtensions` hook, applied at session build
+  *    time; [[graft.GraftSession]] sets it, and a cluster can too);
+  *  - a session built elsewhere (notebooks): [[GraftExtensions.register]].
   *
   * After registration, `spark.sql` users get the codegen kernels
   * directly: `graft_dot(a, b)`, `graft_shingles(words, n)`,

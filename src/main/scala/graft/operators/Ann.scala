@@ -836,9 +836,10 @@ object Ann {
     * over incremental HNSW insertion because it is bounded relational
     * rounds (HNSW inserts are inherently sequential: each insert
     * searches the graph built so far — not expressible as a fixed
-    * plan). R15HnswProbe measured the decision: at harness scale the
-    * descended graph's greedy search reaches recall@5 0.915 after 2
-    * rounds at degree 16 vs residual IVF-PQ+rerank's 0.365.
+    * plan). Measured at sf0.1 (PERF.md "Round 15: HNSW-family
+    * scouting report", NN-descent table): the descended graph's greedy
+    * search reaches recall@5 0.915 after 2 rounds at degree 16 vs
+    * residual IVF-PQ+rerank's 0.365.
     *
     * Init: every node joins `bands` hash-bucket partitions of
     * expected size ≈ degree (salted md5 buckets — the sign-LSH
@@ -924,29 +925,24 @@ object Ann {
     else g.unionByName(longEdges).distinct()
   }
 
-  /** Board-level memo for [[nnDescentGraph]] over a testdata dir —
-    * the q205/q220/langIdCorpusModel precedent: q280 (batch search)
-    * and the streaming serve gate train the IDENTICAL index, so the
-    * build runs once per (application, dir, params) and every later
-    * caller reuses the pinned edge frame. Memoized ≡ fresh
-    * bit-for-bit: the value IS [[nnDescentGraph]]'s output, eagerly
-    * localCheckpoint-pinned (n·degree+longLink rows — trivial).
-    * Stopped-context entries are evicted on access. */
-  private val graphMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  /** Board-level memo for [[nnDescentGraph]] over a testdata dir:
+    * q280 (batch search) and the streaming serve gate train the
+    * IDENTICAL index, so the build runs once and every later caller
+    * reuses the pinned edge frame from [[graft.FittedCache]].
+    * Memoized ≡ fresh bit-for-bit: the value IS [[nnDescentGraph]]'s
+    * output, eagerly localCheckpoint-pinned (n·degree+longLink rows —
+    * trivial). */
   def nnDescentGraphMemo(spark: SparkSession, dir: String, degree: Int,
       rounds: Int, salt: String = "nnd", bands: Int = 2,
       longLinks: Int = 2): DataFrame = {
-    graphMemo.entrySet().removeIf(
-      e => e.getValue.sparkSession.sparkContext.isStopped)
-    graphMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:$dir:$degree:$rounds:" +
-        s"$salt:$bands:$longLinks",
-      _ => nnDescentGraph(
-        spark.read.parquet(s"$dir/embeddings.parquet")
-          .select(col("vec_id"), col("embedding")),
+    val path = s"$dir/embeddings.parquet"
+    graft.FittedCache.get(spark, "Ann.nnDescentGraph", Seq(path),
+        Seq(degree, rounds, salt, bands, longLinks)) {
+      nnDescentGraph(
+        spark.read.parquet(path).select(col("vec_id"), col("embedding")),
         "vec_id", "embedding", degree, rounds, salt, bands, longLinks)
-        .localCheckpoint())
+        .localCheckpoint()
+    }
   }
 
   /** Greedy BEAM search over a bounded-degree neighbor graph — the
@@ -958,8 +954,9 @@ object Ann {
     * idempotent and the beam improves monotonically, so a FIXED hop
     * budget makes the whole walk one unrolled relational plan — the
     * property that lets a DuckDB oracle replay it as `hops` chained
-    * CTEs (the q267 unrolled-DP discipline; R15HnswProbe measured
-    * beams stable within ≤ 5 hops at degree 16 on the harness).
+    * CTEs (the q267 unrolled-DP discipline; beams settle within ≤ 5
+    * hops at degree 16 at sf0.1 — PERF.md "Round 15: HNSW-family
+    * scouting report", hops column).
     * Output contract matches the PQ tier ([[pqAdcTopK]]): top `topK`
     * per query with brute-force `exact_rank` inside the result, so
     * graph-vs-IVF-PQ recall is measured per query. */
@@ -1166,7 +1163,7 @@ object Ann {
 
   /** The index-build half of [[ivfPqResidualTopK]] — identical
     * arithmetic, factored out so the board can train the index ONCE
-    * per (application, dir, params) via [[residualPqIndexMemo]]. */
+    * per params via [[residualPqIndexMemo]]. */
   def buildResidualPqIndex(corpus: DataFrame, idCol: String,
       vecCol: String, kCells: Int, coarseIterations: Int, m: Int,
       subDim: Int, kCodes: Int, pqIterations: Int,
@@ -1209,27 +1206,23 @@ object Ann {
   }
 
   /** Board-level memo for [[buildResidualPqIndex]] over a testdata
-    * dir — the langid/nnDescent memo precedent: q265, q273 and any
-    * serving caller train the IDENTICAL index, so the build runs once
-    * per (application, dir, params). Memoized ≡ fresh bit-for-bit
-    * (the value IS [[buildResidualPqIndex]]'s pinned frames). */
-  private val residIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, ResidualPqIndex]()
+    * dir: q265, q273 and any serving caller train the IDENTICAL index,
+    * so the build runs once per params through [[graft.FittedCache]].
+    * Memoized ≡ fresh bit-for-bit (the value IS
+    * [[buildResidualPqIndex]]'s pinned frames). */
   def residualPqIndexMemo(spark: SparkSession, dir: String, kCells: Int,
       coarseIterations: Int, m: Int, subDim: Int, kCodes: Int,
       pqIterations: Int, coarseSalt: String = "ivfpqc",
       pqSalt: String = "ivfpqr"): ResidualPqIndex = {
-    residIndexMemo.entrySet().removeIf(
-      e => e.getValue.codes.sparkSession.sparkContext.isStopped)
-    residIndexMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:$dir:$kCells:" +
-        s"$coarseIterations:$m:$subDim:$kCodes:$pqIterations:" +
-        s"$coarseSalt:$pqSalt",
-      _ => buildResidualPqIndex(
-        spark.read.parquet(s"$dir/embeddings.parquet")
-          .select(col("vec_id"), col("embedding")),
+    val path = s"$dir/embeddings.parquet"
+    graft.FittedCache.get(spark, "Ann.residualPqIndex", Seq(path),
+        Seq(kCells, coarseIterations, m, subDim, kCodes, pqIterations,
+          coarseSalt, pqSalt)) {
+      buildResidualPqIndex(
+        spark.read.parquet(path).select(col("vec_id"), col("embedding")),
         "vec_id", "embedding", kCells, coarseIterations, m, subDim,
-        kCodes, pqIterations, coarseSalt, pqSalt))
+        kCodes, pqIterations, coarseSalt, pqSalt)
+    }
   }
 
   /** The index-build half of [[ivfPqTopK]] (RAW encoding — IVF-Flat-PQ):
@@ -1256,30 +1249,25 @@ object Ann {
     ResidualPqIndex(assign, cents, codes, books)
   }
 
-  /** Board-level memo for [[buildRawPqIndex]] over a testdata dir —
-    * the [[residualPqIndexMemo]] precedent on the raw tier: q257,
-    * q266's raw presets, q278's raw baseline and q279's frozen
+  /** Board-level memo for [[buildRawPqIndex]] over a testdata dir:
+    * q257, q266's raw presets, q278's raw baseline and q279's frozen
     * operating parameters all train (params)-keyed raw boards, so
-    * each distinct board trains once per (application, dir, params).
+    * each distinct board trains once through [[graft.FittedCache]].
     * Memoized ≡ fresh bit-for-bit (the value IS
     * [[buildRawPqIndex]]'s pinned frames; pinned by AnnSpec). */
-  private val rawIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, ResidualPqIndex]()
   def rawPqIndexMemo(spark: SparkSession, dir: String, kCells: Int,
       coarseIterations: Int, m: Int, subDim: Int, kCodes: Int,
       pqIterations: Int, coarseSalt: String = "ivfpqc",
       pqSalt: String = "ivfpq"): ResidualPqIndex = {
-    rawIndexMemo.entrySet().removeIf(
-      e => e.getValue.codes.sparkSession.sparkContext.isStopped)
-    rawIndexMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:$dir:$kCells:" +
-        s"$coarseIterations:$m:$subDim:$kCodes:$pqIterations:" +
-        s"$coarseSalt:$pqSalt",
-      _ => buildRawPqIndex(
-        spark.read.parquet(s"$dir/embeddings.parquet")
-          .select(col("vec_id"), col("embedding")),
+    val path = s"$dir/embeddings.parquet"
+    graft.FittedCache.get(spark, "Ann.rawPqIndex", Seq(path),
+        Seq(kCells, coarseIterations, m, subDim, kCodes, pqIterations,
+          coarseSalt, pqSalt)) {
+      buildRawPqIndex(
+        spark.read.parquet(path).select(col("vec_id"), col("embedding")),
         "vec_id", "embedding", kCells, coarseIterations, m, subDim,
-        kCodes, pqIterations, coarseSalt, pqSalt))
+        kCodes, pqIterations, coarseSalt, pqSalt)
+    }
   }
 
   /** The search half of [[ivfPqTopK]] over a fitted raw board —
@@ -1325,48 +1313,36 @@ object Ann {
   /** Board-level memo for the OPQ-permuted raw board (q278's second
     * audit arm): the permutation is deterministic from (dir, m,
     * subDim) and the permuted board from the remaining params, so the
-    * pair trains once per (application, dir, params). */
-  private val opqIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, OpqPqIndex]()
+    * pair trains once through [[graft.FittedCache]]. */
   def opqPqIndexMemo(spark: SparkSession, dir: String, kCells: Int,
       coarseIterations: Int, m: Int, subDim: Int, kCodes: Int,
       pqIterations: Int): OpqPqIndex = {
-    opqIndexMemo.entrySet().removeIf(
-      e => e.getValue.index.codes.sparkSession.sparkContext.isStopped)
-    opqIndexMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:$dir:$kCells:" +
-        s"$coarseIterations:$m:$subDim:$kCodes:$pqIterations",
-      _ => {
-        val e = spark.read.parquet(s"$dir/embeddings.parquet")
-          .select(col("vec_id"), col("embedding"))
-        val perm = opqPermutation(e, "embedding", m, subDim)
-        val pe = e.select(col("vec_id"),
-          permuteVec(col("embedding"), perm).as("embedding"))
-        OpqPqIndex(perm, buildRawPqIndex(pe, "vec_id", "embedding",
-          kCells, coarseIterations, m, subDim, kCodes, pqIterations))
-      })
+    val path = s"$dir/embeddings.parquet"
+    graft.FittedCache.get(spark, "Ann.opqPqIndex", Seq(path),
+        Seq(kCells, coarseIterations, m, subDim, kCodes, pqIterations)) {
+      val e = spark.read.parquet(path).select(col("vec_id"), col("embedding"))
+      val perm = opqPermutation(e, "embedding", m, subDim)
+      val pe = e.select(col("vec_id"),
+        permuteVec(col("embedding"), perm).as("embedding"))
+      OpqPqIndex(perm, buildRawPqIndex(pe, "vec_id", "embedding",
+        kCells, coarseIterations, m, subDim, kCodes, pqIterations))
+    }
   }
 
   /** Board-level memo for [[pqTrainEncode]] over a testdata dir
-    * (q256's flat-PQ codes/codebooks, same discipline): the fitted
-    * pair is pinned once per (application, dir, params). */
-  private val pqCodesMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, DataFrame)]()
+    * (q256's flat-PQ codes/codebooks): the fitted pair is pinned once
+    * per params in [[graft.FittedCache]]. */
   def pqTrainEncodeMemo(spark: SparkSession, dir: String, m: Int,
       subDim: Int, k: Int, iterations: Int,
       salt: String): (DataFrame, DataFrame) = {
-    pqCodesMemo.entrySet().removeIf(
-      e => e.getValue._1.sparkSession.sparkContext.isStopped)
-    pqCodesMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:$dir:$m:$subDim:$k:" +
-        s"$iterations:$salt",
-      _ => {
-        val (codes, books) = pqTrainEncode(
-          spark.read.parquet(s"$dir/embeddings.parquet")
-            .select(col("vec_id"), col("embedding")),
-          "vec_id", "embedding", m, subDim, k, iterations, salt)
-        (codes.localCheckpoint(true), books.localCheckpoint(true))
-      })
+    val path = s"$dir/embeddings.parquet"
+    graft.FittedCache.get(spark, "Ann.pqTrainEncode", Seq(path),
+        Seq(m, subDim, k, iterations, salt)) {
+      val (codes, books) = pqTrainEncode(
+        spark.read.parquet(path).select(col("vec_id"), col("embedding")),
+        "vec_id", "embedding", m, subDim, k, iterations, salt)
+      (codes.localCheckpoint(true), books.localCheckpoint(true))
+    }
   }
 
   /** The search half of [[ivfPqResidualTopK]] over a fitted

@@ -111,36 +111,25 @@ object LinearModel {
     } finally feat.unpersist()
   }
 
-  /** Board-shared fitted quality trajectory, memoized per
-    * (application, dir, lr, iterations) — the
-    * [[TextAnalysis.langIdCorpusModel]] discipline applied to the
-    * quality classifier: q154/q155/q159/q161/q162/q163-phase-1 and
+  /** Board-shared fitted quality trajectory, held in
+    * [[graft.FittedCache]]: q154/q155/q159/q161/q162/q163-phase-1 and
     * the q157 streaming gate all train the IDENTICAL model (the
     * [[qualityTrainingFrame]] of `dir`'s documents under the same
     * (lr, iterations)), so the 8-round GD aggregate runs once per
-    * application instead of once per query. The memoized value is
-    * pure driver parameter state (a Seq of ≤ iterations rounds ×
-    * (2 longs + |features| doubles) — the fitted model a production
-    * pipeline trains once and ships), so no lineage or context
-    * eviction is needed; memoized ≡ fresh bit-for-bit because
+    * application instead of once per query. The value is pure driver
+    * parameter state (≤ iterations rounds × (2 longs + |features|
+    * doubles)); memoized ≡ fresh bit-for-bit because
     * [[trainFastSigmoidGD]] is deterministic (exact BIGINT gradient
     * sums, one fixed double update expression). Pinned by
     * LinearModelSpec. */
-  private val qualityTrajMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[GdRound]]()
   def qualityCorpusTrajectory(spark: org.apache.spark.sql.SparkSession,
       dir: String, lr: Double, iterations: Int): Seq[GdRound] = {
-    // drop entries from earlier SparkContexts (the other memos'
-    // cleanup discipline): appId-keyed entries are never reused
-    // after a context restart, so without this they leak fitted
-    // trajectories across restarts in one JVM (e.g. test suites)
-    val appId = spark.sparkContext.applicationId
-    qualityTrajMemo.keySet.removeIf(k => !k.startsWith(s"$appId:"))
-    qualityTrajMemo.computeIfAbsent(
-      s"$appId:$dir:$lr:$iterations",
-      _ => trainFastSigmoidGD(
-        qualityTrainingFrame(spark.read.parquet(s"$dir/documents.parquet")),
-        qualityFeatureCols, "y", lr, iterations))
+    val docs = s"$dir/documents.parquet"
+    graft.FittedCache.get(spark, "LinearModel.qualityCorpusTrajectory",
+        Seq(docs), Seq(lr, iterations)) {
+      trainFastSigmoidGD(qualityTrainingFrame(spark.read.parquet(docs)),
+        qualityFeatureCols, "y", lr, iterations)
+    }
   }
 
   /** GROUPED full-batch GD: one independent model per value of

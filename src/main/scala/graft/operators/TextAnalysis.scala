@@ -824,28 +824,24 @@ object TextAnalysis {
         sum(col("__lp_micro")).as("logprob_micros"))
   }
 
-  /** Board-level memo for the q281-family Stupid-Backoff scoring —
-    * the langid-memo precedent: q281/q282/q289 score the held-out
-    * hash-10% and q286 scores everything, all under the IDENTICAL
-    * model trained on the hash-90%, so each variant's scored frame is
-    * computed once per (application, dir). Memoized ≡ fresh
-    * bit-for-bit (the value IS [[stupidBackoffScore]]'s output,
-    * eagerly pinned — one row per scored doc). */
-  private val sbScoreMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  /** Board-level memo for the q281-family Stupid-Backoff scoring:
+    * q281/q282/q289 score the held-out hash-10% and q286 scores
+    * everything, all under the IDENTICAL model trained on the
+    * hash-90%, so each variant's scored frame is computed once and
+    * held in [[graft.FittedCache]]. Memoized ≡ fresh bit-for-bit (the
+    * value IS [[stupidBackoffScore]]'s output, eagerly pinned — one
+    * row per scored doc). */
   def sbCorpusScores(spark: SparkSession, dir: String,
       scoreAll: Boolean): DataFrame = {
-    sbScoreMemo.entrySet().removeIf(
-      e => e.getValue.sparkSession.sparkContext.isStopped)
-    sbScoreMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:$dir:$scoreAll", _ => {
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id"), col("text"))
-        val hold = Curation.inSample(col("doc_id"), 1, 10, "ppl")
-        stupidBackoffScore(docs.filter(!hold),
-            if (scoreAll) docs else docs.filter(hold), "doc_id", "text")
-          .localCheckpoint(true)
-      })
+    val path = s"$dir/documents.parquet"
+    graft.FittedCache.get(spark, "TextAnalysis.sbCorpusScores", Seq(path),
+        Seq(scoreAll)) {
+      val docs = spark.read.parquet(path).select(col("doc_id"), col("text"))
+      val hold = Curation.inSample(col("doc_id"), 1, 10, "ppl")
+      stupidBackoffScore(docs.filter(!hold),
+          if (scoreAll) docs else docs.filter(hold), "doc_id", "text")
+        .localCheckpoint(true)
+    }
   }
 
   /** CCNet-style perplexity bucketing (Wenzek et al. 2020): rank every
@@ -1548,54 +1544,40 @@ object TextAnalysis {
   final case class LangIdFitted(model: LangIdModel, langs: Seq[String],
       weights: Seq[Seq[Long]], priors: Seq[Long])
 
-  /** Board-shared fitted langid model, memoized per
-    * (SparkContext, dir): q263/q264/q271/q272/q274 all train the
-    * IDENTICAL model (the deterministic 80% split of `dir`'s
-    * documents, default params), so the training aggregation runs
-    * once per (application, dir) — the q205/q220 LPA-memo discipline
-    * (applicationId-keyed: collision-free across context restarts;
-    * stopped-context entries evicted on every access). The fitted
-    * weights/priors are re-exposed as LOCAL frames built from the
-    * collected arrays (|L|·B parameter-sized), so downstream
-    * broadcast joins scan a LocalTableScan instead of replaying the
-    * training lineage — memoized ≡ fresh bit-for-bit (the arrays ARE
-    * [[langIdModelArrays]]'s output; pinned by LangIdTrainedSpec). */
-  private val corpusModelMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, LangIdFitted]()
-
-  /** Generic fitted-langid memo: runs `train` once per
-    * (application, key), collapsing its weights/priors to LOCAL
-    * frames (the [[langIdCorpusModel]] discipline, factored out so
-    * q276's planted-corpus model shares the machinery).
+  /** Generic fitted-langid memo: runs `train` once per (recipe, dir)
+    * through [[graft.FittedCache]] and re-exposes its weights/priors
+    * as LOCAL frames built from the collected arrays (|L|·B
+    * parameter-sized), so downstream broadcast joins scan a
+    * LocalTableScan instead of replaying the training lineage —
+    * memoized ≡ fresh bit-for-bit (the arrays ARE
+    * [[langIdModelArrays]]'s output; pinned by LangIdTrainedSpec).
     *
-    * KEY-OWNERSHIP contract: the memo keys only on
-    * (applicationId, key) — the by-name `train` thunk is NOT part of
-    * the key, so each key string must be owned by exactly ONE
-    * training recipe. Call sites namespace their keys
-    * ("corpus:<dir>" here, "planted:<dir>" in q276); a new caller
-    * MUST pick a fresh prefix, or it would silently share another
-    * site's fitted model. */
-  def langIdFittedMemo(spark: SparkSession, key: String,
-      train: => LangIdModel): LangIdFitted = {
-    corpusModelMemo.entrySet().removeIf(
-      e => e.getValue.model.weights.sparkSession.sparkContext.isStopped)
-    corpusModelMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:$key", _ => {
-        val fresh = train
-        val (langs, w, p) = langIdModelArrays(fresh)
-        import spark.implicits._
-        val wLocal = langs.zipWithIndex.flatMap { case (l, i) =>
-          (0 until fresh.buckets).map(b => (l, b.toLong, w(i)(b)))
-        }.toDF("lang", "bucket", "w_micros")
-        val pLocal = langs.zip(p).toDF("lang", "prior_micros")
-        LangIdFitted(
-          LangIdModel(langs, fresh.buckets, fresh.n, fresh.maxChars,
-            fresh.salt, wLocal, pLocal), langs, w, p)
-      })
-  }
+    * `recipe` names the training recipe: the by-name `train` thunk is
+    * not part of the cache key, so each recipe string must belong to
+    * exactly one thunk ("corpus" here, "planted" in q276). `dir`'s
+    * documents are the fingerprinted input. */
+  def langIdFittedMemo(spark: SparkSession, recipe: String, dir: String,
+      train: => LangIdModel): LangIdFitted =
+    graft.FittedCache.get(spark, s"TextAnalysis.langIdFitted:$recipe",
+        Seq(s"$dir/documents.parquet"), Nil) {
+      val fresh = train
+      val (langs, w, p) = langIdModelArrays(fresh)
+      import spark.implicits._
+      val wLocal = langs.zipWithIndex.flatMap { case (l, i) =>
+        (0 until fresh.buckets).map(b => (l, b.toLong, w(i)(b)))
+      }.toDF("lang", "bucket", "w_micros")
+      val pLocal = langs.zip(p).toDF("lang", "prior_micros")
+      LangIdFitted(
+        LangIdModel(langs, fresh.buckets, fresh.n, fresh.maxChars,
+          fresh.salt, wLocal, pLocal), langs, w, p)
+    }
 
+  /** Board-shared fitted langid model: q263/q264/q271/q272/q274 all
+    * train the IDENTICAL model (the deterministic 80% split of `dir`'s
+    * documents, default params), so the training aggregation runs
+    * once per application. */
   def langIdCorpusModel(spark: SparkSession, dir: String): LangIdFitted =
-    langIdFittedMemo(spark, s"corpus:$dir", {
+    langIdFittedMemo(spark, "corpus", dir, {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"), col("lang"))
       langIdTrain(

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -32,55 +30,20 @@ import org.apache.spark.sql.types._
   */
 object EventsLoader {
 
-  /** Footer-derived schema per (path, mtime) — the probe is one
-    * driver-side footer read; memoized so bench reps don't repeat it.
-    * The mtime in the key means an in-place testdata regeneration
-    * (which has already flipped the ts encoding once) re-probes
-    * instead of driving the stale decode branch. The mtime is the
-    * NEWEST entry under the path, not the directory's own: rewriting
-    * part files in place need not bump the directory mtime, and a
-    * long-lived JVM would otherwise keep the stale branch. */
-  private val schemaCache =
-    new ConcurrentHashMap[(String, Long), StructType]()
-
-  private def mtimeOf(path: String): Long = {
-    def m(p: java.nio.file.Path): Long =
-      try java.nio.file.Files.getLastModifiedTime(p).toMillis
-      catch {
-        case _: java.io.IOException          => 0L
-        case _: java.io.UncheckedIOException => 0L
-      }
-    val p = java.nio.file.Paths.get(path)
-    val self = m(p)
-    if (!java.nio.file.Files.isDirectory(p)) self
-    else {
-      // the listing itself can race an in-place regeneration (dir
-      // deleted between the isDirectory check and list) — degrade to
-      // the directory's own mtime like the per-entry probe does
-      try {
-        val s = java.nio.file.Files.list(p)
-        try s.mapToLong(c => m(c)).reduce(self, (a: Long, b: Long) => math.max(a, b))
-        finally s.close()
-      } catch {
-        // the terminal reduce surfaces mid-listing deletion as
-        // UncheckedIOException (wrapping NoSuchFileException) or
-        // DirectoryIteratorException, not plain IOException
-        case _: java.io.IOException                       => self
-        case _: java.io.UncheckedIOException              => self
-        case _: java.nio.file.DirectoryIteratorException  => self
-      }
-    }
-  }
-
   private def rawSchema(spark: SparkSession, path: String): StructType = {
-    // set on EVERY call, not just the memoized probe: the cache is
-    // JVM-global while the flag is per-session, and without it a
-    // TIMESTAMP(NANOS) footer fails schema inference outright (with
-    // it, nanos arrive as LongType; micros/NTZ are unaffected)
+    // set on EVERY call, not just the first probe: the cache outlives
+    // this session's conf, and without the flag a TIMESTAMP(NANOS)
+    // footer fails schema inference outright (with it, nanos arrive
+    // as LongType; micros/NTZ are unaffected)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schemaCache.computeIfAbsent((path, mtimeOf(path)), { _ =>
+    // the probe is one driver-side footer read, held in FittedCache so
+    // bench reps don't repeat it; an in-place testdata regeneration
+    // (which has already flipped the ts encoding once) changes the
+    // file's fingerprint and re-probes instead of driving the stale
+    // decode branch
+    graft.FittedCache.get(spark, "EventsLoader.schema", Seq(path), Nil) {
       spark.read.parquet(path).schema
-    })
+    }
   }
 
   /** True when the file stores `ts` as raw nanos-since-epoch longs

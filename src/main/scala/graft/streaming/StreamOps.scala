@@ -165,12 +165,6 @@ object StreamOps {
 
   private val runCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Staged-input memo: the staged files for a (kind, source dir) are
-    * a pure function of the inputs, so repeated drains (bench reps)
-    * reuse them instead of re-copying the table every run. */
-  private val stagingCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   /** Run `body` with parquet `_SUCCESS` markers suppressed, restoring
     * the session-global hadoopConfiguration afterwards — the flag
     * must not leak into later writes in the JVM (build memos and
@@ -187,14 +181,20 @@ object StreamOps {
     }
   }
 
-  private def stagedDir(kind: String, dir: String)(build: String => Unit): String =
-    stagingCache.computeIfAbsent((kind, dir), { _ =>
+  /** Staged inputs for a (kind, source dir): the staged files are a
+    * pure function of the tables under `dir`, so repeated drains
+    * (bench reps) reuse them from [[graft.FittedCache]] instead of
+    * re-copying the table every run; the whole `dir` is the
+    * fingerprinted input, so a rewritten table restages. */
+  private def stagedDir(spark: SparkSession, kind: String, dir: String)(
+      build: String => Unit): String =
+    graft.FittedCache.get(spark, s"StreamOps.stagedDir:$kind", Seq(dir), Nil) {
       val work = java.nio.file.Files.createTempDirectory(s"graft_${kind}_").toString
       val staging = s"$work/staging"
       new java.io.File(staging).mkdirs()
       build(staging)
       staging
-    })
+    }
 
   /** Run the hourly rollup THROUGH the Structured Streaming engine
     * (AvailableNow trigger → memory sink, complete mode) and return
@@ -299,7 +299,7 @@ object StreamOps {
                                            windowMinutes: Int,
                                            drainSentinels: Boolean = true): DataFrame = {
     val key = if (drainSentinels) "souter" else "souter_nosent"
-    val staging = stagedDir(key, dir) { staging =>
+    val staging = stagedDir(spark, key, dir) { staging =>
       val ev = graft.sources.EventsLoader.events(spark, dir)
       stageVersionFile(ev, s"$staging/f0.parquet")
       if (drainSentinels) {
@@ -411,8 +411,8 @@ object StreamOps {
     *
     * (ProcessingTimeTimeout is avoided deliberately: under Spark
     * 4.1.2 its state operator sends the per-batch analyzer into a
-    * non-terminating resolution loop — reproduced in
-    * graft.tools.StreamDebug.)
+    * non-terminating resolution loop, reproduced with a MemoryStream
+    * source feeding this operator.)
     *
     * `events` needs columns (user_id: long, ts: timestamp,
     * value: double); the watermark bounds how late events may arrive.
@@ -499,7 +499,7 @@ object StreamOps {
   def runPerSourceQuotaAvailableNow(spark: SparkSession, dir: String,
                                     quota: Long): DataFrame = {
     import spark.implicits._
-    val staging = stagedDir("quota", dir) { staging =>
+    val staging = stagedDir(spark, "quota", dir) { staging =>
       val d = spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), (col("doc_id") % 2).as("version"), col("source"))
       stageVersionFile(d.filter(col("version") === 0), s"$staging/f0.parquet")
@@ -601,7 +601,7 @@ object StreamOps {
     * puts every source in both waves. */
   private def tokenWaveStream(spark: SparkSession,
       dir: String): (DataFrame, String) = {
-    val staging = stagedDir("tokwaves", dir) { staging =>
+    val staging = stagedDir(spark, "tokwaves", dir) { staging =>
       val d = spark.read.parquet(s"$dir/documents.parquet")
         .select(expr("(doc_id div 20) % 2").as("wave"), col("source"),
           explode(split(lower(col("text")), "\\s+")).as("tok"))
@@ -710,7 +710,7 @@ object StreamOps {
   def runStreamingQuantilesAvailableNow(spark: SparkSession,
       dir: String): DataFrame = {
     import spark.implicits._
-    val staging = stagedDir("quantwaves", dir) { st =>
+    val staging = stagedDir(spark, "quantwaves", dir) { st =>
       val d = graft.sources.EventsLoader.events(spark, dir)
         .select(expr("(event_id div 20) % 2").as("wave"), col("event_type"),
           round(col("value") * lit(100.0)).cast("long").as("cents"))
@@ -769,7 +769,7 @@ object StreamOps {
     val bits = Array.fill(numBits)(false)
     Sketch.bloomBuild(evalSh, "shingle", numBits, numHashes, salt)
       .collect().foreach(r => bits(r.getLong(0).toInt) = true)
-    val staging = stagedDir("decon", dir) { st =>
+    val staging = stagedDir(spark, "decon", dir) { st =>
       val d = docs.filter(col("doc_id") % 97 =!= 0)
         .select(expr("(doc_id div 20) % 2").as("wave"), col("doc_id"),
           col("text"))
@@ -814,7 +814,7 @@ object StreamOps {
   def runStreamingHtmlExtractAvailableNow(spark: SparkSession, dir: String,
       corpus: DataFrame, minChars: Int,
       maxLinkDensityMicros: Long): DataFrame = {
-    val staging = stagedDir("htmlx", dir) { st =>
+    val staging = stagedDir(spark, "htmlx", dir) { st =>
       val d = corpus.select(expr("(doc_id div 20) % 2").as("wave"),
         col("doc_id"), col("html"))
       stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
@@ -854,7 +854,7 @@ object StreamOps {
     // q159/q161/q162/q163 — the fitted weights, trained once per app)
     val weights = LinearModel.qualityCorpusTrajectory(spark, dir,
       lr, iterations).last.weights
-    val staging = stagedDir("qgate", dir) { st =>
+    val staging = stagedDir(spark, "qgate", dir) { st =>
       val d = docs.select(expr("(doc_id div 20) % 2").as("wave"),
         col("doc_id"), col("text"))
       stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
@@ -892,7 +892,7 @@ object StreamOps {
   def runStreamingDriftMonitorAvailableNow(spark: SparkSession,
       dir: String): DataFrame = {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val staging = stagedDir("drift", dir) { st =>
+    val staging = stagedDir(spark, "drift", dir) { st =>
       val d = docs.select(expr("(doc_id div 20) % 2").as("wave"),
         col("doc_id"), col("text"))
       stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
@@ -964,7 +964,7 @@ object StreamOps {
       .digest((plants.map { case (id, t) => s"$id\u0001$t" } ++
         Seq("\u0002") ++ patterns).mkString("\u0003").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
-    val staging = stagedDir(s"blgate_$fp", dir) { st =>
+    val staging = stagedDir(spark, s"blgate_$fp", dir) { st =>
       val d = docs.select(expr("(doc_id div 20) % 2").as("wave"),
         col("doc_id"), col("text"))
       stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
@@ -1007,7 +1007,7 @@ object StreamOps {
       .select(col("doc_id"), col("text"), col("lang"))
     val f = graft.operators.TextAnalysis.langIdCorpusModel(spark, dir)
     val (model, langs, w, p) = (f.model, f.langs, f.weights, f.priors)
-    val staging = stagedDir("langidgate", dir) { st =>
+    val staging = stagedDir(spark, "langidgate", dir) { st =>
       val d = docs.select(expr("(doc_id div 20) % 2").as("wave"),
         col("doc_id"), col("text"))
       stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
@@ -1087,7 +1087,7 @@ object StreamOps {
         docs, "source", budget, alpha)
       .select(col("source"), col("quota"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val staging = stagedDir("quotagate", dir) { st =>
+    val staging = stagedDir(spark, "quotagate", dir) { st =>
       val d = docs.select(expr("(doc_id div 20) % 2").as("wave"),
         col("doc_id"), col("source"))
       stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
@@ -1144,7 +1144,7 @@ object StreamOps {
       .select(col("doc_id"), col("text"))
     val idxSigs = graft.operators.Dedup.minhashSignatures(
       docs, "text", "doc_id").localCheckpoint(true)
-    val staging = stagedDir("neardupgate", dir) { st =>
+    val staging = stagedDir(spark, "neardupgate", dir) { st =>
       val d = neardupArrivals(docs)
         .select(expr("(doc_id div 20) % 2").as("wave"),
           col("doc_id"), col("text"))
@@ -1192,7 +1192,7 @@ object StreamOps {
       categories: Seq[(String, Seq[String])]): DataFrame = {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val staging = stagedDir("topicmon", dir) { st =>
+    val staging = stagedDir(spark, "topicmon", dir) { st =>
       val d = docs.select(expr("(doc_id div 20) % 2").as("wave"),
         col("doc_id"), col("text"))
       stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
@@ -1244,7 +1244,7 @@ object StreamOps {
     val model = Curation.dsirTrain(
       docs.filter(col("doc_id") % 7 === 0),
       docs.filter(col("doc_id") % 7 =!= 0), "text")
-    val staging = stagedDir("dsirgate", dir) { st =>
+    val staging = stagedDir(spark, "dsirgate", dir) { st =>
       val d = docs.select(expr("(doc_id div 20) % 2").as("wave"),
         col("doc_id"), col("text"))
       stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
@@ -1298,7 +1298,7 @@ object StreamOps {
       dir: String, k: Int = 20, salt: String = "wsr173"): DataFrame = {
     import graft.operators.Curation
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val staging = stagedDir("wsample", dir) { st =>
+    val staging = stagedDir(spark, "wsample", dir) { st =>
       val d = docs.select(expr("(doc_id div 20) % 2").as("wave"),
         col("doc_id"), col("n_chars"))
       stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
@@ -1402,7 +1402,7 @@ object StreamOps {
     * rest are edits (pass, modulo the deterministic FP rate). */
   def runStreamingBloomDedupAvailableNow(spark: SparkSession, dir: String,
       numBits: Int, numHashes: Int, salt: String, shards: Int): DataFrame = {
-    val staging = stagedDir("bloomdedup", dir) { st =>
+    val staging = stagedDir(spark, "bloomdedup", dir) { st =>
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       stageVersionFile(
         docs.select(lit(0L).as("wave"), col("doc_id"), col("text")),
@@ -1459,7 +1459,7 @@ object StreamOps {
     * micro-batch the query arrived in. */
   def runStreamingRetrievalAvailableNow(spark: SparkSession, dir: String,
       prefixDim: Int, c1: Int, c2: Int, k: Int): DataFrame = {
-    val staging = stagedDir("retrieval", dir) { st =>
+    val staging = stagedDir(spark, "retrieval", dir) { st =>
       val qs = spark.read.parquet(s"$dir/embeddings.parquet")
         .filter(col("vec_id") % 50 === 0)
       stageVersionFile(qs.filter(col("vec_id") % 100 === 0)
@@ -1642,7 +1642,7 @@ object StreamOps {
     * counted. */
   def runLateDataRollupAvailableNow(spark: SparkSession, dir: String,
                                     delayMinutes: Int = 10): DataFrame = {
-    val staging = stagedDir("latedata", dir) { staging =>
+    val staging = stagedDir(spark, "latedata", dir) { staging =>
       val tsUs = unix_micros(col("ts"))
       val ev = graft.sources.EventsLoader.events(spark, dir)
         .select(col("event_id"), col("ts"), col("event_type"))
@@ -1729,7 +1729,7 @@ object StreamOps {
   def runStreamingEwmaAvailableNow(spark: SparkSession, dir: String,
                                    alpha: Double): DataFrame = {
     import spark.implicits._
-    val staging = stagedDir("ewma", dir) { staging =>
+    val staging = stagedDir(spark, "ewma", dir) { staging =>
       val ev = graft.sources.EventsLoader.events(spark, dir)
         .filter(col("event_type") === "signup" || col("event_type") === "purchase")
         .select(col("user_id"), col("event_id"),
@@ -1862,7 +1862,7 @@ object StreamOps {
   def runStreamingHoltWintersAvailableNow(spark: SparkSession, dir: String,
       period: Int, alpha: Double, beta: Double, gamma: Double): DataFrame = {
     import spark.implicits._
-    val staging = stagedDir("holtwinters", dir) { staging =>
+    val staging = stagedDir(spark, "holtwinters", dir) { staging =>
       val hourly = graft.sources.EventsLoader.events(spark, dir)
         .groupBy(col("event_type"),
           date_trunc("hour", col("ts")).as("__h"))
@@ -1901,7 +1901,7 @@ object StreamOps {
   def runStreamingHoltAvailableNow(spark: SparkSession, dir: String,
                                    alpha: Double, beta: Double): DataFrame = {
     import spark.implicits._
-    val staging = stagedDir("holt", dir) { staging =>
+    val staging = stagedDir(spark, "holt", dir) { staging =>
       val ev = graft.sources.EventsLoader.events(spark, dir)
         .filter(col("event_type") === "signup" || col("event_type") === "purchase")
         .select(col("user_id"), col("event_id"),
@@ -1972,7 +1972,7 @@ object StreamOps {
     * two time-split micro-batches. */
   def runStreamingScd2AvailableNow(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val staging = stagedDir("scd2", dir) { staging =>
+    val staging = stagedDir(spark, "scd2", dir) { staging =>
       val ev = graft.sources.EventsLoader.events(spark, dir)
         .filter(col("event_type") === "signup" || col("event_type") === "purchase")
         .select(col("user_id"), col("event_id"),
@@ -2004,7 +2004,7 @@ object StreamOps {
   def runStreamingFunnelAvailableNow(spark: SparkSession, dir: String,
                                      stages: Seq[String]): DataFrame = {
     import spark.implicits._
-    val staging = stagedDir("funnel", dir) { staging =>
+    val staging = stagedDir(spark, "funnel", dir) { staging =>
       val ev = graft.sources.EventsLoader.events(spark, dir)
         .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("event_type"))
       val mid = ev.agg(((min(col("ts_us")) + max(col("ts_us"))) / 2).cast("long"))
@@ -2417,7 +2417,7 @@ object StreamOps {
     val coarse = graft.operators.Cluster.KmeansMicroModel(
       idx.assign, idx.centroids)
     val books = idx.books
-    val staging = stagedDir("pqidx", dir) { st =>
+    val staging = stagedDir(spark, "pqidx", dir) { st =>
       stageVersionFile(e.select(col("vec_id").as("doc_id"),
         lit(1L).as("version"), col("embedding")), s"$st/f0.parquet")
       stageVersionFile(e.filter(col("vec_id") % 7 === 0)
@@ -2449,7 +2449,7 @@ object StreamOps {
   def runStreamingGraphServeAvailableNow(spark: SparkSession, dir: String,
       degree: Int, rounds: Int, beam: Int, hops: Int,
       topK: Int): DataFrame = {
-    val staging = stagedDir("graphserve", dir) { st =>
+    val staging = stagedDir(spark, "graphserve", dir) { st =>
       val qs = spark.read.parquet(s"$dir/embeddings.parquet")
         .filter(col("vec_id") % 50 === 0)
       stageVersionFile(qs.filter(col("vec_id") % 100 === 0)
@@ -2514,7 +2514,7 @@ object StreamOps {
     val centroids = model.centroids.localCheckpoint(true)
     val refCells = model.assign.select(col("cell"))
       .withColumn("is_p", lit(true)).localCheckpoint(true)
-    val staging = stagedDir("semdrift", dir) { st =>
+    val staging = stagedDir(spark, "semdrift", dir) { st =>
       val s5 = e.filter(col("label") >= 5)
       stageVersionFile(s5.filter(col("vec_id") % 3 === 0)
         .select(lit(0L).as("wave"), col("vec_id"), col("embedding")),

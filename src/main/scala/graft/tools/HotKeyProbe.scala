@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.AsofJoin
@@ -13,10 +13,7 @@ import graft.operators.AsofJoin
   * off. Reads sf0.1 plus the ScaleProbe replica dir if present. */
 object HotKeyProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(32)
 
     def hotInputs(dir: String): (DataFrame, DataFrame) = {
       val ev = graft.sources.EventsLoader.events(spark, dir)

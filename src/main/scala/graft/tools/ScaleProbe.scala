@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.embed.HashingEmbedder
@@ -18,11 +18,7 @@ object ScaleProbe {
     val k = if (args.nonEmpty) args(0).toInt else 8
     val src = "/root/testdata/sf0.1"
     val dst = s"/tmp/graft_scale_x$k"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(32)
 
     def replicate(name: String, idSteps: (String, Long)*): DataFrame = {
       // events goes through the schema-adaptive loader (ts encoding
@@ -167,8 +163,9 @@ object ScaleProbe {
     // x16 (timestamps spread x16 keep right-side uniqueness) — 2.5M+
     // rows on one key at 8x. The plain union-merge serializes that
     // key through a single partition's sort; the bucketed form
-    // spreads it across (key, day-bucket) partitions. See also
-    // tools/HotKeyProbe for the focused comparison.
+    // spreads it across (key, day-bucket) partitions: 2.0x vs 0.9x
+    // wall scaling at 8x (PERF.md "Scale probe (round 8 final)",
+    // asof_hotkey rows; HotKeyProbe times the pair alone).
     def hotKeyAsof(dir: String): (DataFrame, DataFrame) = {
       val ev = graft.sources.EventsLoader.events(spark, dir)
       val amp = explode(sequence(lit(0L), lit(15L))).as("__rep")

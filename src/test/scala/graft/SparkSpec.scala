@@ -4,19 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole test run — Spark session
-  * startup dominates suite time otherwise. */
+  * startup dominates suite time otherwise. Built by [[GraftSession]],
+  * so the tests run the engine configuration Bench and Verify run. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(2)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

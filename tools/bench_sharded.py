@@ -39,7 +39,8 @@ CLASSPATH = os.path.join(ROOT, "target/scala-2.13/classes") + ":/opt/spark/jars/
 # the same JVM flags build.sbt's forked `run` uses — Spark 4 on JDK 17
 # needs the module opens when SparkSession is created outside
 # spark-submit (q44's MLlib Word2Vec path fails without them), and the
-# heap/TZ flags keep walls comparable with the sbt-launched board
+# heap flag keeps walls comparable with the sbt-launched board (session
+# settings such as UTC come from graft.GraftSession)
 JAVA_OPTS = sum((["--add-opens", p + "=ALL-UNNAMED"] for p in [
     "java.base/java.lang", "java.base/java.lang.invoke",
     "java.base/java.lang.reflect", "java.base/java.io",
@@ -49,7 +50,6 @@ JAVA_OPTS = sum((["--add-opens", p + "=ALL-UNNAMED"] for p in [
     "java.base/sun.nio.ch", "java.base/sun.nio.cs",
     "java.base/sun.security.action", "java.base/sun.util.calendar",
 ]), []) + [
-    "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
     "-Xmx" + os.environ.get("SPARK_DRIVER_MEM", "8g"),
 ]
 
