@@ -147,7 +147,7 @@ private[graft] trait EntryCurationQueries { this: SparkEntry.type =>
     * query. Layout knobs (partitioning, z-order) compose upstream;
     * pushdown on the ORC scan is pinned by SinksSpec. */
   private[graft] def q156(s: SparkSession, dir: String): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_orc_").toString
+    val work = WorkDirs.create("graft_orc_run_")
     graft.sources.Sinks.orc(t(s, dir, "documents"), s"$work/documents_orc")
     graft.sources.Sinks.readOrc(s, s"$work/documents_orc")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
@@ -164,7 +164,7 @@ private[graft] trait EntryCurationQueries { this: SparkEntry.type =>
     * merged read loses nothing and invents nothing. */
   private[graft] def q168(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val work = java.nio.file.Files.createTempDirectory("graft_evo_").toString
+    val work = WorkDirs.create("graft_evo_run_")
     docs.filter(col("doc_id") % 2 === 0)
       .select(col("doc_id"), col("text"))
       .write.mode("overwrite").parquet(s"$work/tbl")

@@ -205,20 +205,19 @@ private[graft] trait EntryStreamingQueries { this: SparkEntry.type =>
     * cross-batch dedup UNDER the engine; the oracle replays the chain
     * in batch over the same staged union. */
   private[graft] def q100(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
-    val planted = element_at(array(piiPlants.map(lit): _*),
-      (col("doc_id") % 7 + 1).cast("int"))
-    val v0 = d.select(col("doc_id"), lit(0L).as("version"), col("text"))
-    val v1 = d.filter(col("doc_id") % 4 === 0)
-      .select(col("doc_id"), lit(1L).as("version"),
-        concat(col("text"), planted).as("text"))
-      .unionByName(d.filter(col("doc_id") % 6 === 0 && col("doc_id") % 4 =!= 0)
-        .select(col("doc_id"), lit(1L).as("version"), col("text")))
-    val work = java.nio.file.Files.createTempDirectory("graft_singest_").toString
-    val staging = s"$work/staging"
-    new java.io.File(staging).mkdirs()
-    StreamOps.stageVersionFile(v0, s"$staging/v0.parquet")
-    StreamOps.stageVersionFile(v1, s"$staging/v1.parquet")
+    val staging = StreamOps.stagedDir(s, "singest", dir) { st =>
+      val d = t(s, dir, "documents")
+      val planted = element_at(array(piiPlants.map(lit): _*),
+        (col("doc_id") % 7 + 1).cast("int"))
+      val v0 = d.select(col("doc_id"), lit(0L).as("version"), col("text"))
+      val v1 = d.filter(col("doc_id") % 4 === 0)
+        .select(col("doc_id"), lit(1L).as("version"),
+          concat(col("text"), planted).as("text"))
+        .unionByName(d.filter(col("doc_id") % 6 === 0 && col("doc_id") % 4 =!= 0)
+          .select(col("doc_id"), lit(1L).as("version"), col("text")))
+      StreamOps.stageVersionFile(v0, s"$st/v0.parquet")
+      StreamOps.stageVersionFile(v1, s"$st/v1.parquet")
+    }
     val nRedactions = Scrub.piiPatterns
       .map { case (c, _, _) => col(s"n_$c") }
       .reduce(_ + _)
@@ -368,7 +367,7 @@ private[graft] trait EntryStreamingQueries { this: SparkEntry.type =>
     * (batch merge, incremental view, streaming merge), one answer. */
   private[graft] def q204(s: SparkSession, dir: String): DataFrame = {
     val (base, changes) = cdcFixture(s, dir)
-    val work = java.nio.file.Files.createTempDirectory("graft_cdc_").toString
+    val work = WorkDirs.create("graft_cdc_run_")
     val staging = s"$work/staging"
     new java.io.File(staging).mkdirs()
     base.select(col("o_orderkey"), lit(Long.MinValue).as("seq"),
@@ -389,7 +388,7 @@ private[graft] trait EntryStreamingQueries { this: SparkEntry.type =>
 
   private[graft] def q39(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val work = java.nio.file.Files.createTempDirectory("graft_upsert_").toString
+    val work = WorkDirs.create("graft_upsert_run_")
     val staging = s"$work/staging"
     new java.io.File(staging).mkdirs()
     StreamOps.stageVersionFile(
@@ -423,20 +422,18 @@ private[graft] trait EntryStreamingQueries { this: SparkEntry.type =>
     * unique within each staged file, so the kept set is exactly
     * first-arrival per digest whatever the in-batch row order. */
   private[graft] def q47(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
-    val w = Window.partitionBy(col("__h")).orderBy(col("doc_id"))
-    val v0 = d.withColumn("__h", md5(col("text")))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(col("doc_id"), lit(0L).as("version"), col("text"))
-    val v1 = v0.select(col("doc_id"), lit(1L).as("version"),
-      when(col("doc_id") % 3 === 0, col("text"))
-        .otherwise(concat(col("text"), lit(" v1"))).as("text"))
-    val work = java.nio.file.Files.createTempDirectory("graft_sdedup_").toString
-    val staging = s"$work/staging"
-    new java.io.File(staging).mkdirs()
-    StreamOps.stageVersionFile(v0, s"$staging/v0.parquet")
-    StreamOps.stageVersionFile(v1, s"$staging/v1.parquet")
+    val staging = StreamOps.stagedDir(s, "sdedup", dir) { st =>
+      val w = Window.partitionBy(col("__h")).orderBy(col("doc_id"))
+      val v0 = t(s, dir, "documents").withColumn("__h", md5(col("text")))
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1)
+        .select(col("doc_id"), lit(0L).as("version"), col("text"))
+      val v1 = v0.select(col("doc_id"), lit(1L).as("version"),
+        when(col("doc_id") % 3 === 0, col("text"))
+          .otherwise(concat(col("text"), lit(" v1"))).as("text"))
+      StreamOps.stageVersionFile(v0, s"$st/v0.parquet")
+      StreamOps.stageVersionFile(v1, s"$st/v1.parquet")
+    }
     StreamOps.runStreamingDedupAvailableNow(s, staging)
       .select(col("doc_id"), col("version"), col("text_md5"))
       .orderBy("doc_id", "version")

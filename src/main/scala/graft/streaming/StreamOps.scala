@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{FlatMapGroupsWithState, LogicalPlan}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Streaming operators over the `events` table (SURVEY.md §2.9).
@@ -26,57 +27,66 @@ object StreamOps {
     StructField("user_id", LongType), StructField("event_type", StringType),
     StructField("value", DoubleType), StructField("props", StringType)))
 
+  /** Schema of the staged (wave, doc_id, text) crawl waves. */
+  private val waveTextSchema = StructType(Seq(
+    StructField("wave", LongType), StructField("doc_id", LongType),
+    StructField("text", StringType)))
+
+  /** The staged files under `staging` as a stream on `spark`, one file
+    * per micro-batch. */
+  private def stagedFileStream(spark: SparkSession, schema: StructType,
+      staging: String): DataFrame =
+    spark.readStream
+      .schema(schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"$staging/*.parquet")
+
+  /** The staged crawl waves as a stream on `spark`. */
+  private def waveTextStream(spark: SparkSession, staging: String): DataFrame =
+    stagedFileStream(spark, waveTextSchema, staging)
+
   /** Streaming scan of the events table with `ts` normalized to a
     * proper timestamp (schema-adaptive — see EventsLoader). */
   def eventsStream(spark: SparkSession, dir: String): DataFrame =
     graft.sources.EventsLoader.eventsStream(spark, dir)
 
-  /** Scale-ADAPTIVE shuffle/state partition count for a bounded
-    * streaming replay (guide §2.2/§2.5: derive partitioning from the
-    * DATA, not from a constant tuned to either local mode or the
-    * cluster). Every stateful streaming operator instantiates ONE
-    * state store per shuffle partition per operator per micro-batch,
-    * and AQE cannot coalesce streaming shuffles — so a replay over
-    * megabytes at the session default (= core count on the bench
-    * harness) pays partitions × stores × batches store commits for
-    * state that fits in one partition. The round-15 scaling block
-    * measured the tier actively HURT by core count (q72 low/high
-    * ratio 0.29, q59 0.32 at 8-vs-32 cores).
+  /** Input bytes one state/shuffle partition of a bounded replay
+    * covers. */
+  private val bytesPerPartition = 16L << 20
+
+  /** State/shuffle partition count of a bounded streaming replay:
+    * `clamp(ceil(inputBytes / 16 MiB), floor, sessionN)`, where
+    * `sessionN` is the session's `spark.sql.shuffle.partitions`.
     *
-    * Derivation: ceil(inputBytes / spark.graft.stream.bytesPerPartition,
-    * default 16 MiB), clamped to [min(sessionN, minPartitions),
-    * session spark.sql.shuffle.partitions] — it only ever COALESCES
-    * below the configured parallelism when the input is small; at
-    * 100 TB the ceil saturates and the configured parallelism wins
-    * unchanged. The floor (`spark.graft.stream.minPartitions`,
-    * default 4) keeps group-parallel (flat)MapGroupsWithState folds
-    * from serializing onto one core: the r16 probe measured the
-    * state-commit tier flat below ~4 (q72 2.86 s @4 vs 2.73 @2)
-    * while the fold tier degrades sharply (q129 4.1 @4 → 9.9 @1,
-    * q112 2.1 @4 → 4.5 @1) — 4 is where both curves are near their
-    * minima. All knobs are plain Spark confs
-    * (`spark.graft.stream.shufflePartitions` pins an explicit
-    * count), so production sizes them per deployment; the partition
-    * count is a pure performance parameter here — every stateful
-    * operator on this board keys its state by a column hash, so
-    * results are partition-count-invariant (the oracle re-certifies
-    * that per round). */
-  private[graft] def streamShufflePartitions(spark: SparkSession,
-      inputBytes: Long): Int =
-    spark.conf.getOption("spark.graft.stream.shufflePartitions") match {
-      case Some(v) => v.toInt
-      case None =>
-        val per = spark.conf
-          .getOption("spark.graft.stream.bytesPerPartition")
-          .map(_.toLong).getOrElse(16L << 20)
-        val sessionN =
-          spark.conf.get("spark.sql.shuffle.partitions").toInt.max(1)
-        val floor = math.min(sessionN, spark.conf
-          .getOption("spark.graft.stream.minPartitions")
-          .map(_.toInt).getOrElse(4))
-        math.max(floor.toLong, math.min(sessionN.toLong,
-          (inputBytes + per - 1) / per)).toInt
-    }
+    * Every stateful operator opens one state store per shuffle
+    * partition per micro-batch, and each store writes its own delta,
+    * temp and checksum files when it commits; AQE cannot coalesce a
+    * streaming shuffle. A replay over megabytes at the session default
+    * (= core count) pays partitions × operators × batches commits for
+    * state that fits in one partition, so a small input runs on one.
+    * On a large input the ceil saturates and `sessionN` wins.
+    *
+    * `floor` is min(sessionN, 4) when `groupParallel` — the plan holds
+    * a per-group fold ([[hasGroupFold]]) or the sink runs per-batch
+    * work the plan does not show — and 1 otherwise. A fold's per-group
+    * compute is the replay's real work and one partition serializes
+    * it: at sf0.1 on local[4], q112's HLL fold took 2.86 s at 4
+    * partitions and 4.49 s at 1, while the commit-bound q29 went from
+    * 1.44 to 0.94 s and q72 from 3.32 to 2.41 s at 1. Results do not
+    * depend on the count: every stateful operator on the board keys
+    * its state by a column hash (StreamPartitionSpec replays at 1 and
+    * 7 partitions and compares the rows). */
+  private[graft] def streamShufflePartitions(sessionN: Int, inputBytes: Long,
+      groupParallel: Boolean): Int = {
+    val floor = if (groupParallel) math.min(sessionN, 4) else 1
+    val bySize = (inputBytes + bytesPerPartition - 1) / bytesPerPartition
+    math.max(floor.toLong, math.min(sessionN.toLong, bySize)).toInt
+  }
+
+  /** True when `plan` holds a per-group fold: map- and
+    * flatMapGroupsWithState both plan to `FlatMapGroupsWithState`. */
+  private[graft] def hasGroupFold(plan: LogicalPlan): Boolean =
+    plan.find(_.isInstanceOf[FlatMapGroupsWithState]).isDefined
 
   /** Total bytes under a path/glob (file, directory, or glob). */
   private[graft] def inputBytes(spark: SparkSession, glob: String): Long = {
@@ -90,33 +100,80 @@ object StreamOps {
     }.sum
   }
 
-  /** Run `body` (a streaming start + awaitTermination) with
-    * `spark.sql.shuffle.partitions` set to the adaptive count for
-    * `inputGlobs`, restoring the session value afterwards. The conf
-    * is read at stream START (fresh checkpoint per run), so the
-    * override covers exactly this replay; batch queries around it
-    * see the session default. */
-  private def withStreamShuffle[A](spark: SparkSession,
-      inputGlobs: Seq[String])(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    val n = streamShufflePartitions(spark,
-      inputGlobs.map(inputBytes(spark, _)).sum)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
+  /** Partition count that replays started on this thread use in place
+    * of the derived one, inside [[withStreamPartitions]]. */
+  private val forcedPartitions = new scala.util.DynamicVariable[Option[Int]](None)
+
+  /** Run `body` with every replay it starts on this thread at `n`
+    * state/shuffle partitions — the partition-invariance checks run
+    * whole queries at fixed counts through this, not through a conf. */
+  private[graft] def withStreamPartitions[A](n: Int)(body: => A): A =
+    forcedPartitions.withValue(Some(n))(body)
+
+  private val runCounter = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** Run one bounded AvailableNow replay to its end and return the
+    * finished query.
+    *
+    * The replay runs on a clone of `spark` ([[org.apache.spark.sql
+    * .graftbridge.isolatedSession]]): same context, catalog, temp
+    * views, functions and conf values, but its own SQLConf, so the
+    * partition count set on it never reaches the caller's session or
+    * a replay running beside it. The clone also gets the caller's
+    * streaming query listeners, which see its queries as the
+    * caller's. `stream` builds the streaming frame on that session and
+    * `sink` configures its writer. The count is [[streamShufflePartitions]]
+    * over the bytes under `inputs` and the frame's analyzed plan. */
+  private[graft] def replay(spark: SparkSession, inputs: Seq[String],
+      groupParallel: Boolean = false)(stream: SparkSession => DataFrame)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
+    val session = org.apache.spark.sql.graftbridge.isolatedSession(spark)
+    spark.streams.listListeners().foreach(session.streams.addListener)
+    val df = stream(session)
+    require(df.sparkSession eq session,
+      "the replay's stream must be built on the session it is given")
+    val n = forcedPartitions.value.getOrElse(streamShufflePartitions(
+      spark.conf.get("spark.sql.shuffle.partitions").toInt.max(1),
+      inputs.map(inputBytes(spark, _)).sum,
+      groupParallel || hasGroupFold(df.queryExecution.analyzed)))
+    session.conf.set("spark.sql.shuffle.partitions", n.toString)
+    val q = sink(df.writeStream).trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    q
   }
 
-  /** Start a configured stream writer under the adaptive partition
-    * count for its inputs and block until the replay drains. The
-    * override must span start() AND awaitTermination(): the
-    * micro-batch thread snapshots the conf after start() returns. */
-  private def startAndAwait[T](spark: SparkSession, inputGlobs: Seq[String],
-      w: org.apache.spark.sql.streaming.DataStreamWriter[T])
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    withStreamShuffle(spark, inputGlobs) {
-      val q = w.start()
-      q.awaitTermination()
-      q
+  /** [[replay]] into a memory sink: the sink's rows come back as a
+    * local frame on `spark`, and the sink's view is dropped, so the
+    * replay leaves nothing registered behind it. */
+  private[graft] def drain(spark: SparkSession, inputs: Seq[String],
+      mode: OutputMode = OutputMode.Append())(
+      stream: SparkSession => DataFrame): DataFrame =
+    drainQuery(spark, inputs, mode)(stream)._1
+
+  /** [[drain]], also returning the finished query for its progress. */
+  private def drainQuery(spark: SparkSession, inputs: Seq[String],
+      mode: OutputMode)(stream: SparkSession => DataFrame)
+      : (DataFrame, StreamingQuery) = {
+    val name = s"graft_stream_${runCounter.incrementAndGet()}"
+    val q = replay(spark, inputs)(stream)(
+      _.format("memory").queryName(name).outputMode(mode))
+    val session = q.sparkSession
+    try {
+      val sink = session.table(name)
+      (spark.createDataFrame(sink.collectAsList(), sink.schema), q)
+    } finally session.catalog.dropTempView(name)
+  }
+
+  /** [[replay]] into a foreachBatch sink that runs `f` on every
+    * micro-batch, checkpointing at `checkpoint` when given. `f`'s
+    * batch jobs are work the streaming plan does not show, so the
+    * replay keeps the fold floor. */
+  private def replayEachBatch(spark: SparkSession, inputs: Seq[String],
+      checkpoint: Option[String] = None)(stream: SparkSession => DataFrame)(
+      f: (DataFrame, Long) => Unit): Unit =
+    replay(spark, inputs, groupParallel = true)(stream) { w =>
+      val each = w.foreachBatch(f)
+      checkpoint.fold(each)(each.option("checkpointLocation", _))
     }
 
   /** Stream-static enrichment — the most common production streaming
@@ -138,19 +195,12 @@ object StreamOps {
   /** Drive [[streamStaticEnrich]] through the engine (AvailableNow →
     * memory sink, complete mode — the aggregate's cardinality is
     * |segments|×|event types|). */
-  def runStreamStaticEnrichAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val dim = spark.read.parquet(s"$dir/customer.parquet")
-      .select(col("c_custkey"), col("c_mktsegment"))
-    val name = s"graft_stream_static_${runCounter.incrementAndGet()}"
-    val query = streamStaticEnrich(eventsStream(spark, dir), dim)
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(s"$dir/events.parquet"), query)
-    spark.table(name)
-  }
+  def runStreamStaticEnrichAvailableNow(spark: SparkSession, dir: String): DataFrame =
+    drain(spark, Seq(s"$dir/events.parquet"), OutputMode.Complete()) { s =>
+      val dim = s.read.parquet(s"$dir/customer.parquet")
+        .select(col("c_custkey"), col("c_mktsegment"))
+      streamStaticEnrich(eventsStream(s, dir), dim)
+    }
 
   /** Tumbling 1-hour rollup — identical shape for batch and stream
     * inputs (same plan; streaming just executes it incrementally). */
@@ -162,8 +212,6 @@ object StreamOps {
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm").as("hour"),
         col("event_type"), col("n_events"), col("value_milli"))
-
-  private val runCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Run `body` with parquet `_SUCCESS` markers suppressed, restoring
     * the session-global hadoopConfiguration afterwards — the flag
@@ -186,10 +234,10 @@ object StreamOps {
     * (bench reps) reuse them from [[graft.FittedCache]] instead of
     * re-copying the table every run; the whole `dir` is the
     * fingerprinted input, so a rewritten table restages. */
-  private def stagedDir(spark: SparkSession, kind: String, dir: String)(
+  private[graft] def stagedDir(spark: SparkSession, kind: String, dir: String)(
       build: String => Unit): String =
     graft.FittedCache.get(spark, s"StreamOps.stagedDir:$kind", Seq(dir), Nil) {
-      val work = java.nio.file.Files.createTempDirectory(s"graft_${kind}_").toString
+      val work = graft.WorkDirs.create(s"graft_${kind}_")
       val staging = s"$work/staging"
       new java.io.File(staging).mkdirs()
       build(staging)
@@ -200,17 +248,9 @@ object StreamOps {
     * (AvailableNow trigger → memory sink, complete mode) and return
     * the final result table. Proves stream/batch plan parity: the
     * driver oracle-checks this output against the batch SQL. */
-  def runHourlyRollupAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_rollup_${runCounter.incrementAndGet()}"
-    val query = hourlyRollup(eventsStream(spark, dir))
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(s"$dir/events.parquet"), query)
-    spark.table(name)
-  }
+  def runHourlyRollupAvailableNow(spark: SparkSession, dir: String): DataFrame =
+    drain(spark, Seq(s"$dir/events.parquet"), OutputMode.Complete())(
+      s => hourlyRollup(eventsStream(s, dir)))
 
   /** Stream-stream interval join — click attribution: every purchase
     * pairs with ALL of that user's clicks in the trailing
@@ -253,21 +293,14 @@ object StreamOps {
     * (AvailableNow → memory sink, append mode — the only mode
     * stream-stream inner joins support). */
   def runClickAttributionAvailableNow(spark: SparkSession, dir: String,
-                                      windowMinutes: Int): DataFrame = {
-    val name = s"graft_stream_join_${runCounter.incrementAndGet()}"
-    val src = eventsStream(spark, dir)
-    val query = clickAttribution(
+                                      windowMinutes: Int): DataFrame =
+    drain(spark, Seq(s"$dir/events.parquet")) { s =>
+      val src = eventsStream(s, dir)
+      clickAttribution(
         src.filter(col("event_type") === "purchase"),
         src.filter(col("event_type") === "click"),
         windowMinutes)
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(s"$dir/events.parquet"), query)
-    spark.table(name)
-  }
+    }
 
   /** LEFT-OUTER stream-stream interval join — the hardest streaming
     * join surface: a purchase with NO click in its window may only
@@ -327,21 +360,15 @@ object StreamOps {
     // batch); inner matches never depended on the split. One fewer
     // full state-commit cycle (4 stores × partitions). Oracle
     // re-certified r16 at sf0.01/sf0.001.
-    val src = spark.readStream
-      .schema(stagedEventsSchema)
-      .parquet(s"$staging/*.parquet")
-    val name = s"graft_stream_ojoin_${runCounter.incrementAndGet()}"
-    val query = clickAttribution(
+    drain(spark, Seq(staging)) { s =>
+      val src = s.readStream
+        .schema(stagedEventsSchema)
+        .parquet(s"$staging/*.parquet")
+      clickAttribution(
         src.filter(col("event_type") === "purchase"),
         src.filter(col("event_type") === "click"),
         windowMinutes, joinType = "left_outer")
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(staging), query)
-    spark.table(name).filter(col("purchase_id") >= 0)
+    }.filter(col("purchase_id") >= 0)
   }
 
   /** Run the SLIDING rollup through the Structured Streaming engine
@@ -349,17 +376,9 @@ object StreamOps {
     * form's stream/batch plan parity the same way
     * [[runHourlyRollupAvailableNow]] does for tumbling windows
     * (StreamOpsSpec compares it to the batch result). */
-  def runSlidingRollupAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_sliding_${runCounter.incrementAndGet()}"
-    val query = slidingRollup(eventsStream(spark, dir))
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(s"$dir/events.parquet"), query)
-    spark.table(name)
-  }
+  def runSlidingRollupAvailableNow(spark: SparkSession, dir: String): DataFrame =
+    drain(spark, Seq(s"$dir/events.parquet"), OutputMode.Complete())(
+      s => slidingRollup(eventsStream(s, dir)))
 
   /** Sliding-window rollup (1 h window, 30 min slide): each event
     * lands in two windows. Same declarative form runs under
@@ -506,22 +525,13 @@ object StreamOps {
       stageVersionFile(d.filter(col("version") === 1), s"$staging/f1.parquet")
     }
 
-    val src = spark.readStream
-      .schema(StructType(Seq(
-        StructField("doc_id", LongType), StructField("version", LongType),
-        StructField("source", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staging/*.parquet")
-      .as[QuotaRow]
-    val name = s"graft_stream_quota_${runCounter.incrementAndGet()}"
-    val query = perSourceQuota(src, quota)
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(staging), query)
-    spark.table(name)
+    drain(spark, Seq(staging)) { s =>
+      val src = stagedFileStream(s, StructType(Seq(
+          StructField("doc_id", LongType), StructField("version", LongType),
+          StructField("source", StringType))), staging)
+        .as[QuotaRow]
+      perSourceQuota(src, quota).toDF()
+    }
   }
 
   // --- streaming cardinality (HLL registers as state) -------------------
@@ -599,9 +609,8 @@ object StreamOps {
     * (HLL, Count-Min): documents tokenized and split into two crawl
     * waves by `(doc_id div 20) % 2` — the round-robin doc_id layout
     * puts every source in both waves. */
-  private def tokenWaveStream(spark: SparkSession,
-      dir: String): (DataFrame, String) = {
-    val staging = stagedDir(spark, "tokwaves", dir) { staging =>
+  private def tokenWaves(spark: SparkSession, dir: String): String =
+    stagedDir(spark, "tokwaves", dir) { staging =>
       val d = spark.read.parquet(s"$dir/documents.parquet")
         .select(expr("(doc_id div 20) % 2").as("wave"), col("source"),
           explode(split(lower(col("text")), "\\s+")).as("tok"))
@@ -622,27 +631,20 @@ object StreamOps {
           "waves no longer satisfy the every-source-in-both-waves " +
           "contract the streaming-sketch oracles assume")
     }
-    (spark.readStream
-      .schema(StructType(Seq(
+
+  /** The staged token waves as a stream on `spark`, one file per
+    * micro-batch. */
+  private def tokenWaveStream(spark: SparkSession, staging: String): DataFrame =
+    stagedFileStream(spark, StructType(Seq(
         StructField("wave", LongType), StructField("source", StringType),
-        StructField("tok", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staging/*.parquet"), staging)
-  }
+        StructField("tok", StringType))), staging)
 
   def runStreamingHllAvailableNow(spark: SparkSession, dir: String,
                                   p: Int, salt: String): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_hll_${runCounter.incrementAndGet()}"
-    val (waves, staging) = tokenWaveStream(spark, dir)
-    val query = streamingHllDistinct(waves.as[HllTok], p, salt)
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(staging), query)
-    spark.table(name)
+    val staging = tokenWaves(spark, dir)
+    drain(spark, Seq(staging))(s =>
+      streamingHllDistinct(tokenWaveStream(s, staging).as[HllTok], p, salt).toDF())
   }
 
   case class QuantPoint(wave: Long, event_type: String, cents: Long)
@@ -728,21 +730,12 @@ object StreamOps {
           "waves no longer satisfy the every-key-in-both-waves " +
           "contract the cumulative-prefix oracle assumes")
     }
-    val stream = spark.readStream
-      .schema(StructType(Seq(
-        StructField("wave", LongType), StructField("event_type", StringType),
-        StructField("cents", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staging/*.parquet")
-    val name = s"graft_stream_quant_${runCounter.incrementAndGet()}"
-    val query = streamingLogBucketQuantiles(stream.as[QuantPoint])
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(staging), query)
-    spark.table(name)
+    drain(spark, Seq(staging)) { s =>
+      val stream = stagedFileStream(s, StructType(Seq(
+          StructField("wave", LongType), StructField("event_type", StringType),
+          StructField("cents", LongType))), staging)
+      streamingLogBucketQuantiles(stream.as[QuantPoint]).toDF()
+    }
   }
 
   // --- streaming decontamination gate -----------------------------------
@@ -776,28 +769,15 @@ object StreamOps {
       stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
       stageVersionFile(d.filter(col("wave") === 1), s"$st/f1.parquet")
     }
-    val stream = spark.readStream
-      .schema(StructType(Seq(
-        StructField("wave", LongType), StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staging/*.parquet")
-    val probed = stream
-      .withColumn("__sh", sh(col("text")))
-      .select(col("doc_id"), col("wave"),
-        size(col("__sh")).cast("long").as("n_sh"),
-        size(filter(col("__sh"), s =>
-          Sketch.bloomProbeColumn(bits, s, numBits, numHashes, salt)))
-          .cast("long").as("bloom_hits"))
-      .withColumn("flagged", col("bloom_hits") >= 1L)
-    val name = s"graft_stream_decon_${runCounter.incrementAndGet()}"
-    val query = probed.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(staging), query)
-    spark.table(name)
+    drain(spark, Seq(staging))(s =>
+      waveTextStream(s, staging)
+        .withColumn("__sh", sh(col("text")))
+        .select(col("doc_id"), col("wave"),
+          size(col("__sh")).cast("long").as("n_sh"),
+          size(filter(col("__sh"), x =>
+            Sketch.bloomProbeColumn(bits, x, numBits, numHashes, salt)))
+            .cast("long").as("bloom_hits"))
+        .withColumn("flagged", col("bloom_hits") >= 1L))
   }
 
   /** STREAMING HTML main-content extraction: raw crawl markup arrives
@@ -820,22 +800,13 @@ object StreamOps {
       stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
       stageVersionFile(d.filter(col("wave") === 1), s"$st/f1.parquet")
     }
-    val stream = spark.readStream
-      .schema(StructType(Seq(
-        StructField("wave", LongType), StructField("doc_id", LongType),
-        StructField("html", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staging/*.parquet")
-    val extracted = graft.operators.Extract.mainContent(
-      stream, "doc_id", "html", minChars, maxLinkDensityMicros)
-    val name = s"graft_stream_htmlx_${runCounter.incrementAndGet()}"
-    val query = extracted.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(staging), query)
-    spark.table(name)
+    drain(spark, Seq(staging)) { s =>
+      val stream = stagedFileStream(s, StructType(Seq(
+          StructField("wave", LongType), StructField("doc_id", LongType),
+          StructField("html", StringType))), staging)
+      graft.operators.Extract.mainContent(
+        stream, "doc_id", "html", minChars, maxLinkDensityMicros)
+    }
   }
 
   /** STREAMING quality gate: the q154/q155 classifier trained ONCE in
@@ -860,25 +831,13 @@ object StreamOps {
       stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
       stageVersionFile(d.filter(col("wave") === 1), s"$st/f1.parquet")
     }
-    val stream = spark.readStream
-      .schema(StructType(Seq(
-        StructField("wave", LongType), StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staging/*.parquet")
-    val scored = LinearModel.scoreLinear(
-        LinearModel.qualityTrainingFrame(stream, keepCols = Seq("wave")),
-        LinearModel.qualityFeatureCols, weights)
-      .select(col("doc_id"), col("wave"), col("p"), col("pred"),
-        col("y").cast("long").as("label"))
-    val name = s"graft_stream_qgate_${runCounter.incrementAndGet()}"
-    val query = scored.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(staging), query)
-    spark.table(name)
+    drain(spark, Seq(staging))(s =>
+      LinearModel.scoreLinear(
+          LinearModel.qualityTrainingFrame(waveTextStream(s, staging),
+            keepCols = Seq("wave")),
+          LinearModel.qualityFeatureCols, weights)
+        .select(col("doc_id"), col("wave"), col("p"), col("pred"),
+          col("y").cast("long").as("label")))
   }
 
   /** STREAMING data-quality drift monitor: per crawl wave, ONE
@@ -898,12 +857,6 @@ object StreamOps {
       stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
       stageVersionFile(d.filter(col("wave") === 1), s"$st/f1.parquet")
     }
-    val stream = spark.readStream
-      .schema(StructType(Seq(
-        StructField("wave", LongType), StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staging/*.parquet")
     val t = col("text")
     val tok = split(lower(t), "\\s+")
     val enStop = array(
@@ -915,8 +868,8 @@ object StreamOps {
       .cast("long")
     val buf = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.Row]
-    val query = stream.writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
+    replayEachBatch(spark, Seq(staging))(waveTextStream(_, staging)) {
+      (df: DataFrame, _: Long) =>
         // one wave per staged file → one counters row per micro-batch
         buf ++= df.groupBy(col("wave"))
           .agg(count(lit(1)).as("n_docs"),
@@ -926,9 +879,7 @@ object StreamOps {
               .otherwise(0L)).as("n_label_pos"))
           .collect()
         ()
-      }
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(staging), query)
+    }
     val schema = StructType(Seq(
       StructField("wave", LongType), StructField("n_docs", LongType),
       StructField("chars_sum", LongType), StructField("words_sum", LongType),
@@ -970,24 +921,11 @@ object StreamOps {
       stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
       stageVersionFile(d.filter(col("wave") === 1), s"$st/f1.parquet")
     }
-    val stream = spark.readStream
-      .schema(StructType(Seq(
-        StructField("wave", LongType), StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staging/*.parquet")
-    val gated = graft.operators.Blocklist.screen(
-        stream, "doc_id", "text", patterns, maxHits)
-      .select(col("doc_id"), col("wave"), col("total_hits"),
-        col("n_patterns_hit"), col("blocklist_keep"))
-    val name = s"graft_stream_blgate_${runCounter.incrementAndGet()}"
-    val query = gated.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(staging), query)
-    spark.table(name)
+    drain(spark, Seq(staging))(s =>
+      graft.operators.Blocklist.screen(
+          waveTextStream(s, staging), "doc_id", "text", patterns, maxHits)
+        .select(col("doc_id"), col("wave"), col("total_hits"),
+          col("n_patterns_hit"), col("blocklist_keep")))
   }
 
   /** STREAMING language-ID gate: the q263-trained multinomial-NB
@@ -1013,29 +951,16 @@ object StreamOps {
       stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
       stageVersionFile(d.filter(col("wave") === 1), s"$st/f1.parquet")
     }
-    val stream = spark.readStream
-      .schema(StructType(Seq(
-        StructField("wave", LongType), StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staging/*.parquet")
-    val gated = stream
-      .withColumn("__r", graft.operators.TextAnalysis.langIdScore(
-        col("text"), langs, w, p, model.buckets, model.n, model.maxChars,
-        model.salt))
-      .filter(col("__r").getField("n_grams") > 0)
-      .select(col("doc_id"), col("wave"),
-        col("__r").getField("trained_lang").as("trained_lang"),
-        col("__r").getField("trained_lang").isin(allowed: _*)
-          .as("lang_keep"))
-    val name = s"graft_stream_langid_${runCounter.incrementAndGet()}"
-    val query = gated.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(staging), query)
-    spark.table(name)
+    drain(spark, Seq(staging))(s =>
+      waveTextStream(s, staging)
+        .withColumn("__r", graft.operators.TextAnalysis.langIdScore(
+          col("text"), langs, w, p, model.buckets, model.n, model.maxChars,
+          model.salt))
+        .filter(col("__r").getField("n_grams") > 0)
+        .select(col("doc_id"), col("wave"),
+          col("__r").getField("trained_lang").as("trained_lang"),
+          col("__r").getField("trained_lang").isin(allowed: _*)
+            .as("lang_keep")))
   }
 
   case class QuotaDoc(wave: Long, doc_id: Long, source: String)
@@ -1093,21 +1018,12 @@ object StreamOps {
       stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
       stageVersionFile(d.filter(col("wave") === 1), s"$st/f1.parquet")
     }
-    val stream = spark.readStream
-      .schema(StructType(Seq(
-        StructField("wave", LongType), StructField("doc_id", LongType),
-        StructField("source", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staging/*.parquet")
-    val name = s"graft_stream_quota_${runCounter.incrementAndGet()}"
-    val query = streamingQuotaGate(stream.as[QuotaDoc], quotas)
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(staging), query)
-    spark.table(name)
+    drain(spark, Seq(staging)) { s =>
+      val stream = stagedFileStream(s, StructType(Seq(
+          StructField("wave", LongType), StructField("doc_id", LongType),
+          StructField("source", StringType))), staging)
+      streamingQuotaGate(stream.as[QuotaDoc], quotas).toDF()
+    }
   }
 
   /** The deterministic "arriving crawl" of the incremental near-dup
@@ -1151,31 +1067,20 @@ object StreamOps {
       stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
       stageVersionFile(d.filter(col("wave") === 1), s"$st/f1.parquet")
     }
-    val sch = StructType(Seq(
-      StructField("wave", LongType), StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_neardupgate_run_").toString
+    val work = graft.WorkDirs.create("graft_neardupgate_run_")
     val outDir = s"$work/out"
     withoutSuccessMarkers(spark) {
-      val src = spark.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$staging/*.parquet")
-      val query = src.writeStream
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val b = batch.toDF()
-          graft.operators.Dedup.neardupAdmission(idxSigs,
-              graft.operators.Dedup.minhashSignatures(
-                b.select(col("doc_id"), col("text")), "text", "doc_id"),
-              "doc_id", rejectAgree = rejectAgree)
-            .join(b.select(col("doc_id"), col("wave")), Seq("doc_id"))
-            .select(col("doc_id"), col("wave"), col("n_partners"),
-              col("best_match_id"), col("best_agree"), col("admitted"))
-            .write.mode("append").parquet(outDir)
-        }
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow())
-      startAndAwait(spark, Seq(staging), query)
+      replayEachBatch(spark, Seq(staging), Some(s"$work/ckpt"))(
+          waveTextStream(_, staging)) { (b: DataFrame, _: Long) =>
+        graft.operators.Dedup.neardupAdmission(idxSigs,
+            graft.operators.Dedup.minhashSignatures(
+              b.select(col("doc_id"), col("text")), "text", "doc_id"),
+            "doc_id", rejectAgree = rejectAgree)
+          .join(b.select(col("doc_id"), col("wave")), Seq("doc_id"))
+          .select(col("doc_id"), col("wave"), col("n_partners"),
+            col("best_match_id"), col("best_agree"), col("admitted"))
+          .write.mode("append").parquet(outDir)
+      }
     }
     spark.read.parquet(outDir)
   }
@@ -1198,25 +1103,17 @@ object StreamOps {
       stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
       stageVersionFile(d.filter(col("wave") === 1), s"$st/f1.parquet")
     }
-    val stream = spark.readStream
-      .schema(StructType(Seq(
-        StructField("wave", LongType), StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staging/*.parquet")
     val buf = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.Row]
-    val query = stream.writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
+    replayEachBatch(spark, Seq(staging))(waveTextStream(_, staging)) {
+      (df: DataFrame, _: Long) =>
         buf ++= graft.operators.Blocklist.categorize(df, "doc_id", "text",
             categories)
           .groupBy(col("wave"), col("topic"))
           .agg(count(lit(1)).as("n_docs"))
           .collect()
         ()
-      }
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(staging), query)
+    }
     val schema = StructType(Seq(
       StructField("wave", LongType), StructField("topic", StringType),
       StructField("n_docs", LongType)))
@@ -1250,16 +1147,10 @@ object StreamOps {
       stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
       stageVersionFile(d.filter(col("wave") === 1), s"$st/f1.parquet")
     }
-    val stream = spark.readStream
-      .schema(StructType(Seq(
-        StructField("wave", LongType), StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staging/*.parquet")
     val buf = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.Row]
-    val query = stream.writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
+    replayEachBatch(spark, Seq(staging))(waveTextStream(_, staging)) {
+      (df: DataFrame, _: Long) =>
         buf ++= Curation.dsirScore(df, "doc_id", "text", model)
           .join(df.select(col("doc_id"), col("wave")), Seq("doc_id"))
           .select(col("doc_id"), col("wave"), col("n_tokens"),
@@ -1267,9 +1158,7 @@ object StreamOps {
             (col("weight_micros") >= thresholdMicros).as("dsir_keep"))
           .collect()
         ()
-      }
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(staging), query)
+    }
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("wave", LongType),
       StructField("n_tokens", LongType),
@@ -1304,17 +1193,12 @@ object StreamOps {
       stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
       stageVersionFile(d.filter(col("wave") === 1), s"$st/f1.parquet")
     }
-    val stream = spark.readStream
-      .schema(StructType(Seq(
-        StructField("wave", LongType), StructField("doc_id", LongType),
-        StructField("n_chars", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staging/*.parquet")
     // running sample: (key_micro, doc_id, weight), capped at k
     val state = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
     val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    val query = stream.writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
+    replayEachBatch(spark, Seq(staging))(stagedFileStream(_, StructType(Seq(
+        StructField("wave", LongType), StructField("doc_id", LongType),
+        StructField("n_chars", LongType))), staging)) { (df: DataFrame, _: Long) =>
         val batchTop = df
           .select(col("wave"), col("doc_id"),
             col("n_chars").cast("double").as("weight"))
@@ -1334,9 +1218,7 @@ object StreamOps {
             org.apache.spark.sql.Row(wave, id, w, km) }
         }
         ()
-      }
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(staging), query)
+    }
     val schema = StructType(Seq(
       StructField("wave", LongType), StructField("doc_id", LongType),
       StructField("weight", DoubleType), StructField("key_micro", LongType)))
@@ -1419,27 +1301,16 @@ object StreamOps {
       // mtimes so wave 0 always folds first
       forceMtimeOrder(Seq(s"$st/f0.parquet", s"$st/f1.parquet"))
     }
-    val stream = spark.readStream
-      .schema(StructType(Seq(
-        StructField("wave", LongType), StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staging/*.parquet")
-      .withColumn("dig", md5(col("text")))
-      .withColumn("shard",
-        pmod(conv(substring(md5(concat(lit("shard:"), col("dig"))), 1, 14),
-          16, 10).cast("long"), lit(shards.toLong)))
-      .select("wave", "doc_id", "dig", "shard")
     import spark.implicits._
-    val name = s"graft_stream_bloomdedup_${runCounter.incrementAndGet()}"
-    val query = streamingBloomDedup(stream.as[BloomDoc], numBits, numHashes, salt)
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(staging), query)
-    spark.table(name)
+    drain(spark, Seq(staging)) { s =>
+      val stream = waveTextStream(s, staging)
+        .withColumn("dig", md5(col("text")))
+        .withColumn("shard",
+          pmod(conv(substring(md5(concat(lit("shard:"), col("dig"))), 1, 14),
+            16, 10).cast("long"), lit(shards.toLong)))
+        .select("wave", "doc_id", "dig", "shard")
+      streamingBloomDedup(stream.as[BloomDoc], numBits, numHashes, salt).toDF()
+    }
   }
 
   /** ONLINE RETRIEVAL SERVING: a stream of query vectors answered
@@ -1472,29 +1343,22 @@ object StreamOps {
     val corpus = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
     val sch = spark.read.parquet(s"$staging/w0.parquet").schema
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_retrieval_run_").toString
+    val work = graft.WorkDirs.create("graft_retrieval_run_")
     val outDir = s"$work/out"
     withoutSuccessMarkers(spark) {
-      val src = spark.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$staging/*.parquet")
-      val query = src.writeStream
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val queries = batch.toDF().select(col("wave"), col("vec_id"),
-            col("embedding").cast("array<double>").as("embedding"))
-          graft.operators.Ann.retrievalCascade(
-              queries.select("vec_id", "embedding"), corpus,
-              "vec_id", "vec_id", "embedding", prefixDim, c1, c2, k)
-            .join(queries.select(col("vec_id").as("q_id"), col("wave")),
-              Seq("q_id"))
-            .select(col("wave"), col("q_id"), col("rank"), col("c_id"),
-              col("score"), col("exact_rank"))
-            .write.mode("append").parquet(outDir)
-        }
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow())
-      startAndAwait(spark, Seq(staging), query)
+      replayEachBatch(spark, Seq(staging), Some(s"$work/ckpt"))(
+          stagedFileStream(_, sch, staging)) { (batch: DataFrame, _: Long) =>
+        val queries = batch.select(col("wave"), col("vec_id"),
+          col("embedding").cast("array<double>").as("embedding"))
+        graft.operators.Ann.retrievalCascade(
+            queries.select("vec_id", "embedding"), corpus,
+            "vec_id", "vec_id", "embedding", prefixDim, c1, c2, k)
+          .join(queries.select(col("vec_id").as("q_id"), col("wave")),
+            Seq("q_id"))
+          .select(col("wave"), col("q_id"), col("rank"), col("c_id"),
+            col("score"), col("exact_rank"))
+          .write.mode("append").parquet(outDir)
+      }
     }
     spark.read.parquet(outDir)
   }
@@ -1561,23 +1425,10 @@ object StreamOps {
                                        depth: Int, width: Int, salt: String,
                                        probes: Seq[String]): DataFrame = {
     import spark.implicits._
-    val name = s"graft_stream_cms_${runCounter.incrementAndGet()}"
-    // NOT coalesced: the CMS fold is COMPUTE-bound per source group
-    // (depth × width cell map touched per token), so shrinking the
-    // state partitions serializes the 20 groups — measured r16:
-    // 2.5 s at the session default vs 4.1 s at the adaptive floor.
-    // The one stateful op here is group-parallel work, not
-    // state-commit overhead; it keeps the session's parallelism.
-    val query = streamingCountMin(tokenWaveStream(spark, dir)._1.as[CmTok],
-        depth, width, salt, probes)
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.table(name)
+    val staging = tokenWaves(spark, dir)
+    drain(spark, Seq(staging))(s =>
+      streamingCountMin(tokenWaveStream(s, staging).as[CmTok],
+        depth, width, salt, probes).toDF())
   }
 
   // --- streaming funnel -------------------------------------------------
@@ -1658,28 +1509,18 @@ object StreamOps {
         s"$staging/f1.parquet")
       stageVersionFile(ev.filter(isLate), s"$staging/f2.parquet")
     }
-    val src = spark.readStream
-      .schema(StructType(Seq(
-        StructField("event_id", LongType), StructField("ts", TimestampType),
-        StructField("event_type", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staging/*.parquet")
-    val name = s"graft_stream_late_${runCounter.incrementAndGet()}"
-    val query = src
-      .withWatermark("ts", s"$delayMinutes minutes")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(unix_micros(col("window.start")).as("win_start_us"),
-        col("event_type"), col("n_events"))
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-    val finished = startAndAwait(spark, Seq(staging), query)
+    val (rows, finished) = drainQuery(spark, Seq(staging), OutputMode.Append())(s =>
+      stagedFileStream(s, StructType(Seq(
+          StructField("event_id", LongType), StructField("ts", TimestampType),
+          StructField("event_type", StringType))), staging)
+        .withWatermark("ts", s"$delayMinutes minutes")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"))
+        .select(unix_micros(col("window.start")).as("win_start_us"),
+          col("event_type"), col("n_events")))
     lastLateDropCount = finished.recentProgress
       .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
-    spark.table(name)
+    rows
   }
 
   /** numRowsDroppedByWatermark summed over the LAST
@@ -1739,23 +1580,16 @@ object StreamOps {
       stageVersionFile(ev.filter(col("ts_us") < mid), s"$staging/f0.parquet")
       stageVersionFile(ev.filter(col("ts_us") >= mid), s"$staging/f1.parquet")
     }
-    val src = spark.readStream
-      .schema(StructType(Seq(
-        StructField("user_id", LongType), StructField("event_id", LongType),
-        StructField("ts_us", LongType), StructField("x", DoubleType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staging/*.parquet")
-      .as[EwmaEvent]
-    val name = s"graft_stream_ewma_${runCounter.incrementAndGet()}"
-    val query = streamingEwma(src, alpha)
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(staging), query)
-    spark.table(name)
+    drain(spark, Seq(staging))(s =>
+      streamingEwma(seriesStream(s, staging).as[EwmaEvent], alpha).toDF())
   }
+
+  /** The staged (user_id, event_id, ts_us, x) series of the EWMA and
+    * Holt replays as a stream on `spark`, one file per micro-batch. */
+  private def seriesStream(spark: SparkSession, staging: String): DataFrame =
+    stagedFileStream(spark, StructType(Seq(
+        StructField("user_id", LongType), StructField("event_id", LongType),
+        StructField("ts_us", LongType), StructField("x", DoubleType))), staging)
 
   case class HoltEvent(user_id: Long, event_id: Long, ts_us: Long, x: Double)
   case class HoltOut(user_id: Long, event_id: Long, ts_us: Long,
@@ -1879,22 +1713,13 @@ object StreamOps {
       stageVersionFile(hourly.filter(col("rn") >= mid).orderBy("event_type", "rn"),
         s"$staging/f1.parquet")
     }
-    val src = spark.readStream
-      .schema(StructType(Seq(
-        StructField("event_type", StringType), StructField("rn", LongType),
-        StructField("x", DoubleType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staging/*.parquet")
-      .as[HwPoint]
-    val name = s"graft_stream_hw_${runCounter.incrementAndGet()}"
-    val query = streamingHoltWinters(src, period, alpha, beta, gamma)
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(staging), query)
-    spark.table(name)
+    drain(spark, Seq(staging)) { s =>
+      val src = stagedFileStream(s, StructType(Seq(
+          StructField("event_type", StringType), StructField("rn", LongType),
+          StructField("x", DoubleType))), staging)
+        .as[HwPoint]
+      streamingHoltWinters(src, period, alpha, beta, gamma).toDF()
+    }
   }
 
   /** Drive [[streamingHolt]] over the q101 staging shape. */
@@ -1911,22 +1736,8 @@ object StreamOps {
       stageVersionFile(ev.filter(col("ts_us") < mid), s"$staging/f0.parquet")
       stageVersionFile(ev.filter(col("ts_us") >= mid), s"$staging/f1.parquet")
     }
-    val src = spark.readStream
-      .schema(StructType(Seq(
-        StructField("user_id", LongType), StructField("event_id", LongType),
-        StructField("ts_us", LongType), StructField("x", DoubleType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staging/*.parquet")
-      .as[HoltEvent]
-    val name = s"graft_stream_holt_${runCounter.incrementAndGet()}"
-    val query = streamingHolt(src, alpha, beta)
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(staging), query)
-    spark.table(name)
+    drain(spark, Seq(staging))(s =>
+      streamingHolt(seriesStream(s, staging).as[HoltEvent], alpha, beta).toDF())
   }
 
   // --- streaming SCD-2 --------------------------------------------------
@@ -1983,22 +1794,13 @@ object StreamOps {
       stageVersionFile(ev.filter(col("ts_us") < mid), s"$staging/f0.parquet")
       stageVersionFile(ev.filter(col("ts_us") >= mid), s"$staging/f1.parquet")
     }
-    val src = spark.readStream
-      .schema(StructType(Seq(
-        StructField("user_id", LongType), StructField("event_id", LongType),
-        StructField("ts_us", LongType), StructField("value_milli", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staging/*.parquet")
-      .as[Scd2Event]
-    val name = s"graft_stream_scd2_${runCounter.incrementAndGet()}"
-    val query = streamingScd2(src)
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(staging), query)
-    spark.table(name)
+    drain(spark, Seq(staging)) { s =>
+      val src = stagedFileStream(s, StructType(Seq(
+          StructField("user_id", LongType), StructField("event_id", LongType),
+          StructField("ts_us", LongType), StructField("value_milli", LongType))), staging)
+        .as[Scd2Event]
+      streamingScd2(src).toDF()
+    }
   }
 
   def runStreamingFunnelAvailableNow(spark: SparkSession, dir: String,
@@ -2012,22 +1814,13 @@ object StreamOps {
       stageVersionFile(ev.filter(col("ts_us") < mid), s"$staging/f0.parquet")
       stageVersionFile(ev.filter(col("ts_us") >= mid), s"$staging/f1.parquet")
     }
-    val src = spark.readStream
-      .schema(StructType(Seq(
-        StructField("user_id", LongType), StructField("ts_us", LongType),
-        StructField("event_type", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staging/*.parquet")
-      .as[FunnelEvent]
-    val name = s"graft_stream_funnel_${runCounter.incrementAndGet()}"
-    val query = streamingFunnel(src, stages)
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(staging), query)
-    spark.table(name)
+    drain(spark, Seq(staging)) { s =>
+      val src = stagedFileStream(s, StructType(Seq(
+          StructField("user_id", LongType), StructField("ts_us", LongType),
+          StructField("event_type", StringType))), staging)
+        .as[FunnelEvent]
+      streamingFunnel(src, stages).toDF()
+    }
   }
 
   // --- streaming exact dedup --------------------------------------------
@@ -2055,24 +1848,12 @@ object StreamOps {
     * files — one micro-batch per file, event time derived from the
     * version — and return the emitted (first-arrival) rows. */
   def runStreamingDedupAvailableNow(spark: SparkSession, stagingDir: String,
-                                    watermarkDelay: String = "10 minutes"): DataFrame = {
-    val src = dedupSource(spark, stagingDir)
-    val name = s"graft_stream_dedup_${runCounter.incrementAndGet()}"
-    val query = streamingExactDedup(src, "text", "ts", watermarkDelay)
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(stagingDir), query)
-    spark.table(name)
-  }
+                                    watermarkDelay: String = "10 minutes"): DataFrame =
+    drain(spark, Seq(stagingDir))(s =>
+      streamingExactDedup(dedupSource(s, stagingDir), "text", "ts", watermarkDelay))
 
   private def dedupSource(spark: SparkSession, stagingDir: String): DataFrame =
-    spark.readStream
-      .schema(upsertSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$stagingDir/*.parquet")
+    stagedFileStream(spark, upsertSchema, stagingDir)
       // synthetic event time: one minute per version, so every batch's
       // watermark trails all retained state during the drain
       .withColumn("ts",
@@ -2086,20 +1867,12 @@ object StreamOps {
     * posture. Batch twin = the same chain over the staged union,
     * which is what the q100 oracle states. */
   def runStreamIngestAvailableNow(spark: SparkSession, stagingDir: String,
-                                  minChars: Int): DataFrame = {
-    val src = dedupSource(spark, stagingDir)
-    val scrubbed = graft.operators.Scrub.scrubPii(src, "text")
-      .filter(length(col("scrubbed")) >= minChars)
-    val name = s"graft_stream_ingest_${runCounter.incrementAndGet()}"
-    val query = streamingExactDedup(scrubbed, "scrubbed", "ts")
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(stagingDir), query)
-    spark.table(name)
-  }
+                                  minChars: Int): DataFrame =
+    drain(spark, Seq(stagingDir)) { s =>
+      val scrubbed = graft.operators.Scrub.scrubPii(dedupSource(s, stagingDir), "text")
+        .filter(length(col("scrubbed")) >= minChars)
+      streamingExactDedup(scrubbed, "scrubbed", "ts")
+    }
 
   /** RESUMABLE dedup drain — a durable (parquet) sink plus a FIXED
     * checkpoint, so a later invocation with the same locations
@@ -2113,15 +1886,12 @@ object StreamOps {
   def runStreamingDedupResumable(spark: SparkSession, stagingDir: String,
                                  outDir: String, checkpoint: String,
                                  watermarkDelay: String = "10 minutes"): DataFrame = {
-    val query = streamingExactDedup(
-        dedupSource(spark, stagingDir), "text", "ts", watermarkDelay)
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(stagingDir), query)
+    replay(spark, Seq(stagingDir))(s => streamingExactDedup(
+        dedupSource(s, stagingDir), "text", "ts", watermarkDelay))(
+      _.format("parquet")
+        .option("path", outDir)
+        .option("checkpointLocation", checkpoint)
+        .outputMode(OutputMode.Append()))
     spark.read.parquet(outDir)
   }
 
@@ -2278,26 +2048,19 @@ object StreamOps {
                      checkpointDir: String,
                      embedder: graft.embed.Embedder,
                      codebook: DataFrame): Unit = withoutSuccessMarkers(spark) {
-    val src = spark.readStream
-      .schema(upsertSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$stagingDir/*.parquet")
-    val query = src.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val assigned = graft.operators.Ann.ivfAssign(
-            embedder.embed(batch.toDF(), "text", "embedding"),
-            "doc_id", "embedding", codebook, "cell", "cvec")
-          .withColumn("cell", col("cell").cast("long"))
-          .cache() // the touched-cell collect below reuses the embed+assign
-        try {
-          val touched = assigned.select(col("cell")).distinct()
-            .collect().map(_.getLong(0)).toSeq
-          mergeTouchedPartitions(assigned, targetDir, "cell", touched)
-        } finally assigned.unpersist()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(stagingDir), query)
+    replayEachBatch(spark, Seq(stagingDir), Some(checkpointDir))(
+        stagedFileStream(_, upsertSchema, stagingDir)) { (batch: DataFrame, _: Long) =>
+      val assigned = graft.operators.Ann.ivfAssign(
+          embedder.embed(batch, "text", "embedding"),
+          "doc_id", "embedding", codebook, "cell", "cvec")
+        .withColumn("cell", col("cell").cast("long"))
+        .cache() // the touched-cell collect below reuses the embed+assign
+      try {
+        val touched = assigned.select(col("cell")).distinct()
+          .collect().map(_.getLong(0)).toSeq
+        mergeTouchedPartitions(assigned, targetDir, "cell", touched)
+      } finally assigned.unpersist()
+    }
   }
 
   /** Offline compaction for [[ivfIndexUpsert]]'s staleness contract:
@@ -2351,13 +2114,9 @@ object StreamOps {
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("version", LongType),
       StructField("embedding", ArrayType(DoubleType))))
-    val src = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$stagingDir/*.parquet")
-    val query = src.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val assigned = batch.toDF()
+    replayEachBatch(spark, Seq(stagingDir), Some(checkpointDir))(
+        stagedFileStream(_, schema, stagingDir)) { (batch: DataFrame, _: Long) =>
+        val assigned = batch
           .withColumn("__vq", graft.operators.Cluster.microQuantize(
             col("embedding")))
           .crossJoin(broadcast(coarseCentroids.select(
@@ -2384,10 +2143,7 @@ object StreamOps {
             .collect().map(_.getLong(0)).toSeq
           mergeTouchedPartitions(inc, targetDir, "cell", touched)
         } finally inc.unpersist()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(stagingDir), query)
+    }
   }
 
   /** The q279 replay: [[ivfPqIndexUpsert]] driven end-to-end through
@@ -2425,8 +2181,7 @@ object StreamOps {
           reverse(col("embedding")).as("embedding")),
         s"$st/f1.parquet")
     }
-    val work = java.nio.file.Files.createTempDirectory(
-      s"graft_pqidx_${runCounter.incrementAndGet()}_").toString
+    val work = graft.WorkDirs.create("graft_pqidx_run_")
     ivfPqIndexUpsert(spark, staging, s"$work/target", s"$work/ckpt",
       coarse.centroids, books, m = 8, subDim = 8)
     spark.read.parquet(s"$work/target")
@@ -2464,28 +2219,20 @@ object StreamOps {
     val graph = graft.operators.Ann.nnDescentGraphMemo(
       spark, dir, degree, rounds)
     val sch = spark.read.parquet(s"$staging/w0.parquet").schema
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_graphserve_run_").toString
+    val work = graft.WorkDirs.create("graft_graphserve_run_")
     val outDir = s"$work/out"
     withoutSuccessMarkers(spark) {
-      val src = spark.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$staging/*.parquet")
-      val query = src.writeStream
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val b = batch.toDF()
-          graft.operators.Ann.graphBeamTopK(graph,
-              b.select(col("vec_id"), col("embedding")), corpus,
-              "vec_id", "embedding", beam, hops, topK)
-            .join(b.select(col("vec_id").as("q_id"), col("wave")),
-              Seq("q_id"))
-            .select(col("wave"), col("q_id"), col("rank"),
-              col("vec_id"), col("dist2"), col("exact_rank"))
-            .write.mode("append").parquet(outDir)
-        }
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow())
-      startAndAwait(spark, Seq(staging), query)
+      replayEachBatch(spark, Seq(staging), Some(s"$work/ckpt"))(
+          stagedFileStream(_, sch, staging)) { (b: DataFrame, _: Long) =>
+        graft.operators.Ann.graphBeamTopK(graph,
+            b.select(col("vec_id"), col("embedding")), corpus,
+            "vec_id", "embedding", beam, hops, topK)
+          .join(b.select(col("vec_id").as("q_id"), col("wave")),
+            Seq("q_id"))
+          .select(col("wave"), col("q_id"), col("rank"),
+            col("vec_id"), col("dist2"), col("exact_rank"))
+          .write.mode("append").parquet(outDir)
+      }
     }
     spark.read.parquet(outDir)
   }
@@ -2524,31 +2271,23 @@ object StreamOps {
         s"$st/w1.parquet")
     }
     val sch = spark.read.parquet(s"$staging/w0.parquet").schema
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_semdrift_run_").toString
+    val work = graft.WorkDirs.create("graft_semdrift_run_")
     val outDir = s"$work/out"
     withoutSuccessMarkers(spark) {
-      val src = spark.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$staging/*.parquet")
-      val query = src.writeStream
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val b = batch.toDF()
-          val wave = b.select(col("wave")).head().getLong(0)
-          val asg = graft.operators.Cluster.assignToCentroids(
-            b, "vec_id", "embedding", centroids)
-          val uni = refCells.unionByName(
-            asg.select(col("cell")).withColumn("is_p", lit(false)))
-          graft.operators.Cluster.divergenceFrontier(uni, "cell",
-              "is_p", grid)
-            .withColumn("wave", lit(wave))
-            .select(col("wave"), col("lambda_num"), col("kl_p_nano"),
-              col("kl_q_nano"))
-            .write.mode("append").parquet(outDir)
-        }
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(Trigger.AvailableNow())
-      startAndAwait(spark, Seq(staging), query)
+      replayEachBatch(spark, Seq(staging), Some(s"$work/ckpt"))(
+          stagedFileStream(_, sch, staging)) { (b: DataFrame, _: Long) =>
+        val wave = b.select(col("wave")).head().getLong(0)
+        val asg = graft.operators.Cluster.assignToCentroids(
+          b, "vec_id", "embedding", centroids)
+        val uni = refCells.unionByName(
+          asg.select(col("cell")).withColumn("is_p", lit(false)))
+        graft.operators.Cluster.divergenceFrontier(uni, "cell",
+            "is_p", grid)
+          .withColumn("wave", lit(wave))
+          .select(col("wave"), col("lambda_num"), col("kl_p_nano"),
+            col("kl_q_nano"))
+          .write.mode("append").parquet(outDir)
+      }
     }
     spark.read.parquet(outDir)
   }
@@ -2573,17 +2312,9 @@ object StreamOps {
       StructField("op", StringType),
       StructField("o_orderstatus", StringType),
       StructField("price_cents", LongType)))
-    val src = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$stagingDir/*.parquet")
-    val query = src.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        cdcMergeBatch(batch.toDF(), targetDir, nBuckets)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(stagingDir), query)
+    replayEachBatch(spark, Seq(stagingDir), Some(checkpointDir))(
+        stagedFileStream(_, schema, stagingDir))(
+      (batch: DataFrame, _: Long) => cdcMergeBatch(batch, targetDir, nBuckets))
   }
 
   private def cdcMergeBatch(batch: DataFrame, targetDir: String,
@@ -2630,16 +2361,8 @@ object StreamOps {
                       nBuckets: Int = 16): Unit = withoutSuccessMarkers(spark) {
     // every micro-batch runs one delta write; the _SUCCESS marker is
     // one extra FS create+rename per batch and nothing reads it here
-    val src = spark.readStream
-      .schema(upsertSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$stagingDir/*.parquet")
-    val query = src.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        upsertBatch(batch.toDF(), targetDir, embedder, nBuckets)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-    startAndAwait(spark, Seq(stagingDir), query)
+    replayEachBatch(spark, Seq(stagingDir), Some(checkpointDir))(
+        stagedFileStream(_, upsertSchema, stagingDir))(
+      (batch: DataFrame, _: Long) => upsertBatch(batch, targetDir, embedder, nBuckets))
   }
 }

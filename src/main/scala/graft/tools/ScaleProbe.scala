@@ -229,18 +229,12 @@ object ScaleProbe {
     }
     time("multimodal_decode_s2") { dir => multimodalCount(dir, 2) }
     time("multimodal_decode_s8") { dir => multimodalCount(dir, 8) }
-    val probeRun = new java.util.concurrent.atomic.AtomicInteger(0)
     time("sessionize_stream") { dir =>
       // the stateful flatMapGroupsWithState path end-to-end through
       // the streaming engine (state keyed per user; watermark-bounded)
-      val name = s"probe_sessions_${probeRun.incrementAndGet()}"
-      val q = StreamOps.sessionizeStream(StreamOps.eventsStream(spark, dir), 30)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name).count()
+      StreamOps.drain(spark, Seq(s"$dir/events.parquet"))(s =>
+        StreamOps.sessionizeStream(StreamOps.eventsStream(s, dir), 30).toDF())
+        .count()
     }
     // Fuzzy join, length blocking vs PassJoin segment blocking, SAME
     // inputs and d=2: length classes admit every same-length pair, so
@@ -326,7 +320,7 @@ object ScaleProbe {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), lit(0L).as("version"), col("text"))
       val nBuckets = if (dir == src) 16 else 16 * k
-      val work = java.nio.file.Files.createTempDirectory("graft_probe_upsert_").toString
+      val work = graft.WorkDirs.create("graft_probe_upsert_run_")
       new java.io.File(s"$work/staging").mkdirs()
       val emb = new HashingEmbedder(dim = 64)
       // build the target (untimed portion dominates; timing covers the

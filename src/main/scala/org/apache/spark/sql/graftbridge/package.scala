@@ -27,4 +27,12 @@ package object graftbridge {
   def dataFrameOf(spark: SparkSession,
                   plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A session with `spark`'s context, catalog, temp views, functions,
+    * execution listeners and conf values but a SQLConf of its own
+    * (`cloneSession` is `private[sql]`): a conf set on it reaches no
+    * other session. `newSession` would also own its conf, but starts
+    * from the context's conf and drops the runtime settings. */
+  def isolatedSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
 }
