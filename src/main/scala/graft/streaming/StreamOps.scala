@@ -112,22 +112,59 @@ object StreamOps {
 
   private val runCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** The write option a foreachBatch body's write takes when its frame
+    * was built on the caller's session, whose conf does not carry the
+    * replay's [[replaySettings]]. */
+  private val noSuccessMarker =
+    "mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false"
+
+  /** Settings of every replay's session, each a fixed cost the
+    * replay would otherwise pay per call:
+    *  - `spark.sql.streaming.checkpointFileManagerClass` =
+    *    [[LocalCheckpointFileManager]]: offset, commit and state store
+    *    files are written without forking a process per file; the
+    *    files, `.crc` sidecars and modes are the ones Spark's default
+    *    manager writes. A traced `stream_replay` pass spent 0.44 s in
+    *    state commits with the default manager and 0.04 s with this.
+    *  - `spark.sql.artifact.isolation.enabled` = false: with isolation
+    *    every new session (the replay's clone and the clone Spark makes
+    *    per run) gets its own executor class loader, and the codegen
+    *    cache, keyed by loader and code, misses on every replay; q29
+    *    recompiled 12 classes and q72 26 on each warm call. The engine
+    *    adds no session artifacts, so isolation separates nothing.
+    *  - `mapreduce.fileoutputcommitter.marksuccessfuljobs` = false:
+    *    foreachBatch bodies write one output per micro-batch and nothing
+    *    reads their `_SUCCESS` markers. The key reaches every write's
+    *    Hadoop conf from the session, so the context's shared
+    *    `hadoopConfiguration` is never written. */
+  private val replaySettings = Seq(
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[LocalCheckpointFileManager].getName,
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    noSuccessMarker)
+
   /** Run one bounded AvailableNow replay to its end and return the
     * finished query.
     *
     * The replay runs on a clone of `spark` ([[org.apache.spark.sql
     * .graftbridge.isolatedSession]]): same context, catalog, temp
     * views, functions and conf values, but its own SQLConf, so the
-    * partition count set on it never reaches the caller's session or
-    * a replay running beside it. The clone also gets the caller's
-    * streaming query listeners, which see its queries as the
-    * caller's. `stream` builds the streaming frame on that session and
-    * `sink` configures its writer. The count is [[streamShufflePartitions]]
-    * over the bytes under `inputs` and the frame's analyzed plan. */
+    * partition count and [[replaySettings]] set on it never reach the
+    * caller's session or a replay running beside it. The clone also
+    * gets the caller's streaming query listeners, which see its
+    * queries as the caller's. `stream` builds the streaming frame on
+    * that session and `sink` configures its writer. The count is
+    * [[streamShufflePartitions]] over the bytes under `inputs` and the
+    * frame's analyzed plan. When the replay ends its state stores are
+    * unloaded ([[org.apache.spark.sql.graftbridge.unloadStateStores]]);
+    * left loaded, each provider holds its state rows until Spark's next
+    * maintenance pass (every 60 s), and replays run back to back pile
+    * them up on the heap. */
   private[graft] def replay(spark: SparkSession, inputs: Seq[String],
       groupParallel: Boolean = false)(stream: SparkSession => DataFrame)(
       sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
     val session = org.apache.spark.sql.graftbridge.isolatedSession(spark)
+    replaySettings.foreach { case (k, v) => session.conf.set(k, v) }
     spark.streams.listListeners().foreach(session.streams.addListener)
     val df = stream(session)
     require(df.sparkSession eq session,
@@ -138,7 +175,8 @@ object StreamOps {
       groupParallel || hasGroupFold(df.queryExecution.analyzed)))
     session.conf.set("spark.sql.shuffle.partitions", n.toString)
     val q = sink(df.writeStream).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    try q.awaitTermination()
+    finally if (!q.isActive) org.apache.spark.sql.graftbridge.unloadStateStores(q)
     q
   }
 
@@ -212,22 +250,6 @@ object StreamOps {
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm").as("hour"),
         col("event_type"), col("n_events"), col("value_milli"))
-
-  /** Run `body` with parquet `_SUCCESS` markers suppressed, restoring
-    * the session-global hadoopConfiguration afterwards — the flag
-    * must not leak into later writes in the JVM (build memos and
-    * external completion checks gate on the markers). */
-  private def withoutSuccessMarkers[A](spark: SparkSession)(body: => A): A = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
-    val prev = Option(hconf.get(key))
-    hconf.set(key, "false")
-    try body
-    finally prev match {
-      case Some(v) => hconf.set(key, v)
-      case None    => hconf.unset(key)
-    }
-  }
 
   /** Staged inputs for a (kind, source dir): the staged files are a
     * pure function of the tables under `dir`, so repeated drains
@@ -1069,18 +1091,16 @@ object StreamOps {
     }
     val work = graft.WorkDirs.create("graft_neardupgate_run_")
     val outDir = s"$work/out"
-    withoutSuccessMarkers(spark) {
-      replayEachBatch(spark, Seq(staging), Some(s"$work/ckpt"))(
-          waveTextStream(_, staging)) { (b: DataFrame, _: Long) =>
-        graft.operators.Dedup.neardupAdmission(idxSigs,
-            graft.operators.Dedup.minhashSignatures(
-              b.select(col("doc_id"), col("text")), "text", "doc_id"),
-            "doc_id", rejectAgree = rejectAgree)
-          .join(b.select(col("doc_id"), col("wave")), Seq("doc_id"))
-          .select(col("doc_id"), col("wave"), col("n_partners"),
-            col("best_match_id"), col("best_agree"), col("admitted"))
-          .write.mode("append").parquet(outDir)
-      }
+    replayEachBatch(spark, Seq(staging), Some(s"$work/ckpt"))(
+        waveTextStream(_, staging)) { (b: DataFrame, _: Long) =>
+      graft.operators.Dedup.neardupAdmission(idxSigs,
+          graft.operators.Dedup.minhashSignatures(
+            b.select(col("doc_id"), col("text")), "text", "doc_id"),
+          "doc_id", rejectAgree = rejectAgree)
+        .join(b.select(col("doc_id"), col("wave")), Seq("doc_id"))
+        .select(col("doc_id"), col("wave"), col("n_partners"),
+          col("best_match_id"), col("best_agree"), col("admitted"))
+        .write.mode("append").parquet(outDir)
     }
     spark.read.parquet(outDir)
   }
@@ -1345,20 +1365,18 @@ object StreamOps {
     val sch = spark.read.parquet(s"$staging/w0.parquet").schema
     val work = graft.WorkDirs.create("graft_retrieval_run_")
     val outDir = s"$work/out"
-    withoutSuccessMarkers(spark) {
-      replayEachBatch(spark, Seq(staging), Some(s"$work/ckpt"))(
-          stagedFileStream(_, sch, staging)) { (batch: DataFrame, _: Long) =>
-        val queries = batch.select(col("wave"), col("vec_id"),
-          col("embedding").cast("array<double>").as("embedding"))
-        graft.operators.Ann.retrievalCascade(
-            queries.select("vec_id", "embedding"), corpus,
-            "vec_id", "vec_id", "embedding", prefixDim, c1, c2, k)
-          .join(queries.select(col("vec_id").as("q_id"), col("wave")),
-            Seq("q_id"))
-          .select(col("wave"), col("q_id"), col("rank"), col("c_id"),
-            col("score"), col("exact_rank"))
-          .write.mode("append").parquet(outDir)
-      }
+    replayEachBatch(spark, Seq(staging), Some(s"$work/ckpt"))(
+        stagedFileStream(_, sch, staging)) { (batch: DataFrame, _: Long) =>
+      val queries = batch.select(col("wave"), col("vec_id"),
+        col("embedding").cast("array<double>").as("embedding"))
+      graft.operators.Ann.retrievalCascade(
+          queries.select("vec_id", "embedding"), corpus,
+          "vec_id", "vec_id", "embedding", prefixDim, c1, c2, k)
+        .join(queries.select(col("vec_id").as("q_id"), col("wave")),
+          Seq("q_id"))
+        .select(col("wave"), col("q_id"), col("rank"), col("c_id"),
+          col("score"), col("exact_rank"))
+        .write.mode("append").parquet(outDir)
     }
     spark.read.parquet(outDir)
   }
@@ -1852,7 +1870,7 @@ object StreamOps {
     drain(spark, Seq(stagingDir))(s =>
       streamingExactDedup(dedupSource(s, stagingDir), "text", "ts", watermarkDelay))
 
-  private def dedupSource(spark: SparkSession, stagingDir: String): DataFrame =
+  private[graft] def dedupSource(spark: SparkSession, stagingDir: String): DataFrame =
     stagedFileStream(spark, upsertSchema, stagingDir)
       // synthetic event time: one minute per version, so every batch's
       // watermark trails all retained state during the drain
@@ -2047,7 +2065,7 @@ object StreamOps {
   def ivfIndexUpsert(spark: SparkSession, stagingDir: String, targetDir: String,
                      checkpointDir: String,
                      embedder: graft.embed.Embedder,
-                     codebook: DataFrame): Unit = withoutSuccessMarkers(spark) {
+                     codebook: DataFrame): Unit = {
     replayEachBatch(spark, Seq(stagingDir), Some(checkpointDir))(
         stagedFileStream(_, upsertSchema, stagingDir)) { (batch: DataFrame, _: Long) =>
       val assigned = graft.operators.Ann.ivfAssign(
@@ -2110,7 +2128,7 @@ object StreamOps {
   def ivfPqIndexUpsert(spark: SparkSession, stagingDir: String,
       targetDir: String, checkpointDir: String,
       coarseCentroids: DataFrame, codebooks: DataFrame,
-      m: Int, subDim: Int): Unit = withoutSuccessMarkers(spark) {
+      m: Int, subDim: Int): Unit = {
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("version", LongType),
       StructField("embedding", ArrayType(DoubleType))))
@@ -2221,18 +2239,16 @@ object StreamOps {
     val sch = spark.read.parquet(s"$staging/w0.parquet").schema
     val work = graft.WorkDirs.create("graft_graphserve_run_")
     val outDir = s"$work/out"
-    withoutSuccessMarkers(spark) {
-      replayEachBatch(spark, Seq(staging), Some(s"$work/ckpt"))(
-          stagedFileStream(_, sch, staging)) { (b: DataFrame, _: Long) =>
-        graft.operators.Ann.graphBeamTopK(graph,
-            b.select(col("vec_id"), col("embedding")), corpus,
-            "vec_id", "embedding", beam, hops, topK)
-          .join(b.select(col("vec_id").as("q_id"), col("wave")),
-            Seq("q_id"))
-          .select(col("wave"), col("q_id"), col("rank"),
-            col("vec_id"), col("dist2"), col("exact_rank"))
-          .write.mode("append").parquet(outDir)
-      }
+    replayEachBatch(spark, Seq(staging), Some(s"$work/ckpt"))(
+        stagedFileStream(_, sch, staging)) { (b: DataFrame, _: Long) =>
+      graft.operators.Ann.graphBeamTopK(graph,
+          b.select(col("vec_id"), col("embedding")), corpus,
+          "vec_id", "embedding", beam, hops, topK)
+        .join(b.select(col("vec_id").as("q_id"), col("wave")),
+          Seq("q_id"))
+        .select(col("wave"), col("q_id"), col("rank"),
+          col("vec_id"), col("dist2"), col("exact_rank"))
+        .write.mode("append").parquet(outDir)
     }
     spark.read.parquet(outDir)
   }
@@ -2273,21 +2289,19 @@ object StreamOps {
     val sch = spark.read.parquet(s"$staging/w0.parquet").schema
     val work = graft.WorkDirs.create("graft_semdrift_run_")
     val outDir = s"$work/out"
-    withoutSuccessMarkers(spark) {
-      replayEachBatch(spark, Seq(staging), Some(s"$work/ckpt"))(
-          stagedFileStream(_, sch, staging)) { (b: DataFrame, _: Long) =>
-        val wave = b.select(col("wave")).head().getLong(0)
-        val asg = graft.operators.Cluster.assignToCentroids(
-          b, "vec_id", "embedding", centroids)
-        val uni = refCells.unionByName(
-          asg.select(col("cell")).withColumn("is_p", lit(false)))
-        graft.operators.Cluster.divergenceFrontier(uni, "cell",
-            "is_p", grid)
-          .withColumn("wave", lit(wave))
-          .select(col("wave"), col("lambda_num"), col("kl_p_nano"),
-            col("kl_q_nano"))
-          .write.mode("append").parquet(outDir)
-      }
+    replayEachBatch(spark, Seq(staging), Some(s"$work/ckpt"))(
+        stagedFileStream(_, sch, staging)) { (b: DataFrame, _: Long) =>
+      val wave = b.select(col("wave")).head().getLong(0)
+      val asg = graft.operators.Cluster.assignToCentroids(
+        b, "vec_id", "embedding", centroids)
+      val uni = refCells.unionByName(
+        asg.select(col("cell")).withColumn("is_p", lit(false)))
+      graft.operators.Cluster.divergenceFrontier(uni, "cell",
+          "is_p", grid)
+        .withColumn("wave", lit(wave))
+        .select(col("wave"), col("lambda_num"), col("kl_p_nano"),
+          col("kl_q_nano"))
+        .write.mode("append").options(Map(noSuccessMarker)).parquet(outDir)
     }
     spark.read.parquet(outDir)
   }
@@ -2306,7 +2320,7 @@ object StreamOps {
     * [[embeddingUpsert]] partition-swap discipline. */
   def cdcStreamMerge(spark: SparkSession, stagingDir: String,
       targetDir: String, checkpointDir: String,
-      nBuckets: Int = 16): Unit = withoutSuccessMarkers(spark) {
+      nBuckets: Int = 16): Unit = {
     val schema = StructType(Seq(
       StructField("o_orderkey", LongType), StructField("seq", LongType),
       StructField("op", StringType),
@@ -2358,9 +2372,7 @@ object StreamOps {
   def embeddingUpsert(spark: SparkSession, stagingDir: String, targetDir: String,
                       checkpointDir: String,
                       embedder: graft.embed.Embedder,
-                      nBuckets: Int = 16): Unit = withoutSuccessMarkers(spark) {
-    // every micro-batch runs one delta write; the _SUCCESS marker is
-    // one extra FS create+rename per batch and nothing reads it here
+                      nBuckets: Int = 16): Unit = {
     replayEachBatch(spark, Seq(stagingDir), Some(checkpointDir))(
         stagedFileStream(_, upsertSchema, stagingDir))(
       (batch: DataFrame, _: Long) => upsertBatch(batch, targetDir, embedder, nBuckets))

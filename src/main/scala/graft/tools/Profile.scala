@@ -1,5 +1,7 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 import graft.{GraftSession, SparkEntry}
 
 /** Per-query profile: for each named SparkEntry query (all of them
@@ -7,7 +9,9 @@ import graft.{GraftSession, SparkEntry}
   * further calls, each consumed with `count()` as Bench does. The
   * first call carries JVM/JIT warmup, codegen compilation, footer
   * reads and any fitted-state build the query owns; the best-of-N is
-  * Bench's steady-state estimator.
+  * Bench's steady-state estimator. `compiles` is the number of classes
+  * codegen compiled during the best call (`CodegenMetrics`); above 0,
+  * the query's warm calls still miss the codegen cache.
   *
   * Reads Bench's settings: SPARK_GRAFT_SF_DIR (default sf0.1),
   * SPARK_GRAFT_CPUS (default 4) and SPARK_GRAFT_REPS (default 5).
@@ -21,16 +25,19 @@ object Profile {
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val spark = GraftSession.local(cpus)
-    def time(name: String): (Double, Long) = {
+    /** (seconds, rows, classes compiled) of one call. */
+    def time(name: String): (Double, Long, Long) = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       val n = SparkEntry.queries(name)(spark, sfDir).count()
-      ((System.nanoTime() - t0) / 1e9, n)
+      ((System.nanoTime() - t0) / 1e9, n,
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
     }
-    println(f"${"query"}%-32s ${"first"}%8s ${"best"}%8s ${"rows"}%10s")
+    println(f"${"query"}%-32s ${"first"}%8s ${"best"}%8s ${"rows"}%10s ${"compiles"}%8s")
     val rows = names.map { name =>
-      val (first, n) = time(name)
-      val best = (1 to reps).map(_ => time(name)._1).min
-      println(f"$name%-32s $first%8.3f $best%8.3f $n%10d")
+      val (first, n, _) = time(name)
+      val (best, _, compiles) = (1 to reps).map(_ => time(name)).minBy(_._1)
+      println(f"$name%-32s $first%8.3f $best%8.3f $n%10d $compiles%8d")
       (first, best)
     }
     println(f"${"TOTAL"}%-32s ${rows.map(_._1).sum}%8.3f ${rows.map(_._2).sum}%8.3f")

@@ -1,6 +1,10 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreWriter
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.execution.streaming.state.{StateStore, StateStoreProviderId}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Column ⇄ Expression bridge.
   *
@@ -35,4 +39,27 @@ package object graftbridge {
     * from the context's conf and drops the runtime settings. */
   def isolatedSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** The state store providers a streaming query's last micro-batch
+    * opened: one per partition and store name of every stateful
+    * operator in its executed plan. Empty before the first batch. */
+  def stateStoreProviderIds(q: StreamingQuery): Seq[StateStoreProviderId] = {
+    val exec = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+    Option(exec.lastExecution).toSeq.flatMap { ie =>
+      ie.executedPlan.collect { case w: StateStoreWriter => w }.flatMap { w =>
+        val info = w.getStateInfo
+        for (p <- 0 until info.numPartitions; name <- w.stateStoreNames)
+          yield StateStoreProviderId(info, p, name)
+      }
+    }
+  }
+
+  /** Closes a finished query's state store providers and drops them
+    * from this JVM's loaded set (`StateStore.loadedProviders`), where
+    * they and their cached state rows would otherwise stay until the
+    * next maintenance pass. In local mode the driver's JVM is the
+    * executor's. Provider ids carry the query's run id, so a restart
+    * from the same checkpoint loads its state from the files. */
+  def unloadStateStores(q: StreamingQuery): Unit =
+    stateStoreProviderIds(q).foreach(StateStore.removeFromLoadedProvidersAndClose(_))
 }
