@@ -657,6 +657,48 @@ private[graft] trait EntrySimilarityQueries { this: SparkEntry.type =>
         maxHamming = 8)
       .orderBy("id_a", "id_b")
 
+  /** The catalog's cut: the flagship variants match against parts 1–300. */
+  private val flagshipMaxPartkey = 300
+
+  /** The label and catalog sides every embedder variant of the
+    * flagship report (q24, q44, q148) starts from: distinct
+    * (source, raw_input_label) rows with their cleaned label, and the
+    * `p_partkey <= 300` catalog with its `all_text`.
+    *
+    * The labels are range-partitioned on (source, raw_input_label)
+    * before their `distinct()`. That one range exchange serves both the
+    * distinct and the report's final `orderBy` on the same keys, so the
+    * report's plan has no exchange above the matcher projection, and
+    * the range partitioner samples the scanned labels, not the matched
+    * report. */
+  private def flagshipInputs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val labels = t(s, dir, "documents").select(col("source"),
+        concat_ws(" ", slice(split(col("text"), " "), 1, 3)).as("raw_input_label"))
+      .repartitionByRange(col("source"), col("raw_input_label"))
+      .distinct()
+      .withColumn("cleaned_input_label", GraftUdfs.cleanLabel(col("raw_input_label")))
+    val catalog = t(s, dir, "part").filter(col("p_partkey") <= flagshipMaxPartkey)
+      .select(col("p_partkey").cast("string").as("CT_ID"),
+        col("p_name").as("CT_NAME"), col("p_brand").as("CT_LABEL"),
+        col("p_type").as("definition"))
+      .withColumn("all_text",
+        coalesce(concat(col("CT_NAME"), lit(" "), col("CT_LABEL"), lit(" "),
+          col("definition")), col("CT_NAME")))
+    (labels, catalog)
+  }
+
+  /** The flagship report over `flagshipInputs` with `embedder` on both
+    * sides: cosine top-2 against the prepared catalog, exact overwrite,
+    * ordered by (source, raw_input_label). */
+  private def flagshipReport(labels: DataFrame, catalog: DataFrame,
+      embedder: graft.embed.Embedder): DataFrame = {
+    val queries = embedder.embed(labels, "cleaned_input_label", "qvec")
+    val ref = Matcher.prepareReference(
+      embedder.embed(catalog, "all_text", "embedding"), "embedding", Seq("CT_ID"))
+    Matcher.mapLabels(queries, ref, k = 2)
+      .orderBy("source", "raw_input_label")
+  }
+
   /** The flagship label-mapping report on the LIVE hashing embedder
     * (`main.py:171-221`), hash-proven end to end: the md5-kernel
     * [[graft.embed.Md5HashingEmbedder]] makes every stage — NLP clean,
@@ -665,25 +707,8 @@ private[graft] trait EntrySimilarityQueries { this: SparkEntry.type =>
     * checks the full live path (the murmur3 [[HashingEmbedder]] keeps
     * MLlib-HashingTF parity, pinned by EmbedderSpec). */
   private[graft] def qFlagship(s: SparkSession, dir: String): DataFrame = {
-    val embedder = new graft.embed.Md5HashingEmbedder(dim = 64)
-    val docs = t(s, dir, "documents")
-    val raw = docs.select(col("source"),
-        concat_ws(" ", slice(split(col("text"), " "), 1, 3)).as("raw_input_label"))
-      .distinct()
-      .withColumn("cleaned_input_label", GraftUdfs.cleanLabel(col("raw_input_label")))
-    val queries = embedder.embed(raw, "cleaned_input_label", "qvec")
-
-    val part = t(s, dir, "part").filter(col("p_partkey") <= 300)
-      .select(col("p_partkey").cast("string").as("CT_ID"),
-        col("p_name").as("CT_NAME"), col("p_brand").as("CT_LABEL"),
-        col("p_type").as("definition"))
-      .withColumn("all_text",
-        coalesce(concat(col("CT_NAME"), lit(" "), col("CT_LABEL"), lit(" "),
-          col("definition")), col("CT_NAME")))
-    val ref = Matcher.prepareReference(
-      embedder.embed(part, "all_text", "embedding"), "embedding", Seq("CT_ID"))
-    Matcher.mapLabels(queries, ref, k = 2)
-      .orderBy("source", "raw_input_label")
+    val (labels, catalog) = flagshipInputs(s, dir)
+    flagshipReport(labels, catalog, new graft.embed.Md5HashingEmbedder(dim = 64))
   }
 
   /** The flagship report with the TRAINED embedder: Word2Vec (MLlib)
@@ -698,28 +723,23 @@ private[graft] trait EntrySimilarityQueries { this: SparkEntry.type =>
     * mean → normalize → cosine top-2 → pivot → exact-overwrite end
     * to end (the q41-43 generated-oracle pattern applied to the
     * trained model; training itself stays un-oracled — its output
-    * does not). */
+    * does not).
+    *
+    * The quantized vocabulary is fitted once per version of
+    * `part.parquet` and held in [[FittedCache]] under every fit
+    * argument; later calls reuse it and only collect the reference. */
   private[graft] def q44(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val raw = docs.select(col("source"),
-        concat_ws(" ", slice(split(col("text"), " "), 1, 3)).as("raw_input_label"))
-      .distinct()
-      .withColumn("cleaned_input_label", GraftUdfs.cleanLabel(col("raw_input_label")))
-    val part = t(s, dir, "part").filter(col("p_partkey") <= 300)
-      .select(col("p_partkey").cast("string").as("CT_ID"),
-        col("p_name").as("CT_NAME"), col("p_brand").as("CT_LABEL"),
-        col("p_type").as("definition"))
-      .withColumn("all_text",
-        coalesce(concat(col("CT_NAME"), lit(" "), col("CT_LABEL"), lit(" "),
-          col("definition")), col("CT_NAME")))
-    val w2v = graft.embed.Word2VecEmbedder.fit(part, "all_text", dim = 64)
-    val embedder = graft.embed.QuantizedVocabEmbedder.fromWord2Vec(w2v, dim = 64)
+    val (labels, catalog) = flagshipInputs(s, dir)
+    val (dim, seed, minCount, maxIter, maxTextLength, scaleBits) = (64, 42L, 1, 1, 150, 20)
+    val embedder = FittedCache.get(s, "EntrySimilarityQueries.q44Vocab",
+        Seq(s"$dir/part.parquet"),
+        Seq(dim, seed, minCount, maxIter, maxTextLength, scaleBits, flagshipMaxPartkey)) {
+      val w2v = graft.embed.Word2VecEmbedder.fit(catalog, "all_text", dim, seed,
+        minCount, maxIter, maxTextLength)
+      graft.embed.QuantizedVocabEmbedder.fromWord2Vec(w2v, dim, scaleBits, maxTextLength)
+    }
     q44VocabHolder.set(embedder.vocab)
-    val queries = embedder.embed(raw, "cleaned_input_label", "qvec")
-    val ref = Matcher.prepareReference(
-      embedder.embed(part, "all_text", "embedding"), "embedding", Seq("CT_ID"))
-    Matcher.mapLabels(queries, ref, k = 2)
-      .orderBy("source", "raw_input_label")
+    flagshipReport(labels, catalog, embedder)
   }
 
   /** The flagship with the DISTRIBUTED-trained embedder
@@ -734,25 +754,9 @@ private[graft] trait EntrySimilarityQueries { this: SparkEntry.type =>
     * exported, both engines fit from raw data and must agree on
     * every trained weight to hash-match. */
   private[graft] def q148(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val raw = docs.select(col("source"),
-        concat_ws(" ", slice(split(col("text"), " "), 1, 3)).as("raw_input_label"))
-      .distinct()
-      .withColumn("cleaned_input_label", GraftUdfs.cleanLabel(col("raw_input_label")))
-    val part = t(s, dir, "part").filter(col("p_partkey") <= 300)
-      .select(col("p_partkey").cast("string").as("CT_ID"),
-        col("p_name").as("CT_NAME"), col("p_brand").as("CT_LABEL"),
-        col("p_type").as("definition"))
-      .withColumn("all_text",
-        coalesce(concat(col("CT_NAME"), lit(" "), col("CT_LABEL"), lit(" "),
-          col("definition")), col("CT_NAME")))
-    val embedder = graft.embed.CoocPowerEmbedder.fit(part, "CT_ID", "all_text",
-      dim = 64, rounds = 2)
-    val queries = embedder.embed(raw, "cleaned_input_label", "qvec")
-    val ref = Matcher.prepareReference(
-      embedder.embed(part, "all_text", "embedding"), "embedding", Seq("CT_ID"))
-    Matcher.mapLabels(queries, ref, k = 2)
-      .orderBy("source", "raw_input_label")
+    val (labels, catalog) = flagshipInputs(s, dir)
+    flagshipReport(labels, catalog, graft.embed.CoocPowerEmbedder.fit(
+      catalog, "CT_ID", "all_text", dim = 64, rounds = 2))
   }
 
   /** The flagship matcher (q24's fused cosine → top-k → rank pivot →
@@ -763,14 +767,17 @@ private[graft] trait EntrySimilarityQueries { this: SparkEntry.type =>
     * headline query from spec-pinned to oracle-proven (rows + schema +
     * hash). 'planted' queries ARE reference CT_NAMEs, exercising the
     * exact-overwrite path (score 1.0, slots 2..k nulled) in the hash
-    * check too. */
+    * check too. Like the other variants, the labels' one range
+    * exchange serves both their distinct and the final orderBy. */
   private[graft] def q40(s: SparkSession, dir: String): DataFrame = {
-    val part300 = t(s, dir, "part").filter(col("p_partkey") <= 300)
+    val part300 = t(s, dir, "part").filter(col("p_partkey") <= flagshipMaxPartkey)
     val fromDocs = t(s, dir, "documents").select(col("source"),
       concat_ws(" ", slice(split(col("text"), " "), 1, 3)).as("raw_input_label"))
     val planted = part300.filter(col("p_partkey") % 50 === 0)
       .select(lit("planted").as("source"), col("p_name").as("raw_input_label"))
-    val queries = fromDocs.union(planted).distinct()
+    val queries = fromDocs.union(planted)
+      .repartitionByRange(col("source"), col("raw_input_label"))
+      .distinct()
       .withColumn("cleaned_input_label", lower(col("raw_input_label")))
       .withColumn("qvec", frozenVec(col("cleaned_input_label")))
 

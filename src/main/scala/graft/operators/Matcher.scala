@@ -80,6 +80,9 @@ object Matcher {
     // into the row_number projection itself (raise_error past the
     // limit) — zero extra Spark jobs per invocation, and the failure
     // fires on the first action: mapLabels' collect of the reference.
+    // The coalesce(1) puts the reference in one partition before the
+    // global window, so the window needs no SinglePartition exchange
+    // and the collect runs as one job of one stage.
     val w = Window.orderBy(orderCols.map(col): _*)
     val rid = row_number().over(w).cast("long")
     val guarded = when(rid <= lit(maxCatalogRows.toLong), rid)
@@ -87,7 +90,7 @@ object Matcher {
         s"prepareReference: reference table exceeds $maxCatalogRows rows — it must be " +
           "catalog-sized (it is broadcast and globally row-numbered). For corpus-scale " +
           "similarity use Ann.bruteForceTopK/ivfTopK instead.")).cast("long"))
-    ref
+    ref.coalesce(1)
       .withColumn("ref_row_id", guarded)
       .withColumn("CT_NAME_CLEANED", cleaner(col("CT_NAME")))
       .withColumn("ref_norm", VectorOps.l2Norm(col(vecCol)))

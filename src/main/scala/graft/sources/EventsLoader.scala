@@ -36,14 +36,12 @@ object EventsLoader {
     // footer fails schema inference outright (with it, nanos arrive
     // as LongType; micros/NTZ are unaffected)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // the probe is one driver-side footer read, held in FittedCache so
-    // bench reps don't repeat it; an in-place testdata regeneration
-    // (which has already flipped the ts encoding once) changes the
-    // file's fingerprint and re-probes instead of driving the stale
-    // decode branch
-    graft.FittedCache.get(spark, "EventsLoader.schema", Seq(path), Nil) {
-      spark.read.parquet(path).schema
-    }
+    // the probe is held per fingerprint (ProbedParquet), so bench reps
+    // don't repeat it; an in-place testdata regeneration (which has
+    // already flipped the ts encoding once) changes the file's
+    // fingerprint and re-probes instead of driving the stale decode
+    // branch
+    ProbedParquet.schema(spark, path)
   }
 
   /** True when the file stores `ts` as raw nanos-since-epoch longs
@@ -66,7 +64,7 @@ object EventsLoader {
     val path = s"$dir/events.parquet"
     val raw = rawSchema(spark, path)
     if (tsIsLegacyNanos(raw))
-      spark.read.parquet(path)
+      spark.read.schema(raw).parquet(path)
         .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
     else
       spark.read.schema(tsAsTimestampSchema(raw)).parquet(path)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{FlatMapGroupsWithState, LogicalPlan}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types._
 
 /** Streaming operators over the `events` table (SURVEY.md §2.9).
@@ -159,13 +159,25 @@ object StreamOps {
     * unloaded ([[org.apache.spark.sql.graftbridge.unloadStateStores]]);
     * left loaded, each provider holds its state rows until Spark's next
     * maintenance pass (every 60 s), and replays run back to back pile
-    * them up on the heap. */
+    * them up on the heap. Once the caller's listeners have heard the
+    * termination, the streaming listener buses of the clone and of the
+    * stream's own session are removed from the context
+    * ([[org.apache.spark.sql.graftbridge.removeStreamListenerBuses]]);
+    * left there, every replay would add two for the context's life. */
   private[graft] def replay(spark: SparkSession, inputs: Seq[String],
       groupParallel: Boolean = false)(stream: SparkSession => DataFrame)(
       sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
     val session = org.apache.spark.sql.graftbridge.isolatedSession(spark)
     replaySettings.foreach { case (k, v) => session.conf.set(k, v) }
     spark.streams.listListeners().foreach(session.streams.addListener)
+    // added after the caller's listeners, so it hears the termination last
+    val terminated = new java.util.concurrent.CountDownLatch(1)
+    session.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        terminated.countDown()
+    })
     val df = stream(session)
     require(df.sparkSession eq session,
       "the replay's stream must be built on the session it is given")
@@ -176,7 +188,11 @@ object StreamOps {
     session.conf.set("spark.sql.shuffle.partitions", n.toString)
     val q = sink(df.writeStream).trigger(Trigger.AvailableNow()).start()
     try q.awaitTermination()
-    finally if (!q.isActive) org.apache.spark.sql.graftbridge.unloadStateStores(q)
+    finally if (!q.isActive) {
+      org.apache.spark.sql.graftbridge.unloadStateStores(q)
+      if (terminated.await(10, java.util.concurrent.TimeUnit.SECONDS))
+        org.apache.spark.sql.graftbridge.removeStreamListenerBuses(q)
+    }
     q
   }
 

@@ -11,7 +11,9 @@ import graft.{GraftSession, SparkEntry}
   * reads and any fitted-state build the query owns; the best-of-N is
   * Bench's steady-state estimator. `compiles` is the number of classes
   * codegen compiled during the best call (`CodegenMetrics`); above 0,
-  * the query's warm calls still miss the codegen cache.
+  * the query's warm calls still miss the codegen cache. `jobs` is the
+  * number of Spark jobs the best call submitted ([[JobCounter]]), eager
+  * actions inside the query function included.
   *
   * Reads Bench's settings: SPARK_GRAFT_SF_DIR (default sf0.1),
   * SPARK_GRAFT_CPUS (default 4) and SPARK_GRAFT_REPS (default 5).
@@ -25,19 +27,22 @@ object Profile {
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val spark = GraftSession.local(cpus)
-    /** (seconds, rows, classes compiled) of one call. */
-    def time(name: String): (Double, Long, Long) = {
-      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      val t0 = System.nanoTime()
-      val n = SparkEntry.queries(name)(spark, sfDir).count()
-      ((System.nanoTime() - t0) / 1e9, n,
-        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+    /** (seconds, rows, classes compiled, jobs) of one call. */
+    def time(name: String): (Double, Long, Long, Int) = {
+      val ((secs, n, compiles), jobs) = JobCounter.count(spark) {
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val t0 = System.nanoTime()
+        val n = SparkEntry.queries(name)(spark, sfDir).count()
+        ((System.nanoTime() - t0) / 1e9, n,
+          CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+      }
+      (secs, n, compiles, jobs)
     }
-    println(f"${"query"}%-32s ${"first"}%8s ${"best"}%8s ${"rows"}%10s ${"compiles"}%8s")
+    println(f"${"query"}%-32s ${"first"}%8s ${"best"}%8s ${"rows"}%10s ${"compiles"}%8s ${"jobs"}%6s")
     val rows = names.map { name =>
-      val (first, n, _) = time(name)
-      val (best, _, compiles) = (1 to reps).map(_ => time(name)).minBy(_._1)
-      println(f"$name%-32s $first%8.3f $best%8.3f $n%10d $compiles%8d")
+      val (first, n, _, _) = time(name)
+      val (best, _, compiles, jobs) = (1 to reps).map(_ => time(name)).minBy(_._1)
+      println(f"$name%-32s $first%8.3f $best%8.3f $n%10d $compiles%8d $jobs%6d")
       (first, best)
     }
     println(f"${"TOTAL"}%-32s ${rows.map(_._1).sum}%8.3f ${rows.map(_._2).sum}%8.3f")

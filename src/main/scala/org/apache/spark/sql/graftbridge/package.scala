@@ -1,9 +1,11 @@
 package org.apache.spark.sql
 
+import org.apache.spark.scheduler.SparkListenerInterface
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreWriter
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.execution.streaming.state.{StateStore, StateStoreProviderId}
+import org.apache.spark.sql.internal.SessionState
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Column ⇄ Expression bridge.
@@ -62,4 +64,38 @@ package object graftbridge {
     * from the same checkpoint loads its state from the files. */
   def unloadStateStores(q: StreamingQuery): Unit =
     stateStoreProviderIds(q).foreach(StateStore.removeFromLoadedProvidersAndClose(_))
+
+  /** Removes the streaming listener buses of a finished query's two
+    * sessions, the one that started it and the clone its batches ran
+    * on, from the context's listener bus. A session registers its bus
+    * there when its `StreamingQueryManager` is built, and nothing
+    * removes it, so every short-lived session that runs a stream would
+    * leave one behind for the context's life. A removed bus delivers
+    * no more events: call this once the query's termination event has
+    * reached its listeners. */
+  def removeStreamListenerBuses(q: StreamingQuery): Unit = {
+    val exec = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+    val bus = exec.sparkSession.sparkContext.listenerBus
+    Seq(exec.sparkSession, exec.sparkSessionForStream)
+      .flatMap(streamListenerBus).foreach(bus.removeListener)
+  }
+
+  /** The session's streaming listener bus, or None when the session
+    * never built its `StreamingQueryManager` (a lazy val, read through
+    * its field so that asking does not build one and register a bus). */
+  private def streamListenerBus(s: classic.SparkSession): Option[SparkListenerInterface] = {
+    val manager = classOf[SessionState].getDeclaredField("streamingQueryManager")
+    manager.setAccessible(true)
+    Option(manager.get(s.sessionState)).map { m =>
+      val bus = classOf[classic.StreamingQueryManager].getDeclaredField("listenerBus")
+      bus.setAccessible(true)
+      bus.get(m).asInstanceOf[SparkListenerInterface]
+    }
+  }
+
+  /** The listeners on the context's listener bus, over all its queues. */
+  def contextListeners(spark: SparkSession): Seq[SparkListenerInterface] = {
+    import scala.jdk.CollectionConverters._
+    spark.sparkContext.listenerBus.listeners.asScala.toSeq
+  }
 }

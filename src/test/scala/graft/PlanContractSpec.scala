@@ -1,6 +1,13 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{ProjectExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.scalatest.matchers.should.Matchers
+
+import graft.operators.MatchReportExpr
+import graft.tools.JobCounter
 
 /** Plan regression guard: no query may silently degrade into a
   * cartesian product or an unintended nested-loop join. The
@@ -146,8 +153,9 @@ class PlanContractSpec extends SparkSpec with Matchers {
   }
 
   test("flagship variants leave the session CacheManager empty (q44 three times)") {
-    // q44 fits a fresh vocabulary per call, so a cached reference could
-    // never be found again: every call would add an InMemoryRelation
+    // the variants collect their reference on every call and `.cache()`
+    // nothing; q44's fitted vocabulary is held in FittedCache, not in
+    // the session's CacheManager
     val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager
     spark.catalog.clearCache()
@@ -155,5 +163,38 @@ class PlanContractSpec extends SparkSpec with Matchers {
     Seq("q24_label_match_report", "q40_label_match_frozen", "q148_label_match_cooc")
       .foreach(q => SparkEntry.queries(q)(spark, sfDir).collect())
     cache.isEmpty shouldBe true
+  }
+
+  /** Every node of an executed plan, through adaptive and query-stage
+    * wrappers. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec => s +: nodes(s.plan)
+    case other => other +: other.children.flatMap(nodes)
+  }
+
+  private def exchanges(p: SparkPlan): Seq[Exchange] =
+    nodes(p).collect { case e: Exchange => e }
+
+  // A warm label-map request is four jobs: the reference collect, the
+  // range partitioner's sample, the label shuffle and the result.
+  Seq("q24_label_match_report", "q40_label_match_frozen", "q44_label_match_w2v").foreach { name =>
+    test(s"a warm $name call runs at most 4 jobs; its one range exchange is below the matcher") {
+      val query = SparkEntry.queries(name)
+      query(spark, sfDir).collect()
+      val (df, jobs) = JobCounter.count(spark) {
+        val df = query(spark, sfDir)
+        df.collect()
+        df
+      }
+      jobs should be <= 4
+      val plan = df.queryExecution.executedPlan
+      exchanges(plan).count(_.outputPartitioning.isInstanceOf[RangePartitioning]) shouldBe 1
+      val matcher = nodes(plan).collect {
+        case p: ProjectExec if p.projectList.exists(_.exists(_.isInstanceOf[MatchReportExpr])) => p
+      }
+      matcher should have size 1
+      exchanges(matcher.head).size shouldBe exchanges(plan).size
+    }
   }
 }

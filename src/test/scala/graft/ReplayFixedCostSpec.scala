@@ -21,8 +21,9 @@ import graft.streaming.{LocalCheckpointFileManager, NioPermissionLocalFileSystem
 
 /** What a stream replay costs beyond its own work, and what it leaves
   * behind: checkpoint files written without forked processes, generated
-  * code reused from one replay to the next, no state store left loaded,
-  * and no write to the context's shared Hadoop configuration. */
+  * code reused from one replay to the next, no state store or listener
+  * bus left behind, and no write to the context's shared Hadoop
+  * configuration. */
 class ReplayFixedCostSpec extends SparkSpec with Matchers {
   import spark.implicits._
 
@@ -49,6 +50,14 @@ class ReplayFixedCostSpec extends SparkSpec with Matchers {
     withClue(s"classes compiled per call: $perCall") {
       perCall.values.map(_(2)).toSet shouldBe Set(0L)
     }
+  }
+
+  test("50 q29 replays leave the context's listener count unchanged") {
+    val q29 = SparkEntry.queries("q29_stream_rollup")
+    q29(spark, dir).collect()
+    val before = graftbridge.contextListeners(spark).size
+    (1 to 50).foreach(_ => q29(spark, dir).collect())
+    graftbridge.contextListeners(spark).size shouldBe before
   }
 
   test("NIO setPermission sets the mode bits the forking chmod sets") {

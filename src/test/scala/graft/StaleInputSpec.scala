@@ -1,9 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge
+import org.apache.spark.sql.types.{BinaryType, StringType}
 import org.scalatest.matchers.should.Matchers
 
 import graft.operators.LinearModel
+import graft.sources.ProbedParquet
 import graft.streaming.StreamOps
 
 /** Fitted state shared across calls must follow its inputs: rewriting
@@ -55,5 +58,68 @@ class StaleInputSpec extends SparkSpec with Matchers {
     val fresh = ewma(freshDir)
     fresh should not be first
     second shouldBe fresh
+  }
+
+  test("a table rewritten with an added column shows it on the next read") {
+    val part = spark.read.parquet(s"$src/part.parquet")
+    val dir = tempDir("stale-schema")
+    val path = s"$dir/part.parquet"
+    part.write.parquet(path)
+    SparkEntry.t(spark, dir, "part").columns should not contain "p_added"
+    part.withColumn("p_added", col("p_partkey") * 2).write.mode("overwrite").parquet(path)
+    val second = SparkEntry.t(spark, dir, "part")
+    second.columns should contain("p_added")
+    second.filter(col("p_added") =!= col("p_partkey") * 2).count() shouldBe 0L
+  }
+
+  test("q44 refits its vocabulary after part.parquet is rewritten") {
+    val part = spark.read.parquet(s"$src/part.parquet")
+    def withDocs(prefix: String): String = {
+      val d = tempDir(prefix)
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$src/documents.parquet"),
+        java.nio.file.Paths.get(s"$d/documents.parquet"))
+      d
+    }
+    def q44(d: String): (Seq[org.apache.spark.sql.Row], Seq[(String, Seq[Double])]) = {
+      val rows = SparkEntry.queries("q44_label_match_w2v")(spark, d).collect().toSeq
+      (rows, SparkEntry.q44VocabHolder.get.get.map { case (w, v) => w -> v.toSeq })
+    }
+    val dir = withDocs("stale-q44")
+    val path = s"$dir/part.parquet"
+    part.filter($"p_partkey" % 2 === 0).write.parquet(path)
+    val first = q44(dir)
+    val newRows = part.filter($"p_partkey" % 2 === 1)
+    newRows.write.mode("overwrite").parquet(path)
+    val second = q44(dir)
+    val freshDir = withDocs("stale-q44-fresh")
+    newRows.write.parquet(s"$freshDir/part.parquet")
+    val fresh = q44(freshDir)
+    fresh._2 should not be first._2
+    second shouldBe fresh
+  }
+
+  test("a schema probed under binaryAsString=true is not served with it false") {
+    // written through parquet's own API: a Spark-written file carries
+    // its Spark schema in the footer, which inference prefers to the
+    // flag, so only a plain binary column shows what the flag changes
+    val path = s"${tempDir("stale-binary")}/bytes.parquet"
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 id; required binary b; }")
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(path)).withType(schema).build()
+    try writer.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+      .newGroup().append("id", 1L).append("b",
+        org.apache.parquet.io.api.Binary.fromConstantByteArray(Array[Byte](104, 105))))
+    finally writer.close()
+    def session(binaryAsString: Boolean) = {
+      val s = graftbridge.isolatedSession(spark)
+      s.conf.set("spark.sql.parquet.binaryAsString", binaryAsString.toString)
+      s
+    }
+    ProbedParquet.schema(session(true), path)("b").dataType shouldBe StringType
+    ProbedParquet.schema(session(false), path)("b").dataType shouldBe BinaryType
+    ProbedParquet.read(session(true), path).head().getString(1) shouldBe "hi"
+    ProbedParquet.read(session(false), path).head().getAs[Array[Byte]](1).toSeq shouldBe
+      Seq[Byte](104, 105)
   }
 }
