@@ -26,18 +26,21 @@ import graft.functions.{GraftUdfs, TopKBuffer, VectorOps}
   *          (cosine vs every reference row → bounded top-k → rank
   *           pivot → exact-overwrite, all per query row)
   *
-  * Physical profile: `mapLabels` runs one collect job when it is
-  * called — an eager action over the prepared reference (its scan,
-  * embed and row-number sort run then, once per call). The reference
-  * is catalog-sized by construction (83 rows for Lung v1.2, at most
-  * `maxCatalogRows` by guard); it comes to the driver in `ref_row_id`
-  * order, is packed into one immutable [[MatchReference]] and is
-  * broadcast once. The returned plan is the query side plus one
-  * projection that reads that broadcast: no join, no aggregate, no
-  * exchange and no sort of its own, so the query side stays
-  * distributed and scales linearly with executors. The projection
-  * holds the broadcast handle, never literals of the reference, so
-  * its generated code is the same on every call and a warm call
+  * Physical profile: the matcher's reference is a packed, immutable
+  * [[MatchReference]]. [[MatchReference.collect]] builds one from a
+  * prepared reference in one collect job (its scan, embed and
+  * row-number sort run then); the reference is catalog-sized by
+  * construction (83 rows for Lung v1.2, at most `maxCatalogRows` by
+  * guard). A caller that serves many label sets against one catalog
+  * packs it once and passes the packed value to every `mapLabels`
+  * call, which then runs no job of its own: it broadcasts the packed
+  * reference and returns the query side plus one projection that
+  * reads that broadcast — no join, no aggregate, no exchange and no
+  * sort of its own, so the query side stays distributed and scales
+  * linearly with executors. The `DataFrame` overload collects and
+  * delegates, so there is one kernel. The projection holds the
+  * broadcast handle, never literals of the reference, so its
+  * generated code is the same on every call and a warm call
   * compiles nothing.
   *
   * Session note: the matcher needs no session setting. Its bounded
@@ -101,26 +104,31 @@ object Matcher {
     * Every query row yields exactly one report row, so callers pass
     * one row per (source, raw_input_label) — the flagship variants
     * `distinct()` their labels upstream.
-    * ref: output of [[prepareReference]]; collected here, at call time.
+    * ref: a [[prepareReference]] output, packed once by
+    * [[MatchReference.collect]]; it is broadcast here, on every call.
     * Returns the wide report of FIXTURES.md §4 / `main.py:194-211`
     * (no rows when the reference is empty).
     */
-  def mapLabels(queries: DataFrame, ref: DataFrame, k: Int,
-                vecCol: String = "embedding"): DataFrame = {
+  def mapLabels(queries: DataFrame, ref: MatchReference, k: Int): DataFrame = {
     import org.apache.spark.sql.graftbridge.{toColumn, toExpression}
     require(k >= 1, "k must be >= 1")
-    val packed = MatchReference.collect(ref, vecCol)
-    val handle = queries.sparkSession.sparkContext.broadcast(packed)
+    val handle = queries.sparkSession.sparkContext.broadcast(ref)
     val report = toColumn(MatchReportExpr(
       toExpression(col("cleaned_input_label")),
       toExpression(col("qvec").cast("array<double>")), handle, k))
     val keys = Seq(col("source"), col("raw_input_label"), col("cleaned_input_label"))
     // no reference row, no candidate: the report is empty. The
     // optimizer prunes lit(true), so a non-empty reference adds no filter
-    queries.where(lit(packed.size > 0))
+    queries.where(lit(ref.size > 0))
       .select(keys :+ report.as("__m"): _*)
       .select(keys :+ col("__m.*"): _*)
   }
+
+  /** [[mapLabels]] over an unpacked [[prepareReference]] output, which
+    * is collected here, at call time (one job). */
+  def mapLabels(queries: DataFrame, ref: DataFrame, k: Int,
+                vecCol: String = "embedding"): DataFrame =
+    mapLabels(queries, MatchReference.collect(ref, vecCol), k)
 }
 
 /** The prepared reference, packed on the driver in `ref_row_id` order

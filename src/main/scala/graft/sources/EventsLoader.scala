@@ -30,18 +30,22 @@ import org.apache.spark.sql.types._
   */
 object EventsLoader {
 
+  private val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** The file's schema as inferred with [[nanosAsLong]] on: without it
+    * a TIMESTAMP(NANOS) footer fails inference outright; with it nanos
+    * arrive as LongType, and micros/NTZ are unaffected. The probe runs
+    * on a clone that carries the flag and is held per fingerprint
+    * ([[ProbedParquet]]), so bench reps don't repeat it, and an
+    * in-place testdata regeneration (which has already flipped the ts
+    * encoding once) re-probes instead of driving the stale decode
+    * branch. The caller's session gets the flag only when the file
+    * needs it to read its `ts` as that long: a session-wide setting
+    * that changes how every later TIMESTAMP(NANOS) column decodes. */
   private def rawSchema(spark: SparkSession, path: String): StructType = {
-    // set on EVERY call, not just the first probe: the cache outlives
-    // this session's conf, and without the flag a TIMESTAMP(NANOS)
-    // footer fails schema inference outright (with it, nanos arrive
-    // as LongType; micros/NTZ are unaffected)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // the probe is held per fingerprint (ProbedParquet), so bench reps
-    // don't repeat it; an in-place testdata regeneration (which has
-    // already flipped the ts encoding once) changes the file's
-    // fingerprint and re-probes instead of driving the stale decode
-    // branch
-    ProbedParquet.schema(spark, path)
+    val schema = ProbedParquet.schema(spark, path, Map(nanosAsLong -> "true"))
+    if (tsIsLegacyNanos(schema)) spark.conf.set(nanosAsLong, "true")
+    schema
   }
 
   /** True when the file stores `ts` as raw nanos-since-epoch longs

@@ -25,12 +25,25 @@ object ProbedParquet {
     "spark.sql.parquet.inferTimestampNTZ.enabled")
 
   /** The schema `spark.read.parquet(path)` infers in `spark`'s current
-    * conf, probed once per fingerprint of `path`. */
-  def schema(spark: SparkSession, path: String): StructType =
+    * conf with `settings`, values of the inference confs, over it,
+    * probed once per fingerprint of `path`. A probe under `settings`
+    * runs on a clone of `spark`
+    * ([[org.apache.spark.sql.graftbridge.isolatedSession]]), so they
+    * never reach the caller's conf. */
+  def schema(spark: SparkSession, path: String,
+      settings: Map[String, String] = Map.empty): StructType = {
+    require(settings.keySet.subsetOf(inferenceConfs.toSet),
+      s"ProbedParquet.schema: only inference confs can be set, got ${settings.keys.mkString(", ")}")
     graft.FittedCache.get(spark, "ProbedParquet.schema", Seq(path),
-        inferenceConfs.map(spark.conf.getOption)) {
-      spark.read.parquet(path).schema
+        inferenceConfs.map(k => settings.get(k).orElse(spark.conf.getOption(k)))) {
+      val probe = if (settings.isEmpty) spark else {
+        val clone = org.apache.spark.sql.graftbridge.isolatedSession(spark)
+        settings.foreach { case (k, v) => clone.conf.set(k, v) }
+        clone
+      }
+      probe.read.parquet(path).schema
     }
+  }
 
   /** `spark.read.parquet(path)` without the inference job. */
   def read(spark: SparkSession, path: String): DataFrame =

@@ -50,65 +50,31 @@ object StreamOps {
   def eventsStream(spark: SparkSession, dir: String): DataFrame =
     graft.sources.EventsLoader.eventsStream(spark, dir)
 
-  /** Input bytes one state/shuffle partition of a bounded replay
-    * covers. */
-  private val bytesPerPartition = 16L << 20
-
-  /** State/shuffle partition count of a bounded streaming replay:
-    * `clamp(ceil(inputBytes / 16 MiB), floor, sessionN)`, where
-    * `sessionN` is the session's `spark.sql.shuffle.partitions`.
+  /** State partition floor of a replay whose per-group work is its
+    * real work: a per-group fold ([[hasGroupFold]]) or a sink that runs
+    * per-batch work the plan does not show.
     *
     * Every stateful operator opens one state store per shuffle
     * partition per micro-batch, and each store writes its own delta,
     * temp and checksum files when it commits; AQE cannot coalesce a
     * streaming shuffle. A replay over megabytes at the session default
     * (= core count) pays partitions × operators × batches commits for
-    * state that fits in one partition, so a small input runs on one.
-    * On a large input the ceil saturates and `sessionN` wins.
-    *
-    * `floor` is min(sessionN, 4) when `groupParallel` — the plan holds
-    * a per-group fold ([[hasGroupFold]]) or the sink runs per-batch
-    * work the plan does not show — and 1 otherwise. A fold's per-group
-    * compute is the replay's real work and one partition serializes
-    * it: at sf0.1 on local[4], q112's HLL fold took 2.86 s at 4
-    * partitions and 4.49 s at 1, while the commit-bound q29 went from
-    * 1.44 to 0.94 s and q72 from 3.32 to 2.41 s at 1. Results do not
-    * depend on the count: every stateful operator on the board keys
-    * its state by a column hash (StreamPartitionSpec replays at 1 and
-    * 7 partitions and compares the rows). */
-  private[graft] def streamShufflePartitions(sessionN: Int, inputBytes: Long,
-      groupParallel: Boolean): Int = {
-    val floor = if (groupParallel) math.min(sessionN, 4) else 1
-    val bySize = (inputBytes + bytesPerPartition - 1) / bytesPerPartition
-    math.max(floor.toLong, math.min(sessionN.toLong, bySize)).toInt
-  }
+    * state that fits in one partition, so a replay's count comes from
+    * its input bytes ([[graft.sources.InputPartitions]]), and a small
+    * input runs on one. A fold's per-group compute is the replay's real
+    * work and one partition serializes it: at sf0.1 on local[4], q112's
+    * HLL fold took 2.86 s at 4 partitions and 4.49 s at 1, while the
+    * commit-bound q29 went from 1.44 to 0.94 s and q72 from 3.32 to
+    * 2.41 s at 1. So such a replay keeps min(sessionN, 4). Results do
+    * not depend on the count: every stateful operator on the board
+    * keys its state by a column hash (StreamPartitionSpec replays at 1
+    * and 7 partitions and compares the rows). */
+  private[graft] val groupParallelFloor = 4
 
   /** True when `plan` holds a per-group fold: map- and
     * flatMapGroupsWithState both plan to `FlatMapGroupsWithState`. */
   private[graft] def hasGroupFold(plan: LogicalPlan): Boolean =
     plan.find(_.isInstanceOf[FlatMapGroupsWithState]).isDefined
-
-  /** Total bytes under a path/glob (file, directory, or glob). */
-  private[graft] def inputBytes(spark: SparkSession, glob: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(glob)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stats = fs.globStatus(p)
-    if (stats == null) 0L
-    else stats.map { st =>
-      if (st.isDirectory) fs.getContentSummary(st.getPath).getLength
-      else st.getLen
-    }.sum
-  }
-
-  /** Partition count that replays started on this thread use in place
-    * of the derived one, inside [[withStreamPartitions]]. */
-  private val forcedPartitions = new scala.util.DynamicVariable[Option[Int]](None)
-
-  /** Run `body` with every replay it starts on this thread at `n`
-    * state/shuffle partitions — the partition-invariance checks run
-    * whole queries at fixed counts through this, not through a conf. */
-  private[graft] def withStreamPartitions[A](n: Int)(body: => A): A =
-    forcedPartitions.withValue(Some(n))(body)
 
   private val runCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
@@ -153,11 +119,13 @@ object StreamOps {
     * caller's session or a replay running beside it. The clone also
     * gets the caller's streaming query listeners, which see its
     * queries as the caller's. `stream` builds the streaming frame on
-    * that session and `sink` configures its writer. The count is
-    * [[streamShufflePartitions]] over the bytes under `inputs` and the
-    * frame's analyzed plan. When the replay ends its state stores are
-    * unloaded ([[org.apache.spark.sql.graftbridge.unloadStateStores]]);
-    * left loaded, each provider holds its state rows until Spark's next
+    * that session and `sink` configures its writer. The state
+    * partition count is [[graft.sources.InputPartitions.forInputs]]
+    * over the bytes under `inputs`, with [[groupParallelFloor]] when
+    * `groupParallel` or the frame's analyzed plan holds a fold. When
+    * the replay ends its state stores are unloaded
+    * ([[org.apache.spark.sql.graftbridge.unloadStateStores]]); left
+    * loaded, each provider holds its state rows until Spark's next
     * maintenance pass (every 60 s), and replays run back to back pile
     * them up on the heap. Once the caller's listeners have heard the
     * termination, the streaming listener buses of the clone and of the
@@ -181,10 +149,9 @@ object StreamOps {
     val df = stream(session)
     require(df.sparkSession eq session,
       "the replay's stream must be built on the session it is given")
-    val n = forcedPartitions.value.getOrElse(streamShufflePartitions(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt.max(1),
-      inputs.map(inputBytes(spark, _)).sum,
-      groupParallel || hasGroupFold(df.queryExecution.analyzed)))
+    val n = graft.sources.InputPartitions.forInputs(spark, inputs,
+      floor = if (groupParallel || hasGroupFold(df.queryExecution.analyzed)) groupParallelFloor
+        else 1)
     session.conf.set("spark.sql.shuffle.partitions", n.toString)
     val q = sink(df.writeStream).trigger(Trigger.AvailableNow()).start()
     try q.awaitTermination()
@@ -198,7 +165,10 @@ object StreamOps {
 
   /** [[replay]] into a memory sink: the sink's rows come back as a
     * local frame on `spark`, and the sink's view is dropped, so the
-    * replay leaves nothing registered behind it. */
+    * replay leaves nothing registered behind it. The rows are already
+    * on the driver, so the frame is one partition: a caller's
+    * `orderBy` over it runs as one job, with no range sample and no
+    * shuffle. */
   private[graft] def drain(spark: SparkSession, inputs: Seq[String],
       mode: OutputMode = OutputMode.Append())(
       stream: SparkSession => DataFrame): DataFrame =
@@ -214,7 +184,7 @@ object StreamOps {
     val session = q.sparkSession
     try {
       val sink = session.table(name)
-      (spark.createDataFrame(sink.collectAsList(), sink.schema), q)
+      (spark.createDataFrame(sink.collectAsList(), sink.schema).coalesce(1), q)
     } finally session.catalog.dropTempView(name)
   }
 

@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.exchange.Exchange
 import org.scalatest.matchers.should.Matchers
 
 import graft.operators.MatchReportExpr
+import graft.sources.InputPartitions
 import graft.tools.JobCounter
 
 /** Plan regression guard: no query may silently degrade into a
@@ -153,9 +154,9 @@ class PlanContractSpec extends SparkSpec with Matchers {
   }
 
   test("flagship variants leave the session CacheManager empty (q44 three times)") {
-    // the variants collect their reference on every call and `.cache()`
-    // nothing; q44's fitted vocabulary is held in FittedCache, not in
-    // the session's CacheManager
+    // the variants `.cache()` nothing; their packed references and
+    // q44's and q148's fitted vocabularies are held in FittedCache, not
+    // in the session's CacheManager
     val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager
     spark.catalog.clearCache()
@@ -176,10 +177,18 @@ class PlanContractSpec extends SparkSpec with Matchers {
   private def exchanges(p: SparkPlan): Seq[Exchange] =
     nodes(p).collect { case e: Exchange => e }
 
-  // A warm label-map request is four jobs: the reference collect, the
-  // range partitioner's sample, the label shuffle and the result.
-  Seq("q24_label_match_report", "q40_label_match_frozen", "q44_label_match_w2v").foreach { name =>
-    test(s"a warm $name call runs at most 4 jobs; its one range exchange is below the matcher") {
+  private def matchers(plan: SparkPlan): Seq[ProjectExec] = nodes(plan).collect {
+    case p: ProjectExec if p.projectList.exists(_.exists(_.isInstanceOf[MatchReportExpr])) => p
+  }
+
+  // A warm label-map request is one job, the result's: the catalog
+  // reference is cached, and a label side that fits one partition is
+  // coalesced into the scan's task, so nothing is shuffled.
+  private val flagships = Seq("q24_label_match_report", "q40_label_match_frozen",
+    "q44_label_match_w2v", "q148_label_match_cooc")
+
+  flagships.foreach { name =>
+    test(s"a warm $name call runs at most 1 job and its plan has no exchange") {
       val query = SparkEntry.queries(name)
       query(spark, sfDir).collect()
       val (df, jobs) = JobCounter.count(spark) {
@@ -187,14 +196,22 @@ class PlanContractSpec extends SparkSpec with Matchers {
         df.collect()
         df
       }
-      jobs should be <= 4
+      jobs should be <= 1
+      val plan = df.queryExecution.executedPlan
+      matchers(plan) should have size 1
+      exchanges(plan) shouldBe empty
+    }
+
+    test(s"$name at 4 label partitions: one range exchange, below the matcher, same rows as at 1") {
+      val query = SparkEntry.queries(name)
+      val at1 = query(spark, sfDir).collect().toSeq
+      val df = InputPartitions.withPartitions(4)(query(spark, sfDir))
       val plan = df.queryExecution.executedPlan
       exchanges(plan).count(_.outputPartitioning.isInstanceOf[RangePartitioning]) shouldBe 1
-      val matcher = nodes(plan).collect {
-        case p: ProjectExec if p.projectList.exists(_.exists(_.isInstanceOf[MatchReportExpr])) => p
-      }
+      val matcher = matchers(plan)
       matcher should have size 1
       exchanges(matcher.head).size shouldBe exchanges(plan).size
+      df.collect().toSeq shouldBe at1
     }
   }
 }

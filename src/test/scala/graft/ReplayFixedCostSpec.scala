@@ -52,6 +52,14 @@ class ReplayFixedCostSpec extends SparkSpec with Matchers {
     }
   }
 
+  test("a drain's rows come back in one partition; a warm q29 call runs at most 2 jobs") {
+    StreamOps.runHourlyRollupAvailableNow(spark, dir).rdd.getNumPartitions shouldBe 1
+    val q29 = SparkEntry.queries("q29_stream_rollup")
+    q29(spark, dir).collect()
+    val (_, jobs) = graft.tools.JobCounter.count(spark)(q29(spark, dir).collect())
+    jobs should be <= 2
+  }
+
   test("50 q29 replays leave the context's listener count unchanged") {
     val q29 = SparkEntry.queries("q29_stream_rollup")
     q29(spark, dir).collect()

@@ -11,7 +11,8 @@ import graft.streaming.StreamOps
 
 /** Fitted state shared across calls must follow its inputs: rewriting
   * a table inside one application and calling again has to give what
-  * a fresh fit over the new rows gives, not the first fit. */
+  * a fresh fit over the new rows gives, not the first fit. Probing an
+  * input's schema must not write the caller's session conf either. */
 class StaleInputSpec extends SparkSpec with Matchers {
   import spark.implicits._
 
@@ -98,6 +99,39 @@ class StaleInputSpec extends SparkSpec with Matchers {
     second shouldBe fresh
   }
 
+  test("q24 and q40 rebuild their catalog references after part.parquet is rewritten") {
+    val part = spark.read.parquet(s"$src/part.parquet")
+    // new rows, and a changed p_name on a row q40 plants as a label
+    val v1 = part.filter($"p_partkey" % 2 === 0)
+    val v2 = part.withColumn("p_name",
+      when($"p_partkey" === 50, lit("rewritten part name")).otherwise($"p_name"))
+    def withDocs(prefix: String): String = {
+      val d = tempDir(prefix)
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$src/documents.parquet"),
+        java.nio.file.Paths.get(s"$d/documents.parquet"))
+      d
+    }
+    def fresh(version: org.apache.spark.sql.DataFrame, prefix: String): String = {
+      val d = withDocs(prefix)
+      version.write.parquet(s"$d/part.parquet")
+      d
+    }
+    def rows(name: String, d: String) = SparkEntry.queries(name)(spark, d).collect().toSeq
+    val dir = fresh(v1, "stale-ref")
+    // q40 runs after q24 over the same directory: it must build its
+    // own reference, not get q24's
+    val first = Seq("q24_label_match_report", "q40_label_match_frozen").map(rows(_, dir))
+    val v1Dir = fresh(v1, "stale-ref-v1")
+    rows("q40_label_match_frozen", v1Dir) shouldBe first(1)
+    v2.write.mode("overwrite").parquet(s"$dir/part.parquet")
+    val second = Seq("q24_label_match_report", "q40_label_match_frozen").map(rows(_, dir))
+    val v2Dir = fresh(v2, "stale-ref-v2")
+    val want = Seq("q24_label_match_report", "q40_label_match_frozen").map(rows(_, v2Dir))
+    want(0) should not be first(0)
+    want(1) should not be first(1)
+    second shouldBe want
+  }
+
   test("a schema probed under binaryAsString=true is not served with it false") {
     // written through parquet's own API: a Spark-written file carries
     // its Spark schema in the footer, which inference prefers to the
@@ -121,5 +155,20 @@ class StaleInputSpec extends SparkSpec with Matchers {
     ProbedParquet.read(session(true), path).head().getString(1) shouldBe "hi"
     ProbedParquet.read(session(false), path).head().getAs[Array[Byte]](1).toSeq shouldBe
       Seq[Byte](104, 105)
+  }
+
+  test("a batch events read over a MICROS file leaves nanosAsLong unset on the caller") {
+    val dir = tempDir("micros-events")
+    Seq((1L, 1704067798778549L, 7L, "click", 1.5, "{}"))
+      .toDF("event_id", "us", "user_id", "event_type", "value", "props")
+      .select($"event_id", expr("cast(timestamp_micros(us) as timestamp_ntz)").as("ts"),
+        $"user_id", $"event_type", $"value", $"props")
+      .write.parquet(s"$dir/events.parquet")
+    val caller = graftbridge.isolatedSession(spark)
+    caller.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    val ts = graft.sources.EventsLoader.events(caller, dir)
+      .select(unix_micros($"ts")).head().getLong(0)
+    ts shouldBe 1704067798778549L
+    caller.conf.getAll.get("spark.sql.legacy.parquet.nanosAsLong") shouldBe None
   }
 }

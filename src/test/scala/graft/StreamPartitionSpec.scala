@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQueryListener}
 import org.scalatest.matchers.should.Matchers
 
+import graft.sources.InputPartitions
 import graft.streaming.StreamOps
 
 /** How bounded stream replays size their state partitions, and what
@@ -62,15 +63,16 @@ class StreamPartitionSpec extends SparkSpec with Matchers {
     StreamOps.hasGroupFold(flatFold.queryExecution.analyzed) shouldBe true
     StreamOps.hasGroupFold(mapFold.queryExecution.analyzed) shouldBe true
 
-    StreamOps.streamShufflePartitions(8, 0L, groupParallel = false) shouldBe 1
-    StreamOps.streamShufflePartitions(8, 1L << 20, groupParallel = false) shouldBe 1
-    StreamOps.streamShufflePartitions(8, 1L << 20, groupParallel = true) shouldBe 4
-    StreamOps.streamShufflePartitions(2, 1L << 20, groupParallel = true) shouldBe 2
-    StreamOps.streamShufflePartitions(1, 1L << 20, groupParallel = true) shouldBe 1
+    val fold = StreamOps.groupParallelFloor
+    InputPartitions.count(8, 0L) shouldBe 1
+    InputPartitions.count(8, 1L << 20) shouldBe 1
+    InputPartitions.count(8, 1L << 20, fold) shouldBe 4
+    InputPartitions.count(2, 1L << 20, fold) shouldBe 2
+    InputPartitions.count(1, 1L << 20, fold) shouldBe 1
     // 16 MiB per partition: 50 MiB → 4
-    StreamOps.streamShufflePartitions(8, 50L << 20, groupParallel = false) shouldBe 4
-    StreamOps.streamShufflePartitions(8, 1L << 40, groupParallel = false) shouldBe 8
-    StreamOps.streamShufflePartitions(8, 1L << 40, groupParallel = true) shouldBe 8
+    InputPartitions.count(8, 50L << 20) shouldBe 4
+    InputPartitions.count(8, 1L << 40) shouldBe 8
+    InputPartitions.count(8, 1L << 40, fold) shouldBe 8
   }
 
   test("replays run at the derived count, reported to the caller's stream listeners") {
@@ -82,8 +84,8 @@ class StreamPartitionSpec extends SparkSpec with Matchers {
     for (name <- Seq("q29_stream_rollup", "q47_stream_dedup",
         "q72_stream_outer_join", "q112_stream_hll")) withClue(name) {
       var at1, at7 = Seq.empty[String]
-      statePartitions { at1 = StreamOps.withStreamPartitions(1)(rows(name)) } shouldBe Set(1)
-      statePartitions { at7 = StreamOps.withStreamPartitions(7)(rows(name)) } shouldBe Set(7)
+      statePartitions { at1 = InputPartitions.withPartitions(1)(rows(name)) } shouldBe Set(1)
+      statePartitions { at7 = InputPartitions.withPartitions(7)(rows(name)) } shouldBe Set(7)
       at1 should not be empty
       at7 shouldBe at1
     }
