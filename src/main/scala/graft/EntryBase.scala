@@ -30,13 +30,7 @@ private[graft] trait EntryBase { this: SparkEntry.type =>
   private[graft] val q44VocabHolder = new ModelStateHolder[Seq[(String, Array[Double])]]
 
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
-    // events' ts column has shipped under two parquet encodings
-    // (TIMESTAMP(NANOS) and TIMESTAMP(MICROS,NTZ)); the loader probes
-    // the footer and normalizes ts to TimestampType either way. Both
-    // read with a schema probed once per table version, not inferred
-    // by a Spark job on every call.
-    if (name == "events") graft.sources.EventsLoader.events(s, dir)
-    else graft.sources.ProbedParquet.read(s, s"$dir/$name.parquet")
+    graft.sources.Tables.read(s, dir, name)
 
   /** Per-row integer cents: exact, order-independent summation. */
   private[graft] def cents(c: Column): Column = round(c * 100).cast("long")

@@ -195,7 +195,7 @@ private[graft] trait EntryStreamingQueries { this: SparkEntry.type =>
     * arrivals must be dropped and only watermark-finalized windows
     * emit; the oracle states both effects in closed form. */
   private[graft] def q95(s: SparkSession, dir: String): DataFrame =
-    StreamOps.runLateDataRollupAvailableNow(s, dir)
+    StreamOps.runLateDataRollupAvailableNow(s, dir)._1
       .orderBy("win_start_us", "event_type")
 
   /** Streaming-ingest capstone
@@ -205,7 +205,7 @@ private[graft] trait EntryStreamingQueries { this: SparkEntry.type =>
     * cross-batch dedup UNDER the engine; the oracle replays the chain
     * in batch over the same staged union. */
   private[graft] def q100(s: SparkSession, dir: String): DataFrame = {
-    val staging = StreamOps.stagedDir(s, "singest", dir) { st =>
+    val staged = StreamOps.stagedDir(s, "singest", dir) {
       val d = t(s, dir, "documents")
       val planted = element_at(array(piiPlants.map(lit): _*),
         (col("doc_id") % 7 + 1).cast("int"))
@@ -215,13 +215,12 @@ private[graft] trait EntryStreamingQueries { this: SparkEntry.type =>
           concat(col("text"), planted).as("text"))
         .unionByName(d.filter(col("doc_id") % 6 === 0 && col("doc_id") % 4 =!= 0)
           .select(col("doc_id"), lit(1L).as("version"), col("text")))
-      StreamOps.stageVersionFile(v0, s"$st/v0.parquet")
-      StreamOps.stageVersionFile(v1, s"$st/v1.parquet")
+      Seq(v0, v1)
     }
     val nRedactions = Scrub.piiPatterns
       .map { case (c, _, _) => col(s"n_$c") }
       .reduce(_ + _)
-    StreamOps.runStreamIngestAvailableNow(s, staging, minChars = 50)
+    StreamOps.runStreamIngestAvailableNow(s, staged.path, minChars = 50)
       .select(col("doc_id"), col("version"), col("text_md5"),
         nRedactions.as("n_redactions"))
       .orderBy("doc_id", "version")
@@ -422,7 +421,7 @@ private[graft] trait EntryStreamingQueries { this: SparkEntry.type =>
     * unique within each staged file, so the kept set is exactly
     * first-arrival per digest whatever the in-batch row order. */
   private[graft] def q47(s: SparkSession, dir: String): DataFrame = {
-    val staging = StreamOps.stagedDir(s, "sdedup", dir) { st =>
+    val staged = StreamOps.stagedDir(s, "sdedup", dir) {
       val w = Window.partitionBy(col("__h")).orderBy(col("doc_id"))
       val v0 = t(s, dir, "documents").withColumn("__h", md5(col("text")))
         .withColumn("__rn", row_number().over(w))
@@ -431,10 +430,9 @@ private[graft] trait EntryStreamingQueries { this: SparkEntry.type =>
       val v1 = v0.select(col("doc_id"), lit(1L).as("version"),
         when(col("doc_id") % 3 === 0, col("text"))
           .otherwise(concat(col("text"), lit(" v1"))).as("text"))
-      StreamOps.stageVersionFile(v0, s"$st/v0.parquet")
-      StreamOps.stageVersionFile(v1, s"$st/v1.parquet")
+      Seq(v0, v1)
     }
-    StreamOps.runStreamingDedupAvailableNow(s, staging)
+    StreamOps.runStreamingDedupAvailableNow(s, staged.path)
       .select(col("doc_id"), col("version"), col("text_md5"))
       .orderBy("doc_id", "version")
   }

@@ -397,10 +397,6 @@ object Bpe {
             accepted += ((l, r, c)); idx += 1
           } else stop = true
         }
-        if (sys.env.contains("GRAFT_BPE_DEBUG"))
-          println(s"[bpe] done=$done batch=${accepted.size} stopAt=$idx " +
-            s"horizon=$horizon " +
-            s"top=${top.take(6).map(t => s"${t._1}|${t._2}:${t._3}").mkString(",")}")
         if (accepted.size >= 2) {
           accepted.foreach { case (l, r, c) =>
             applyMerge(l, r)

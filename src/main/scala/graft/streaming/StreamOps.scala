@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.sources.Tables
+
 /** Streaming operators over the `events` table (SURVEY.md §2.9).
   *
   * The reference has no streaming; these are the north-star
@@ -18,32 +20,19 @@ import org.apache.spark.sql.types._
   */
 object StreamOps {
 
-  /** Schema of events files WE stage (always written by this engine,
-    * so `ts` is a plain TimestampType regardless of how the source
-    * testdata encodes its own ts — the encoding probe lives in
-    * [[graft.sources.EventsLoader]] and only applies to source reads). */
-  private val stagedEventsSchema = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", TimestampType),
-    StructField("user_id", LongType), StructField("event_type", StringType),
-    StructField("value", DoubleType), StructField("props", StringType)))
+  /** A directory of single parquet files that share `schema`, replayed
+    * in staging order. */
+  final case class Staged(path: String, schema: StructType) {
+    /** The files as a stream on `spark`, one file per micro-batch. */
+    def stream(spark: SparkSession): DataFrame =
+      spark.readStream
+        .schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(s"$path/*.parquet")
+  }
 
-  /** Schema of the staged (wave, doc_id, text) crawl waves. */
-  private val waveTextSchema = StructType(Seq(
-    StructField("wave", LongType), StructField("doc_id", LongType),
-    StructField("text", StringType)))
-
-  /** The staged files under `staging` as a stream on `spark`, one file
-    * per micro-batch. */
-  private def stagedFileStream(spark: SparkSession, schema: StructType,
-      staging: String): DataFrame =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staging/*.parquet")
-
-  /** The staged crawl waves as a stream on `spark`. */
-  private def waveTextStream(spark: SparkSession, staging: String): DataFrame =
-    stagedFileStream(spark, waveTextSchema, staging)
+  /** Thrown when the parts given to [[stagedDir]] differ in schema. */
+  final class StagedSchemaMismatch(msg: String) extends IllegalArgumentException(msg)
 
   /** Streaming scan of the events table with `ts` normalized to a
     * proper timestamp (schema-adaptive — see EventsLoader). */
@@ -221,7 +210,7 @@ object StreamOps {
     * |segments|×|event types|). */
   def runStreamStaticEnrichAvailableNow(spark: SparkSession, dir: String): DataFrame =
     drain(spark, Seq(s"$dir/events.parquet"), OutputMode.Complete()) { s =>
-      val dim = s.read.parquet(s"$dir/customer.parquet")
+      val dim = Tables.read(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"))
       streamStaticEnrich(eventsStream(s, dir), dim)
     }
@@ -237,19 +226,41 @@ object StreamOps {
         date_format(col("window.start"), "yyyy-MM-dd HH:mm").as("hour"),
         col("event_type"), col("n_events"), col("value_milli"))
 
-  /** Staged inputs for a (kind, source dir): the staged files are a
-    * pure function of the tables under `dir`, so repeated drains
-    * (bench reps) reuse them from [[graft.FittedCache]] instead of
-    * re-copying the table every run; the whole `dir` is the
-    * fingerprinted input, so a rewritten table restages. */
-  private[graft] def stagedDir(spark: SparkSession, kind: String, dir: String)(
-      build: String => Unit): String =
-    graft.FittedCache.get(spark, s"StreamOps.stagedDir:$kind", Seq(dir), Nil) {
-      val work = graft.WorkDirs.create(s"graft_${kind}_")
-      val staging = s"$work/staging"
-      new java.io.File(staging).mkdirs()
-      build(staging)
-      staging
+  /** The one way a replay stages its own input: `parts`, in order, as
+    * single parquet files in a fresh scratch dir, replayed one file per
+    * micro-batch by [[Staged.stream]].
+    *
+    * The staged files are a pure function of the tables under `dir`
+    * and of `params`, so repeated drains (bench reps) reuse them from
+    * [[graft.FittedCache]] instead of re-copying the tables every run;
+    * the whole `dir` is the fingerprinted input, so a rewritten table
+    * restages. `params` must hold every argument besides `dir` that the
+    * parts depend on.
+    *
+    * All parts must share one schema (names and types; nullability
+    * aside), or [[StagedSchemaMismatch]] is thrown. FileStreamSource
+    * orders files by mtime with an unspecified tie-break, so the files
+    * get strictly increasing mtimes in part order ([[forceMtimeOrder]]):
+    * replays whose rows depend on arrival order (q143's first setter
+    * wins, the quota gates' admission order) see the parts in order.
+    * The schema is read back from the first file once, here, so a
+    * replay plans its stream without an inference job. */
+  private[graft] def stagedDir(spark: SparkSession, kind: String, dir: String,
+      params: Seq[Any] = Nil)(parts: => Seq[DataFrame]): Staged =
+    graft.FittedCache.get(spark, s"StreamOps.stagedDir:$kind", Seq(dir), params) {
+      val frames = parts
+      require(frames.nonEmpty, s"stagedDir($kind): no parts to stage")
+      val schemas = frames.map(_.schema.catalogString).distinct
+      if (schemas.size > 1) throw new StagedSchemaMismatch(
+        s"stagedDir($kind): staged parts differ in schema: ${schemas.mkString(" vs ")}")
+      val staging = s"${graft.WorkDirs.create(s"graft_${kind}_")}/staging"
+      val files = frames.zipWithIndex.map { case (df, i) =>
+        val file = f"$staging/$i%04d.parquet"
+        stageVersionFile(df, file)
+        file
+      }
+      forceMtimeOrder(files)
+      Staged(staging, spark.read.parquet(files.head).schema)
     }
 
   /** Run the hourly rollup THROUGH the Structured Streaming engine
@@ -314,20 +325,21 @@ object StreamOps {
     * join surface: a purchase with NO click in its window may only
     * emit (with null click columns) once the WATERMARK proves no
     * matching click can still arrive; until then it sits in state.
-    * To drain deterministically under AvailableNow, the real events
-    * are staged as micro-batch 1 and far-future SENTINEL events as
-    * batch 2: the sentinels push the watermark past every real
-    * purchase, and the engine's closing no-data batch then evicts all
-    * unmatched state so the null rows emit before termination.
-    * Sentinel rows (negative ids) are filtered
-    * from the result — the output is exactly the batch left-outer
-    * interval join over the real events, which is what the oracle
-    * states.
+    * To drain deterministically under AvailableNow, far-future
+    * SENTINEL events are staged in the same file as the real events,
+    * so both arrive in one single micro-batch: watermarks only advance
+    * at batch boundaries, so after that batch the watermark jumps past
+    * every real purchase, and the engine's closing no-data batch then
+    * evicts all unmatched state so the null rows emit before
+    * termination; inner matches never depend on the split. Sentinel
+    * rows (negative ids) are filtered from the result — the output is
+    * exactly the batch left-outer interval join over the real events,
+    * which is what the oracle states.
     *
-    * CONTRACT — the sentinel batch is a HARNESS-ONLY deviation, not
+    * CONTRACT — the sentinels are a HARNESS-ONLY deviation, not
     * part of the operator: in production the watermark advances from
     * live traffic and unmatched state drains continuously; a bounded
-    * AvailableNow replay has no "later" data, so without the sentinel
+    * AvailableNow replay has no "later" data, so without the sentinels
     * the purchases inside the final delay+window band would sit in
     * state forever — the closing no-data batch evicts only up to the
     * state-value watermark, which for this join's purchase side is
@@ -339,39 +351,22 @@ object StreamOps {
   def runClickAttributionOuterAvailableNow(spark: SparkSession, dir: String,
                                            windowMinutes: Int,
                                            drainSentinels: Boolean = true): DataFrame = {
-    val key = if (drainSentinels) "souter" else "souter_nosent"
-    val staging = stagedDir(spark, key, dir) { staging =>
+    val staged = stagedDir(spark, "souter", dir, Seq(drainSentinels)) {
       val ev = graft.sources.EventsLoader.events(spark, dir)
-      stageVersionFile(ev, s"$staging/f0.parquet")
-      if (drainSentinels) {
+      if (!drainSentinels) Seq(ev)
+      else {
         val maxTsUs = ev.agg(max(unix_micros(col("ts")))).head().getLong(0)
         val far = timestamp_micros(lit(maxTsUs + 30L * 24 * 3600 * 1000000L))
-        val sentinels = spark.range(1).select(
-          lit(-1L).as("event_id"), far.as("ts"),
-          lit(-1L).as("user_id"), lit("purchase").as("event_type"),
-          lit(0.0).as("value"), lit("{}").as("props"))
-          .unionByName(spark.range(1).select(
-            lit(-2L).as("event_id"), far.as("ts"),
-            lit(-1L).as("user_id"), lit("click").as("event_type"),
-            lit(0.0).as("value"), lit("{}").as("props")))
-        stageVersionFile(sentinels, s"$staging/f1.parquet")
+        val sentinels = Seq(-1L -> "purchase", -2L -> "click").map { case (id, kind) =>
+          spark.range(1).select(lit(id).as("event_id"), far.as("ts"),
+            lit(-1L).as("user_id"), lit(kind).as("event_type"),
+            lit(0.0).as("value"), lit("{}").as("props"))
+        }
+        Seq(sentinels.foldLeft(ev)(_ unionByName _))
       }
     }
-
-    // NO maxFilesPerTrigger: real events + sentinels land in ONE
-    // micro-batch (guide §2 — fewer replay batches, r16). The final
-    // output is unchanged: watermarks only advance at batch
-    // boundaries, so with the sentinels in batch 1 the watermark
-    // jumps past every real purchase after that single batch and the
-    // engine's closing no-data batch evicts ALL unmatched purchase
-    // state (previously split between batch 2 and the closing
-    // batch); inner matches never depended on the split. One fewer
-    // full state-commit cycle (4 stores × partitions). Oracle
-    // re-certified r16 at sf0.01/sf0.001.
-    drain(spark, Seq(staging)) { s =>
-      val src = s.readStream
-        .schema(stagedEventsSchema)
-        .parquet(s"$staging/*.parquet")
+    drain(spark, Seq(staged.path)) { s =>
+      val src = staged.stream(s)
       clickAttribution(
         src.filter(col("event_type") === "purchase"),
         src.filter(col("event_type") === "click"),
@@ -526,20 +521,13 @@ object StreamOps {
   def runPerSourceQuotaAvailableNow(spark: SparkSession, dir: String,
                                     quota: Long): DataFrame = {
     import spark.implicits._
-    val staging = stagedDir(spark, "quota", dir) { staging =>
-      val d = spark.read.parquet(s"$dir/documents.parquet")
+    val staged = stagedDir(spark, "quota", dir) {
+      val d = Tables.read(spark, dir, "documents")
         .select(col("doc_id"), (col("doc_id") % 2).as("version"), col("source"))
-      stageVersionFile(d.filter(col("version") === 0), s"$staging/f0.parquet")
-      stageVersionFile(d.filter(col("version") === 1), s"$staging/f1.parquet")
+      Seq(0, 1).map(v => d.filter(col("version") === v))
     }
-
-    drain(spark, Seq(staging)) { s =>
-      val src = stagedFileStream(s, StructType(Seq(
-          StructField("doc_id", LongType), StructField("version", LongType),
-          StructField("source", StringType))), staging)
-        .as[QuotaRow]
-      perSourceQuota(src, quota).toDF()
-    }
+    drain(spark, Seq(staged.path))(s =>
+      perSourceQuota(staged.stream(s).as[QuotaRow], quota).toDF())
   }
 
   // --- streaming cardinality (HLL registers as state) -------------------
@@ -609,50 +597,61 @@ object StreamOps {
       }
   }
 
-  /** Drive [[streamingHllDistinct]] through the engine: documents
-    * tokenized and staged as two crawl waves (`(doc_id div 20) % 2` —
-    * the round-robin doc_id layout makes plain parity single-wave per
-    * source), snapshots emitted per (source, wave). */
   /** Two-wave token staging shared by the streaming sketch runners
     * (HLL, Count-Min): documents tokenized and split into two crawl
     * waves by `(doc_id div 20) % 2` — the round-robin doc_id layout
     * puts every source in both waves. */
-  private def tokenWaves(spark: SparkSession, dir: String): String =
-    stagedDir(spark, "tokwaves", dir) { staging =>
-      val d = spark.read.parquet(s"$dir/documents.parquet")
+  private def tokenWaves(spark: SparkSession, dir: String): Staged =
+    stagedDir(spark, "tokwaves", dir) {
+      val d = Tables.read(spark, dir, "documents")
         .select(expr("(doc_id div 20) % 2").as("wave"), col("source"),
           explode(split(lower(col("text")), "\\s+")).as("tok"))
         .filter(col("tok") =!= "")
-      stageVersionFile(d.filter(col("wave") === 0), s"$staging/f0.parquet")
-      stageVersionFile(d.filter(col("wave") === 1), s"$staging/f1.parquet")
-      // parity contract with the cumulative-prefix oracles: the
-      // sketch streams snapshot only sources PRESENT in a micro-batch,
-      // while the oracles emit every (source, wave) pair — equal only
-      // because the round-robin doc_id layout lands every source in
-      // both waves. A testdata regeneration that breaks that layout
-      // must fail loudly here, not as a silent oracle hash drift.
-      val oneWave = d.groupBy("source")
-        .agg(countDistinct(col("wave")).as("nw"))
-        .filter(col("nw") < 2).count()
-      require(oneWave == 0L,
-        s"$oneWave source(s) absent from a crawl wave — staged token " +
-          "waves no longer satisfy the every-source-in-both-waves " +
-          "contract the streaming-sketch oracles assume")
+      requireEveryKeyInBothWaves(d, "source")
+      waves(d)
     }
 
-  /** The staged token waves as a stream on `spark`, one file per
-    * micro-batch. */
-  private def tokenWaveStream(spark: SparkSession, staging: String): DataFrame =
-    stagedFileStream(spark, StructType(Seq(
-        StructField("wave", LongType), StructField("source", StringType),
-        StructField("tok", StringType))), staging)
+  /** `d` split by its `wave` column into waves 0 and 1. */
+  private def waves(d: DataFrame): Seq[DataFrame] =
+    Seq(0, 1).map(w => d.filter(col("wave") === w))
 
+  /** One part of `d` per predicate of `splits`, led by a `wave` column
+    * holding the predicate's index. */
+  private def wavesBy(d: DataFrame, splits: org.apache.spark.sql.Column*): Seq[DataFrame] =
+    splits.zipWithIndex.map { case (p, w) =>
+      d.filter(p).select(lit(w.toLong).as("wave") +: d.columns.map(col): _*)
+    }
+
+  /** `docs`' columns `cols` split into the two crawl waves
+    * `(doc_id div 20) % 2`, each led by its `wave` column. */
+  private def crawlWaves(docs: DataFrame, cols: String*): Seq[DataFrame] =
+    waves(docs.select(expr("(doc_id div 20) % 2").as("wave") +: cols.map(col): _*))
+
+  /** Fails unless every value of `key` in `d` occurs in both waves.
+    *
+    * The sketch streams snapshot only keys PRESENT in a micro-batch,
+    * while their cumulative-prefix oracles emit every (key, wave) pair
+    * — equal only because the round-robin id layout lands every key
+    * in both waves. A testdata regeneration that breaks that layout
+    * must fail loudly here, not as a silent oracle hash drift. */
+  private def requireEveryKeyInBothWaves(d: DataFrame, key: String): Unit = {
+    val oneWave = d.groupBy(key)
+      .agg(countDistinct(col("wave")).as("nw"))
+      .filter(col("nw") < 2).count()
+    require(oneWave == 0L,
+      s"$oneWave $key value(s) absent from a wave — the staged waves no " +
+        "longer satisfy the every-key-in-both-waves contract the " +
+        "cumulative-prefix oracles assume")
+  }
+
+  /** Drive [[streamingHllDistinct]] through the engine over the token
+    * waves, snapshots emitted per (source, wave). */
   def runStreamingHllAvailableNow(spark: SparkSession, dir: String,
                                   p: Int, salt: String): DataFrame = {
     import spark.implicits._
-    val staging = tokenWaves(spark, dir)
-    drain(spark, Seq(staging))(s =>
-      streamingHllDistinct(tokenWaveStream(s, staging).as[HllTok], p, salt).toDF())
+    val staged = tokenWaves(spark, dir)
+    drain(spark, Seq(staged.path))(s =>
+      streamingHllDistinct(staged.stream(s).as[HllTok], p, salt).toDF())
   }
 
   case class QuantPoint(wave: Long, event_type: String, cents: Long)
@@ -715,12 +714,12 @@ object StreamOps {
   /** Drive [[streamingLogBucketQuantiles]] through the engine: event
     * values in cents staged as two waves by `(event_id div 20) % 2`
     * (the round-robin event_id layout lands every event_type in both
-    * waves — enforced, the tokenWaveStream contract), snapshots per
+    * waves — enforced, the [[tokenWaves]] contract), snapshots per
     * (event_type, wave). */
   def runStreamingQuantilesAvailableNow(spark: SparkSession,
       dir: String): DataFrame = {
     import spark.implicits._
-    val staging = stagedDir(spark, "quantwaves", dir) { st =>
+    val staged = stagedDir(spark, "quantwaves", dir) {
       val d = graft.sources.EventsLoader.events(spark, dir)
         .select(expr("(event_id div 20) % 2").as("wave"), col("event_type"),
           round(col("value") * lit(100.0)).cast("long").as("cents"))
@@ -728,22 +727,11 @@ object StreamOps {
         // (value < 0.005) carry no spend signal and are excluded in
         // BOTH the stream and the cumulative-prefix oracle
         .filter(col("cents") > 0L)
-      stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
-      stageVersionFile(d.filter(col("wave") === 1), s"$st/f1.parquet")
-      val oneWave = d.groupBy("event_type")
-        .agg(countDistinct(col("wave")).as("nw"))
-        .filter(col("nw") < 2).count()
-      require(oneWave == 0L,
-        s"$oneWave event_type(s) absent from a wave — staged value " +
-          "waves no longer satisfy the every-key-in-both-waves " +
-          "contract the cumulative-prefix oracle assumes")
+      requireEveryKeyInBothWaves(d, "event_type")
+      waves(d)
     }
-    drain(spark, Seq(staging)) { s =>
-      val stream = stagedFileStream(s, StructType(Seq(
-          StructField("wave", LongType), StructField("event_type", StringType),
-          StructField("cents", LongType))), staging)
-      streamingLogBucketQuantiles(stream.as[QuantPoint]).toDF()
-    }
+    drain(spark, Seq(staged.path))(s =>
+      streamingLogBucketQuantiles(staged.stream(s).as[QuantPoint]).toDF())
   }
 
   // --- streaming decontamination gate -----------------------------------
@@ -762,7 +750,7 @@ object StreamOps {
   def runStreamingDecontaminateAvailableNow(spark: SparkSession, dir: String,
       numBits: Int, numHashes: Int, salt: String): DataFrame = {
     import graft.operators.{Dedup, Sketch}
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.read(spark, dir, "documents")
     def sh(c: org.apache.spark.sql.Column) =
       array_distinct(Dedup.shingles(c, 3))
     val evalSh = docs.filter(col("doc_id") % 97 === 0)
@@ -770,15 +758,10 @@ object StreamOps {
     val bits = Array.fill(numBits)(false)
     Sketch.bloomBuild(evalSh, "shingle", numBits, numHashes, salt)
       .collect().foreach(r => bits(r.getLong(0).toInt) = true)
-    val staging = stagedDir(spark, "decon", dir) { st =>
-      val d = docs.filter(col("doc_id") % 97 =!= 0)
-        .select(expr("(doc_id div 20) % 2").as("wave"), col("doc_id"),
-          col("text"))
-      stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
-      stageVersionFile(d.filter(col("wave") === 1), s"$st/f1.parquet")
-    }
-    drain(spark, Seq(staging))(s =>
-      waveTextStream(s, staging)
+    val staged = stagedDir(spark, "decon", dir)(
+      crawlWaves(docs.filter(col("doc_id") % 97 =!= 0), "doc_id", "text"))
+    drain(spark, Seq(staged.path))(s =>
+      staged.stream(s)
         .withColumn("__sh", sh(col("text")))
         .select(col("doc_id"), col("wave"),
           size(col("__sh")).cast("long").as("n_sh"),
@@ -802,19 +785,10 @@ object StreamOps {
   def runStreamingHtmlExtractAvailableNow(spark: SparkSession, dir: String,
       corpus: DataFrame, minChars: Int,
       maxLinkDensityMicros: Long): DataFrame = {
-    val staging = stagedDir(spark, "htmlx", dir) { st =>
-      val d = corpus.select(expr("(doc_id div 20) % 2").as("wave"),
-        col("doc_id"), col("html"))
-      stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
-      stageVersionFile(d.filter(col("wave") === 1), s"$st/f1.parquet")
-    }
-    drain(spark, Seq(staging)) { s =>
-      val stream = stagedFileStream(s, StructType(Seq(
-          StructField("wave", LongType), StructField("doc_id", LongType),
-          StructField("html", StringType))), staging)
+    val staged = stagedDir(spark, "htmlx", dir)(crawlWaves(corpus, "doc_id", "html"))
+    drain(spark, Seq(staged.path))(s =>
       graft.operators.Extract.mainContent(
-        stream, "doc_id", "html", minChars, maxLinkDensityMicros)
-    }
+        staged.stream(s), "doc_id", "html", minChars, maxLinkDensityMicros))
   }
 
   /** STREAMING quality gate: the q154/q155 classifier trained ONCE in
@@ -828,20 +802,15 @@ object StreamOps {
   def runStreamingQualityGateAvailableNow(spark: SparkSession, dir: String,
       lr: Double, iterations: Int): DataFrame = {
     import graft.operators.LinearModel
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
     // board-shared memoized model (identical training in q154/q155/
     // q159/q161/q162/q163 — the fitted weights, trained once per app)
     val weights = LinearModel.qualityCorpusTrajectory(spark, dir,
       lr, iterations).last.weights
-    val staging = stagedDir(spark, "qgate", dir) { st =>
-      val d = docs.select(expr("(doc_id div 20) % 2").as("wave"),
-        col("doc_id"), col("text"))
-      stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
-      stageVersionFile(d.filter(col("wave") === 1), s"$st/f1.parquet")
-    }
-    drain(spark, Seq(staging))(s =>
+    val staged = stagedDir(spark, "qgate", dir)(
+      crawlWaves(Tables.read(spark, dir, "documents"), "doc_id", "text"))
+    drain(spark, Seq(staged.path))(s =>
       LinearModel.scoreLinear(
-          LinearModel.qualityTrainingFrame(waveTextStream(s, staging),
+          LinearModel.qualityTrainingFrame(staged.stream(s),
             keepCols = Seq("wave")),
           LinearModel.qualityFeatureCols, weights)
         .select(col("doc_id"), col("wave"), col("p"), col("pred"),
@@ -858,13 +827,8 @@ object StreamOps {
     * pass per wave at crawl rate. */
   def runStreamingDriftMonitorAvailableNow(spark: SparkSession,
       dir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val staging = stagedDir(spark, "drift", dir) { st =>
-      val d = docs.select(expr("(doc_id div 20) % 2").as("wave"),
-        col("doc_id"), col("text"))
-      stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
-      stageVersionFile(d.filter(col("wave") === 1), s"$st/f1.parquet")
-    }
+    val staged = stagedDir(spark, "drift", dir)(
+      crawlWaves(Tables.read(spark, dir, "documents"), "doc_id", "text"))
     val t = col("text")
     val tok = split(lower(t), "\\s+")
     val enStop = array(
@@ -876,7 +840,7 @@ object StreamOps {
       .cast("long")
     val buf = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.Row]
-    replayEachBatch(spark, Seq(staging))(waveTextStream(_, staging)) {
+    replayEachBatch(spark, Seq(staged.path))(staged.stream) {
       (df: DataFrame, _: Long) =>
         // one wave per staged file → one counters row per micro-batch
         buf ++= df.groupBy(col("wave"))
@@ -911,27 +875,17 @@ object StreamOps {
       plants: Seq[(Long, String)], patterns: Seq[String],
       maxHits: Int): DataFrame = {
     import spark.implicits._
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-      .unionByName(plants.toDF("doc_id", "text"))
-    // the staged CONTENT depends on the plants — fingerprint them into
-    // the cache key so two callers with different plants never share
-    // a staging dir (the q247 spec-vs-query collision). A strong md5
-    // digest, not hashCode: a hashCode collision between two configs
-    // would silently reintroduce exactly that sharing.
-    val fp = java.security.MessageDigest.getInstance("MD5")
-      .digest((plants.map { case (id, t) => s"$id\u0001$t" } ++
-        Seq("\u0002") ++ patterns).mkString("\u0003").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val staging = stagedDir(spark, s"blgate_$fp", dir) { st =>
-      val d = docs.select(expr("(doc_id div 20) % 2").as("wave"),
-        col("doc_id"), col("text"))
-      stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
-      stageVersionFile(d.filter(col("wave") === 1), s"$st/f1.parquet")
+    // the staged content depends on the plants: they are params, so two
+    // callers with different plants never share a staging dir
+    val staged = stagedDir(spark, "blgate", dir, Seq(plants)) {
+      val docs = Tables.read(spark, dir, "documents")
+        .select(col("doc_id"), col("text"))
+        .unionByName(plants.toDF("doc_id", "text"))
+      crawlWaves(docs, "doc_id", "text")
     }
-    drain(spark, Seq(staging))(s =>
+    drain(spark, Seq(staged.path))(s =>
       graft.operators.Blocklist.screen(
-          waveTextStream(s, staging), "doc_id", "text", patterns, maxHits)
+          staged.stream(s), "doc_id", "text", patterns, maxHits)
         .select(col("doc_id"), col("wave"), col("total_hits"),
           col("n_patterns_hit"), col("blocklist_keep")))
   }
@@ -949,18 +903,12 @@ object StreamOps {
     * function of doc_id. */
   def runStreamingLangIdGateAvailableNow(spark: SparkSession, dir: String,
       allowed: Seq[String]): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text"), col("lang"))
     val f = graft.operators.TextAnalysis.langIdCorpusModel(spark, dir)
     val (model, langs, w, p) = (f.model, f.langs, f.weights, f.priors)
-    val staging = stagedDir(spark, "langidgate", dir) { st =>
-      val d = docs.select(expr("(doc_id div 20) % 2").as("wave"),
-        col("doc_id"), col("text"))
-      stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
-      stageVersionFile(d.filter(col("wave") === 1), s"$st/f1.parquet")
-    }
-    drain(spark, Seq(staging))(s =>
-      waveTextStream(s, staging)
+    val staged = stagedDir(spark, "langidgate", dir)(
+      crawlWaves(Tables.read(spark, dir, "documents"), "doc_id", "text"))
+    drain(spark, Seq(staged.path))(s =>
+      staged.stream(s)
         .withColumn("__r", graft.operators.TextAnalysis.langIdScore(
           col("text"), langs, w, p, model.buckets, model.n, model.maxChars,
           model.salt))
@@ -1015,23 +963,14 @@ object StreamOps {
   def runStreamingQuotaGateAvailableNow(spark: SparkSession, dir: String,
       budget: Long, alpha: Double): DataFrame = {
     import spark.implicits._
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.read(spark, dir, "documents")
     val quotas = graft.operators.Curation.temperatureQuotas(
         docs, "source", budget, alpha)
       .select(col("source"), col("quota"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val staging = stagedDir(spark, "quotagate", dir) { st =>
-      val d = docs.select(expr("(doc_id div 20) % 2").as("wave"),
-        col("doc_id"), col("source"))
-      stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
-      stageVersionFile(d.filter(col("wave") === 1), s"$st/f1.parquet")
-    }
-    drain(spark, Seq(staging)) { s =>
-      val stream = stagedFileStream(s, StructType(Seq(
-          StructField("wave", LongType), StructField("doc_id", LongType),
-          StructField("source", StringType))), staging)
-      streamingQuotaGate(stream.as[QuotaDoc], quotas).toDF()
-    }
+    val staged = stagedDir(spark, "quotagate", dir)(crawlWaves(docs, "doc_id", "source"))
+    drain(spark, Seq(staged.path))(s =>
+      streamingQuotaGate(staged.stream(s).as[QuotaDoc], quotas).toDF())
   }
 
   /** The deterministic "arriving crawl" of the incremental near-dup
@@ -1064,21 +1003,16 @@ object StreamOps {
     * resends Bloom provably cannot. */
   def runStreamingNeardupGateAvailableNow(spark: SparkSession,
       dir: String, rejectAgree: Int): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.read(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     val idxSigs = graft.operators.Dedup.minhashSignatures(
       docs, "text", "doc_id").localCheckpoint(true)
-    val staging = stagedDir(spark, "neardupgate", dir) { st =>
-      val d = neardupArrivals(docs)
-        .select(expr("(doc_id div 20) % 2").as("wave"),
-          col("doc_id"), col("text"))
-      stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
-      stageVersionFile(d.filter(col("wave") === 1), s"$st/f1.parquet")
-    }
+    val staged = stagedDir(spark, "neardupgate", dir)(
+      crawlWaves(neardupArrivals(docs), "doc_id", "text"))
     val work = graft.WorkDirs.create("graft_neardupgate_run_")
     val outDir = s"$work/out"
-    replayEachBatch(spark, Seq(staging), Some(s"$work/ckpt"))(
-        waveTextStream(_, staging)) { (b: DataFrame, _: Long) =>
+    replayEachBatch(spark, Seq(staged.path), Some(s"$work/ckpt"))(
+        staged.stream) { (b: DataFrame, _: Long) =>
       graft.operators.Dedup.neardupAdmission(idxSigs,
           graft.operators.Dedup.minhashSignatures(
             b.select(col("doc_id"), col("text")), "text", "doc_id"),
@@ -1101,17 +1035,11 @@ object StreamOps {
     * aggregate per wave; no state store. */
   def runStreamingTopicMonitorAvailableNow(spark: SparkSession, dir: String,
       categories: Seq[(String, Seq[String])]): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val staging = stagedDir(spark, "topicmon", dir) { st =>
-      val d = docs.select(expr("(doc_id div 20) % 2").as("wave"),
-        col("doc_id"), col("text"))
-      stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
-      stageVersionFile(d.filter(col("wave") === 1), s"$st/f1.parquet")
-    }
+    val staged = stagedDir(spark, "topicmon", dir)(
+      crawlWaves(Tables.read(spark, dir, "documents"), "doc_id", "text"))
     val buf = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.Row]
-    replayEachBatch(spark, Seq(staging))(waveTextStream(_, staging)) {
+    replayEachBatch(spark, Seq(staged.path))(staged.stream) {
       (df: DataFrame, _: Long) =>
         buf ++= graft.operators.Blocklist.categorize(df, "doc_id", "text",
             categories)
@@ -1142,20 +1070,15 @@ object StreamOps {
   def runStreamingDsirGateAvailableNow(spark: SparkSession, dir: String,
       thresholdMicros: Long): DataFrame = {
     import graft.operators.Curation
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.read(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     val model = Curation.dsirTrain(
       docs.filter(col("doc_id") % 7 === 0),
       docs.filter(col("doc_id") % 7 =!= 0), "text")
-    val staging = stagedDir(spark, "dsirgate", dir) { st =>
-      val d = docs.select(expr("(doc_id div 20) % 2").as("wave"),
-        col("doc_id"), col("text"))
-      stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
-      stageVersionFile(d.filter(col("wave") === 1), s"$st/f1.parquet")
-    }
+    val staged = stagedDir(spark, "dsirgate", dir)(crawlWaves(docs, "doc_id", "text"))
     val buf = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.Row]
-    replayEachBatch(spark, Seq(staging))(waveTextStream(_, staging)) {
+    replayEachBatch(spark, Seq(staged.path))(staged.stream) {
       (df: DataFrame, _: Long) =>
         buf ++= Curation.dsirScore(df, "doc_id", "text", model)
           .join(df.select(col("doc_id"), col("wave")), Seq("doc_id"))
@@ -1192,19 +1115,12 @@ object StreamOps {
   def runStreamingWeightedSampleAvailableNow(spark: SparkSession,
       dir: String, k: Int = 20, salt: String = "wsr173"): DataFrame = {
     import graft.operators.Curation
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val staging = stagedDir(spark, "wsample", dir) { st =>
-      val d = docs.select(expr("(doc_id div 20) % 2").as("wave"),
-        col("doc_id"), col("n_chars"))
-      stageVersionFile(d.filter(col("wave") === 0), s"$st/f0.parquet")
-      stageVersionFile(d.filter(col("wave") === 1), s"$st/f1.parquet")
-    }
+    val staged = stagedDir(spark, "wsample", dir)(
+      crawlWaves(Tables.read(spark, dir, "documents"), "doc_id", "n_chars"))
     // running sample: (key_micro, doc_id, weight), capped at k
     val state = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
     val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    replayEachBatch(spark, Seq(staging))(stagedFileStream(_, StructType(Seq(
-        StructField("wave", LongType), StructField("doc_id", LongType),
-        StructField("n_chars", LongType))), staging)) { (df: DataFrame, _: Long) =>
+    replayEachBatch(spark, Seq(staged.path))(staged.stream) { (df: DataFrame, _: Long) =>
         val batchTop = df
           .select(col("wave"), col("doc_id"),
             col("n_chars").cast("double").as("weight"))
@@ -1290,26 +1206,19 @@ object StreamOps {
     * rest are edits (pass, modulo the deterministic FP rate). */
   def runStreamingBloomDedupAvailableNow(spark: SparkSession, dir: String,
       numBits: Int, numHashes: Int, salt: String, shards: Int): DataFrame = {
-    val staging = stagedDir(spark, "bloomdedup", dir) { st =>
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
-      stageVersionFile(
-        docs.select(lit(0L).as("wave"), col("doc_id"), col("text")),
-        s"$st/f0.parquet")
-      stageVersionFile(
+    // this op's PER-ROW output depends on cross-file fold order
+    // (first-arrival-sets-the-bits): the staged order folds wave 0 first
+    val staged = stagedDir(spark, "bloomdedup", dir) {
+      val docs = Tables.read(spark, dir, "documents")
+      Seq(docs.select(lit(0L).as("wave"), col("doc_id"), col("text")),
         docs.select(lit(1L).as("wave"),
           (col("doc_id") + 10000000L).as("doc_id"),
           when(col("doc_id") % 3 === 0, col("text"))
-            .otherwise(concat(col("text"), lit(" v1"))).as("text")),
-        s"$st/f1.parquet")
-      // this op's PER-ROW output depends on cross-file fold order
-      // (first-arrival-sets-the-bits), and FileStreamSource orders by
-      // mtime with an unspecified tie-break — pin strictly increasing
-      // mtimes so wave 0 always folds first
-      forceMtimeOrder(Seq(s"$st/f0.parquet", s"$st/f1.parquet"))
+            .otherwise(concat(col("text"), lit(" v1"))).as("text")))
     }
     import spark.implicits._
-    drain(spark, Seq(staging)) { s =>
-      val stream = waveTextStream(s, staging)
+    drain(spark, Seq(staged.path)) { s =>
+      val stream = staged.stream(s)
         .withColumn("dig", md5(col("text")))
         .withColumn("shard",
           pmod(conv(substring(md5(concat(lit("shard:"), col("dig"))), 1, 14),
@@ -1318,6 +1227,13 @@ object StreamOps {
       streamingBloomDedup(stream.as[BloomDoc], numBits, numHashes, salt).toDF()
     }
   }
+
+  /** The query waves of the serving replays (q150, q284): every 50th
+    * embedding, `vec_id % 100 = 0` as wave 0 and the rest as wave 1. */
+  private def queryWaves(spark: SparkSession, dir: String): Seq[DataFrame] =
+    wavesBy(Tables.read(spark, dir, "embeddings").filter(col("vec_id") % 50 === 0)
+        .select(col("vec_id"), col("embedding")),
+      col("vec_id") % 100 === 0, col("vec_id") % 100 =!= 0)
 
   /** ONLINE RETRIEVAL SERVING: a stream of query vectors answered
     * against a STATIC corpus index — the per-batch stateless form of
@@ -1336,23 +1252,13 @@ object StreamOps {
     * micro-batch the query arrived in. */
   def runStreamingRetrievalAvailableNow(spark: SparkSession, dir: String,
       prefixDim: Int, c1: Int, c2: Int, k: Int): DataFrame = {
-    val staging = stagedDir(spark, "retrieval", dir) { st =>
-      val qs = spark.read.parquet(s"$dir/embeddings.parquet")
-        .filter(col("vec_id") % 50 === 0)
-      stageVersionFile(qs.filter(col("vec_id") % 100 === 0)
-        .select(lit(0L).as("wave"), col("vec_id"), col("embedding")),
-        s"$st/w0.parquet")
-      stageVersionFile(qs.filter(col("vec_id") % 100 =!= 0)
-        .select(lit(1L).as("wave"), col("vec_id"), col("embedding")),
-        s"$st/w1.parquet")
-    }
-    val corpus = spark.read.parquet(s"$dir/embeddings.parquet")
+    val staged = stagedDir(spark, "retrieval", dir)(queryWaves(spark, dir))
+    val corpus = Tables.read(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-    val sch = spark.read.parquet(s"$staging/w0.parquet").schema
     val work = graft.WorkDirs.create("graft_retrieval_run_")
     val outDir = s"$work/out"
-    replayEachBatch(spark, Seq(staging), Some(s"$work/ckpt"))(
-        stagedFileStream(_, sch, staging)) { (batch: DataFrame, _: Long) =>
+    replayEachBatch(spark, Seq(staged.path), Some(s"$work/ckpt"))(
+        staged.stream) { (batch: DataFrame, _: Long) =>
       val queries = batch.select(col("wave"), col("vec_id"),
         col("embedding").cast("array<double>").as("embedding"))
       graft.operators.Ann.retrievalCascade(
@@ -1429,9 +1335,9 @@ object StreamOps {
                                        depth: Int, width: Int, salt: String,
                                        probes: Seq[String]): DataFrame = {
     import spark.implicits._
-    val staging = tokenWaves(spark, dir)
-    drain(spark, Seq(staging))(s =>
-      streamingCountMin(tokenWaveStream(s, staging).as[CmTok],
+    val staged = tokenWaves(spark, dir)
+    drain(spark, Seq(staged.path))(s =>
+      streamingCountMin(staged.stream(s).as[CmTok],
         depth, width, salt, probes).toDF())
   }
 
@@ -1474,9 +1380,6 @@ object StreamOps {
       }
   }
 
-  /** Drive [[streamingFunnel]] through the engine: events staged as
-    * two time-split waves (cross-batch state carries partial
-    * progress). */
   // --- late-data semantics ----------------------------------------------
 
   /** Watermark LATE-DATA semantics, pinned end to end: a tumbling
@@ -1492,12 +1395,13 @@ object StreamOps {
     * still in state — StreamOpsSpec pins the drop count). The result
     * is therefore closed-form over the batch table: counts EXCLUDING
     * the late set, for windows ending ≤ (ms-truncated max − delay).
+    * Returns the rows and the number of rows the watermark dropped.
     * This is the correctness contract a 100 TB streaming ingest lives
     * by: lateness is bounded and EXPLICIT, not silently double
     * counted. */
   def runLateDataRollupAvailableNow(spark: SparkSession, dir: String,
-                                    delayMinutes: Int = 10): DataFrame = {
-    val staging = stagedDir(spark, "latedata", dir) { staging =>
+                                    delayMinutes: Int = 10): (DataFrame, Long) = {
+    val staged = stagedDir(spark, "latedata", dir) {
       val tsUs = unix_micros(col("ts"))
       val ev = graft.sources.EventsLoader.events(spark, dir)
         .select(col("event_id"), col("ts"), col("event_type"))
@@ -1507,30 +1411,19 @@ object StreamOps {
         tsUs < lit(mn + (mx - mn) / 2)
       val tsplit = mn + (mx - mn) * 3 / 5
       val onTime = ev.filter(!isLate)
-      stageVersionFile(onTime.filter(tsUs < lit(tsplit)),
-        s"$staging/f0.parquet")
-      stageVersionFile(onTime.filter(tsUs >= lit(tsplit)),
-        s"$staging/f1.parquet")
-      stageVersionFile(ev.filter(isLate), s"$staging/f2.parquet")
+      Seq(onTime.filter(tsUs < lit(tsplit)), onTime.filter(tsUs >= lit(tsplit)),
+        ev.filter(isLate))
     }
-    val (rows, finished) = drainQuery(spark, Seq(staging), OutputMode.Append())(s =>
-      stagedFileStream(s, StructType(Seq(
-          StructField("event_id", LongType), StructField("ts", TimestampType),
-          StructField("event_type", StringType))), staging)
+    val (rows, finished) = drainQuery(spark, Seq(staged.path), OutputMode.Append())(s =>
+      staged.stream(s)
         .withWatermark("ts", s"$delayMinutes minutes")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n_events"))
         .select(unix_micros(col("window.start")).as("win_start_us"),
           col("event_type"), col("n_events")))
-    lastLateDropCount = finished.recentProgress
-      .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
-    rows
+    (rows, finished.recentProgress
+      .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum)
   }
-
-  /** numRowsDroppedByWatermark summed over the LAST
-    * [[runLateDataRollupAvailableNow]] run — test observability for
-    * the drop side of the late-data contract. */
-  @volatile var lastLateDropCount: Long = -1L
 
   // --- streaming EWMA ----------------------------------------------------
 
@@ -1574,26 +1467,29 @@ object StreamOps {
   def runStreamingEwmaAvailableNow(spark: SparkSession, dir: String,
                                    alpha: Double): DataFrame = {
     import spark.implicits._
-    val staging = stagedDir(spark, "ewma", dir) { staging =>
-      val ev = graft.sources.EventsLoader.events(spark, dir)
-        .filter(col("event_type") === "signup" || col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("ts_us"), col("value").as("x"))
-      val mid = ev.agg(((min(col("ts_us")) + max(col("ts_us"))) / 2).cast("long"))
-        .head().getLong(0)
-      stageVersionFile(ev.filter(col("ts_us") < mid), s"$staging/f0.parquet")
-      stageVersionFile(ev.filter(col("ts_us") >= mid), s"$staging/f1.parquet")
-    }
-    drain(spark, Seq(staging))(s =>
-      streamingEwma(seriesStream(s, staging).as[EwmaEvent], alpha).toDF())
+    val staged = seriesWaves(spark, dir)
+    drain(spark, Seq(staged.path))(s =>
+      streamingEwma(staged.stream(s).as[EwmaEvent], alpha).toDF())
   }
 
-  /** The staged (user_id, event_id, ts_us, x) series of the EWMA and
-    * Holt replays as a stream on `spark`, one file per micro-batch. */
-  private def seriesStream(spark: SparkSession, staging: String): DataFrame =
-    stagedFileStream(spark, StructType(Seq(
-        StructField("user_id", LongType), StructField("event_id", LongType),
-        StructField("ts_us", LongType), StructField("x", DoubleType))), staging)
+  /** The signup/purchase (user_id, event_id, ts_us, x) series of the
+    * EWMA and Holt replays, staged as two time-split waves. */
+  private def seriesWaves(spark: SparkSession, dir: String): Staged =
+    stagedDir(spark, "series", dir)(timeSplit(signupsAndPurchases(spark, dir)
+      .select(col("user_id"), col("event_id"),
+        unix_micros(col("ts")).as("ts_us"), col("value").as("x"))))
+
+  private def signupsAndPurchases(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.EventsLoader.events(spark, dir)
+      .filter(col("event_type") === "signup" || col("event_type") === "purchase")
+
+  /** `ev` split at the midpoint of its `ts_us` range: the earlier half,
+    * then the later, so arrival order respects event order. */
+  private def timeSplit(ev: DataFrame): Seq[DataFrame] = {
+    val mid = ev.agg(((min(col("ts_us")) + max(col("ts_us"))) / 2).cast("long"))
+      .head().getLong(0)
+    Seq(ev.filter(col("ts_us") < mid), ev.filter(col("ts_us") >= mid))
+  }
 
   case class HoltEvent(user_id: Long, event_id: Long, ts_us: Long, x: Double)
   case class HoltOut(user_id: Long, event_id: Long, ts_us: Long,
@@ -1700,7 +1596,7 @@ object StreamOps {
   def runStreamingHoltWintersAvailableNow(spark: SparkSession, dir: String,
       period: Int, alpha: Double, beta: Double, gamma: Double): DataFrame = {
     import spark.implicits._
-    val staging = stagedDir(spark, "holtwinters", dir) { staging =>
+    val staged = stagedDir(spark, "holtwinters", dir) {
       val hourly = graft.sources.EventsLoader.events(spark, dir)
         .groupBy(col("event_type"),
           date_trunc("hour", col("ts")).as("__h"))
@@ -1712,36 +1608,21 @@ object StreamOps {
         .select(col("event_type"), col("rn"), col("x"))
       val mid = hourly.agg(((min(col("rn")) + max(col("rn"))) / 2)
         .cast("long")).head().getLong(0)
-      stageVersionFile(hourly.filter(col("rn") < mid).orderBy("event_type", "rn"),
-        s"$staging/f0.parquet")
-      stageVersionFile(hourly.filter(col("rn") >= mid).orderBy("event_type", "rn"),
-        s"$staging/f1.parquet")
+      Seq(hourly.filter(col("rn") < mid), hourly.filter(col("rn") >= mid))
+        .map(_.orderBy("event_type", "rn"))
     }
-    drain(spark, Seq(staging)) { s =>
-      val src = stagedFileStream(s, StructType(Seq(
-          StructField("event_type", StringType), StructField("rn", LongType),
-          StructField("x", DoubleType))), staging)
-        .as[HwPoint]
-      streamingHoltWinters(src, period, alpha, beta, gamma).toDF()
-    }
+    drain(spark, Seq(staged.path))(s =>
+      streamingHoltWinters(staged.stream(s).as[HwPoint], period, alpha, beta, gamma)
+        .toDF())
   }
 
   /** Drive [[streamingHolt]] over the q101 staging shape. */
   def runStreamingHoltAvailableNow(spark: SparkSession, dir: String,
                                    alpha: Double, beta: Double): DataFrame = {
     import spark.implicits._
-    val staging = stagedDir(spark, "holt", dir) { staging =>
-      val ev = graft.sources.EventsLoader.events(spark, dir)
-        .filter(col("event_type") === "signup" || col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("ts_us"), col("value").as("x"))
-      val mid = ev.agg(((min(col("ts_us")) + max(col("ts_us"))) / 2).cast("long"))
-        .head().getLong(0)
-      stageVersionFile(ev.filter(col("ts_us") < mid), s"$staging/f0.parquet")
-      stageVersionFile(ev.filter(col("ts_us") >= mid), s"$staging/f1.parquet")
-    }
-    drain(spark, Seq(staging))(s =>
-      streamingHolt(seriesStream(s, staging).as[HoltEvent], alpha, beta).toDF())
+    val staged = seriesWaves(spark, dir)
+    drain(spark, Seq(staged.path))(s =>
+      streamingHolt(staged.stream(s).as[HoltEvent], alpha, beta).toDF())
   }
 
   // --- streaming SCD-2 --------------------------------------------------
@@ -1787,44 +1668,24 @@ object StreamOps {
     * two time-split micro-batches. */
   def runStreamingScd2AvailableNow(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val staging = stagedDir(spark, "scd2", dir) { staging =>
-      val ev = graft.sources.EventsLoader.events(spark, dir)
-        .filter(col("event_type") === "signup" || col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("ts_us"),
-          round(col("value") * 1000).cast("long").as("value_milli"))
-      val mid = ev.agg(((min(col("ts_us")) + max(col("ts_us"))) / 2).cast("long"))
-        .head().getLong(0)
-      stageVersionFile(ev.filter(col("ts_us") < mid), s"$staging/f0.parquet")
-      stageVersionFile(ev.filter(col("ts_us") >= mid), s"$staging/f1.parquet")
-    }
-    drain(spark, Seq(staging)) { s =>
-      val src = stagedFileStream(s, StructType(Seq(
-          StructField("user_id", LongType), StructField("event_id", LongType),
-          StructField("ts_us", LongType), StructField("value_milli", LongType))), staging)
-        .as[Scd2Event]
-      streamingScd2(src).toDF()
-    }
+    val staged = stagedDir(spark, "scd2", dir)(timeSplit(signupsAndPurchases(spark, dir)
+      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"),
+        round(col("value") * 1000).cast("long").as("value_milli"))))
+    drain(spark, Seq(staged.path))(s =>
+      streamingScd2(staged.stream(s).as[Scd2Event]).toDF())
   }
 
+  /** Drive [[streamingFunnel]] through the engine: events staged as
+    * two time-split waves (cross-batch state carries partial
+    * progress). */
   def runStreamingFunnelAvailableNow(spark: SparkSession, dir: String,
                                      stages: Seq[String]): DataFrame = {
     import spark.implicits._
-    val staging = stagedDir(spark, "funnel", dir) { staging =>
-      val ev = graft.sources.EventsLoader.events(spark, dir)
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("event_type"))
-      val mid = ev.agg(((min(col("ts_us")) + max(col("ts_us"))) / 2).cast("long"))
-        .head().getLong(0)
-      stageVersionFile(ev.filter(col("ts_us") < mid), s"$staging/f0.parquet")
-      stageVersionFile(ev.filter(col("ts_us") >= mid), s"$staging/f1.parquet")
-    }
-    drain(spark, Seq(staging)) { s =>
-      val src = stagedFileStream(s, StructType(Seq(
-          StructField("user_id", LongType), StructField("ts_us", LongType),
-          StructField("event_type", StringType))), staging)
-        .as[FunnelEvent]
-      streamingFunnel(src, stages).toDF()
-    }
+    val staged = stagedDir(spark, "funnel", dir)(timeSplit(
+      graft.sources.EventsLoader.events(spark, dir)
+        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("event_type"))))
+    drain(spark, Seq(staged.path))(s =>
+      streamingFunnel(staged.stream(s).as[FunnelEvent], stages).toDF())
   }
 
   // --- streaming exact dedup --------------------------------------------
@@ -1857,7 +1718,7 @@ object StreamOps {
       streamingExactDedup(dedupSource(s, stagingDir), "text", "ts", watermarkDelay))
 
   private[graft] def dedupSource(spark: SparkSession, stagingDir: String): DataFrame =
-    stagedFileStream(spark, upsertSchema, stagingDir)
+    Staged(stagingDir, upsertSchema).stream(spark)
       // synthetic event time: one minute per version, so every batch's
       // watermark trails all retained state during the drain
       .withColumn("ts",
@@ -1906,15 +1767,12 @@ object StreamOps {
     StructField("doc_id", LongType), StructField("version", LongType),
     StructField("text", StringType)))
 
-  /** Write `df` as ONE parquet FILE at `filePath` (FileStreamSource
-    * lists plain files; a Spark output directory would not glob as
-    * one unit). */
   /** Pin strictly increasing modification times (2 s apart, ending
     * now) on the given staged files, in order — FileStreamSource
     * sorts by mtime with an unspecified tie-break, and same-clock-tick
     * staging would otherwise leave multi-file processing order to the
     * filesystem's listing. */
-  def forceMtimeOrder(paths: Seq[String]): Unit = {
+  private def forceMtimeOrder(paths: Seq[String]): Unit = {
     val base = System.currentTimeMillis() - 2000L * paths.size
     paths.zipWithIndex.foreach { case (p, i) =>
       java.nio.file.Files.setLastModifiedTime(
@@ -1923,6 +1781,9 @@ object StreamOps {
     }
   }
 
+  /** Write `df` as ONE parquet FILE at `filePath` (FileStreamSource
+    * lists plain files; a Spark output directory would not glob as
+    * one unit). */
   def stageVersionFile(df: DataFrame, filePath: String): Unit = {
     val spark = df.sparkSession
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -2053,7 +1914,7 @@ object StreamOps {
                      embedder: graft.embed.Embedder,
                      codebook: DataFrame): Unit = {
     replayEachBatch(spark, Seq(stagingDir), Some(checkpointDir))(
-        stagedFileStream(_, upsertSchema, stagingDir)) { (batch: DataFrame, _: Long) =>
+        Staged(stagingDir, upsertSchema).stream) { (batch: DataFrame, _: Long) =>
       val assigned = graft.operators.Ann.ivfAssign(
           embedder.embed(batch, "text", "embedding"),
           "doc_id", "embedding", codebook, "cell", "cvec")
@@ -2119,7 +1980,7 @@ object StreamOps {
       StructField("doc_id", LongType), StructField("version", LongType),
       StructField("embedding", ArrayType(DoubleType))))
     replayEachBatch(spark, Seq(stagingDir), Some(checkpointDir))(
-        stagedFileStream(_, schema, stagingDir)) { (batch: DataFrame, _: Long) =>
+        Staged(stagingDir, schema).stream) { (batch: DataFrame, _: Long) =>
         val assigned = batch
           .withColumn("__vq", graft.operators.Cluster.microQuantize(
             col("embedding")))
@@ -2163,9 +2024,6 @@ object StreamOps {
     * assignment, encoding, and the per-(cell, doc) max-version merge. */
   def runStreamingPqIndexAvailableNow(spark: SparkSession,
       dir: String): DataFrame = {
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"),
-        col("embedding").cast("array<double>").as("embedding"))
     // frozen operating parameters from the memoized raw board — the
     // SAME (kCells=8, coarse=2, m=8, k=8, iter=1) tiers q266's cheap
     // raw preset trains ([[graft.operators.Ann.rawPqIndexMemo]]);
@@ -2177,16 +2035,17 @@ object StreamOps {
     val coarse = graft.operators.Cluster.KmeansMicroModel(
       idx.assign, idx.centroids)
     val books = idx.books
-    val staging = stagedDir(spark, "pqidx", dir) { st =>
-      stageVersionFile(e.select(col("vec_id").as("doc_id"),
-        lit(1L).as("version"), col("embedding")), s"$st/f0.parquet")
-      stageVersionFile(e.filter(col("vec_id") % 7 === 0)
-        .select(col("vec_id").as("doc_id"), lit(2L).as("version"),
-          reverse(col("embedding")).as("embedding")),
-        s"$st/f1.parquet")
+    val staged = stagedDir(spark, "pqidx", dir) {
+      val e = Tables.read(spark, dir, "embeddings")
+        .select(col("vec_id").as("doc_id"),
+          col("embedding").cast("array<double>").as("embedding"))
+      Seq(e.select(col("doc_id"), lit(1L).as("version"), col("embedding")),
+        e.filter(col("doc_id") % 7 === 0)
+          .select(col("doc_id"), lit(2L).as("version"),
+            reverse(col("embedding")).as("embedding")))
     }
     val work = graft.WorkDirs.create("graft_pqidx_run_")
-    ivfPqIndexUpsert(spark, staging, s"$work/target", s"$work/ckpt",
+    ivfPqIndexUpsert(spark, staged.path, s"$work/target", s"$work/ckpt",
       coarse.centroids, books, m = 8, subDim = 8)
     spark.read.parquet(s"$work/target")
       .select(col("cell").cast("long").as("cell"),
@@ -2208,25 +2067,15 @@ object StreamOps {
   def runStreamingGraphServeAvailableNow(spark: SparkSession, dir: String,
       degree: Int, rounds: Int, beam: Int, hops: Int,
       topK: Int): DataFrame = {
-    val staging = stagedDir(spark, "graphserve", dir) { st =>
-      val qs = spark.read.parquet(s"$dir/embeddings.parquet")
-        .filter(col("vec_id") % 50 === 0)
-      stageVersionFile(qs.filter(col("vec_id") % 100 === 0)
-        .select(lit(0L).as("wave"), col("vec_id"), col("embedding")),
-        s"$st/w0.parquet")
-      stageVersionFile(qs.filter(col("vec_id") % 100 =!= 0)
-        .select(lit(1L).as("wave"), col("vec_id"), col("embedding")),
-        s"$st/w1.parquet")
-    }
-    val corpus = spark.read.parquet(s"$dir/embeddings.parquet")
+    val staged = stagedDir(spark, "graphserve", dir)(queryWaves(spark, dir))
+    val corpus = Tables.read(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val graph = graft.operators.Ann.nnDescentGraphMemo(
       spark, dir, degree, rounds)
-    val sch = spark.read.parquet(s"$staging/w0.parquet").schema
     val work = graft.WorkDirs.create("graft_graphserve_run_")
     val outDir = s"$work/out"
-    replayEachBatch(spark, Seq(staging), Some(s"$work/ckpt"))(
-        stagedFileStream(_, sch, staging)) { (b: DataFrame, _: Long) =>
+    replayEachBatch(spark, Seq(staged.path), Some(s"$work/ckpt"))(
+        staged.stream) { (b: DataFrame, _: Long) =>
       graft.operators.Ann.graphBeamTopK(graph,
           b.select(col("vec_id"), col("embedding")), corpus,
           "vec_id", "embedding", beam, hops, topK)
@@ -2255,7 +2104,7 @@ object StreamOps {
     * replays assignment + frontier per wave. */
   def runStreamingSemanticDriftAvailableNow(spark: SparkSession,
       dir: String, k: Int, iterations: Int, grid: Int): DataFrame = {
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
+    val e = Tables.read(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), col("label"))
     val model = graft.operators.Cluster.kmeansMicroModel(
       e.filter(col("label") < 5).select(col("vec_id"), col("embedding")),
@@ -2263,20 +2112,13 @@ object StreamOps {
     val centroids = model.centroids.localCheckpoint(true)
     val refCells = model.assign.select(col("cell"))
       .withColumn("is_p", lit(true)).localCheckpoint(true)
-    val staging = stagedDir(spark, "semdrift", dir) { st =>
-      val s5 = e.filter(col("label") >= 5)
-      stageVersionFile(s5.filter(col("vec_id") % 3 === 0)
-        .select(lit(0L).as("wave"), col("vec_id"), col("embedding")),
-        s"$st/w0.parquet")
-      stageVersionFile(s5.filter(col("vec_id") % 3 =!= 0)
-        .select(lit(1L).as("wave"), col("vec_id"), col("embedding")),
-        s"$st/w1.parquet")
-    }
-    val sch = spark.read.parquet(s"$staging/w0.parquet").schema
+    val staged = stagedDir(spark, "semdrift", dir)(
+      wavesBy(e.filter(col("label") >= 5).select(col("vec_id"), col("embedding")),
+        col("vec_id") % 3 === 0, col("vec_id") % 3 =!= 0))
     val work = graft.WorkDirs.create("graft_semdrift_run_")
     val outDir = s"$work/out"
-    replayEachBatch(spark, Seq(staging), Some(s"$work/ckpt"))(
-        stagedFileStream(_, sch, staging)) { (b: DataFrame, _: Long) =>
+    replayEachBatch(spark, Seq(staged.path), Some(s"$work/ckpt"))(
+        staged.stream) { (b: DataFrame, _: Long) =>
       val wave = b.select(col("wave")).head().getLong(0)
       val asg = graft.operators.Cluster.assignToCentroids(
         b, "vec_id", "embedding", centroids)
@@ -2313,7 +2155,7 @@ object StreamOps {
       StructField("o_orderstatus", StringType),
       StructField("price_cents", LongType)))
     replayEachBatch(spark, Seq(stagingDir), Some(checkpointDir))(
-        stagedFileStream(_, schema, stagingDir))(
+        Staged(stagingDir, schema).stream)(
       (batch: DataFrame, _: Long) => cdcMergeBatch(batch, targetDir, nBuckets))
   }
 
@@ -2360,7 +2202,7 @@ object StreamOps {
                       embedder: graft.embed.Embedder,
                       nBuckets: Int = 16): Unit = {
     replayEachBatch(spark, Seq(stagingDir), Some(checkpointDir))(
-        stagedFileStream(_, upsertSchema, stagingDir))(
+        Staged(stagingDir, upsertSchema).stream)(
       (batch: DataFrame, _: Long) => upsertBatch(batch, targetDir, embedder, nBuckets))
   }
 }

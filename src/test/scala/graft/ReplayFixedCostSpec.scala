@@ -60,6 +60,20 @@ class ReplayFixedCostSpec extends SparkSpec with Matchers {
     jobs should be <= 2
   }
 
+  test("a warm q150 or q303 call infers no schema: at most 26 and 33 jobs") {
+    // each call used to infer the embeddings table's schema and its
+    // staged waves' schema with one job apiece: 27 and 35 jobs
+    val jobs = Seq("q150_stream_retrieval" -> 26, "q303_stream_semantic_drift" -> 33)
+      .map { case (name, bound) =>
+        val q = SparkEntry.queries(name)
+        (1 to 2).foreach(_ => q(spark, dir).collect())
+        name -> (graft.tools.JobCounter.count(spark)(q(spark, dir).collect())._2, bound)
+      }
+    withClue(s"(jobs, bound) per warm call: $jobs") {
+      jobs.foreach { case (_, (n, bound)) => n should be <= bound }
+    }
+  }
+
   test("50 q29 replays leave the context's listener count unchanged") {
     val q29 = SparkEntry.queries("q29_stream_rollup")
     q29(spark, dir).collect()

@@ -208,8 +208,8 @@ class StreamOpsSpec extends SparkSpec with Matchers {
 
   test("late-data contract: planted late rows are ALL dropped; only finalized windows emit") {
     val dir = "/root/testdata/sf0.001"
-    val streamed = StreamOps.runLateDataRollupAvailableNow(spark, dir)
-      .orderBy("win_start_us", "event_type").collect().toSeq
+    val (rows, dropped) = StreamOps.runLateDataRollupAvailableNow(spark, dir)
+    val streamed = rows.orderBy("win_start_us", "event_type").collect().toSeq
         val ev = graft.sources.EventsLoader.events(spark, dir)
       .select($"event_id", unix_micros($"ts").as("ts_us"), $"event_type")
     val Array(mn, mx) = ev.agg(min($"ts_us"), max($"ts_us"))
@@ -218,7 +218,7 @@ class StreamOpsSpec extends SparkSpec with Matchers {
       .filter($"event_id" % 11 === 0 && $"ts_us" < mn + (mx - mn) / 2).count()
     lateCount should be > 0L
     // every planted late row was dropped by the watermark
-    StreamOps.lastLateDropCount shouldBe lateCount
+    dropped shouldBe lateCount
     // and the emitted windows equal the keep-only closed form
     val wm = (mx / 1000) * 1000 - 600000000L
     val batch = ev

@@ -128,7 +128,7 @@ class StreamPartitionSpec extends SparkSpec with Matchers {
     val first = rows("q47_stream_dedup")
     (1 to 2).foreach(_ => rows("q47_stream_dedup") shouldBe first)
     (sdedupDirs -- before).size should be <= 1
-    val staging = StreamOps.stagedDir(spark, "sdedup", dir)(_ => fail("restaged"))
+    val staging = StreamOps.stagedDir(spark, "sdedup", dir)(fail("restaged")).path
     WorkDirs.registered(Paths.get(staging).getParent.toString) shouldBe true
   }
 }
