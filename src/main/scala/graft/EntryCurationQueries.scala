@@ -299,10 +299,10 @@ private[graft] trait EntryCurationQueries { this: SparkEntry.type =>
       .select(col("l_partkey").as("src"),
         lead(col("l_partkey"), 1).over(w).as("dst"))
       .filter(col("dst").isNotNull)
-    // checkpoint = false (measured): per-round eager pins cost 12
-    // extra jobs and LOST to the linear plan (5.5 s vs 3.2-4.1 s at
-    // sf0.1); the e/nodes pins inside Graph.hits are the win (5.8 ->
-    // 3.2 s)
+    // hits runs its rounds unpinned (measured): per-round eager pins
+    // cost 12 extra jobs and LOST to the linear plan (5.5 s vs
+    // 3.2-4.1 s at sf0.1); the e/nodes pins inside Graph.hits are the
+    // win (5.8 -> 3.2 s)
     Graph.hits(edges, "src", "dst", iterations = 3)
       .orderBy("node")
   }

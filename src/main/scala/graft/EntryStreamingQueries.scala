@@ -348,14 +348,6 @@ private[graft] trait EntryStreamingQueries { this: SparkEntry.type =>
       .select("doc_id", "byte_len", "content_md5", "magic_hex", "n_frames")
       .orderBy("doc_id")
 
-  /** Incremental embedding upsert through Structured Streaming
-    * (SURVEY §2.9's last planned extension): three staged versions of
-    * the documents table arrive one micro-batch each; only arriving
-    * rows are embedded; the parquet target is merged with
-    * max-version-wins (order-independent, so the streaming result
-    * equals the batch SQL oracle). Checked columns are the winning
-    * (doc_id, version, content md5) plus the embedding width — the
-    * dimension contract on the incrementally-embedded column. */
   /** STREAMING CDC merge ([[StreamOps.cdcStreamMerge]]): the q192
     * changelog applied as two seq-ordered micro-batch waves against
     * a bucketed parquet target — max-seq-wins per key, winning
@@ -385,6 +377,14 @@ private[graft] trait EntryStreamingQueries { this: SparkEntry.type =>
       .orderBy("o_orderstatus")
   }
 
+  /** Incremental embedding upsert through Structured Streaming
+    * (SURVEY §2.9's last planned extension): three staged versions of
+    * the documents table arrive one micro-batch each; only arriving
+    * rows are embedded; the parquet target is merged with
+    * max-version-wins (order-independent, so the streaming result
+    * equals the batch SQL oracle). Checked columns are the winning
+    * (doc_id, version, content md5) plus the embedding width — the
+    * dimension contract on the incrementally-embedded column. */
   private[graft] def q39(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val work = WorkDirs.create("graft_upsert_run_")

@@ -231,23 +231,21 @@ private[graft] trait EntryTextQueries { this: SparkEntry.type =>
       .orderBy("doc_id")
 
   /** BPE tokenizer training ([[graft.operators.Bpe.trainMerges]]):
-    * 8 merge rounds over the corpus vocabulary — pair counting as a
-    * map-combined aggregate, the merge decision a 1-row collect, the
-    * merge application a literal replace on the bracket-encoded
-    * symbol state. The whole merge trajectory (winning pair, its
-    * weighted count, and the post-merge corpus token count per
-    * round) hash-matches a DuckDB oracle unrolling the same rounds
-    * independently — argmax recomputed from the oracle's own state,
-    * not replayed from learned literals. Runs in BATCHED mode
-    * (mergesPerAction=16): provably sequential-equivalent multi-merge
-    * actions (Bpe.trainMergesBatched's prefix/chain/threat rules), so
-    * the hash is unchanged while the gate exercises the scale path;
-    * the driver-local tail variant is pinned by BpeSpec (64 merges:
-    * 7.4 s batched vs 24.5 s sequential, identical merge list —
-    * PERF.md "Round 10 BPE trainer scale modes"). */
+    * 8 merge rounds over the corpus vocabulary. The word-frequency
+    * table is aggregated once; the vocabulary fits the trainer's
+    * driver budget, so the rounds run as the exact driver fold
+    * (pair counts, (count DESC, lexical) argmax, greedy left-to-right
+    * non-overlapping merge). The whole merge trajectory (winning
+    * pair, its weighted count, and the post-merge corpus token count
+    * per round) hash-matches a DuckDB oracle unrolling the same
+    * rounds independently — argmax recomputed from the oracle's own
+    * state, not replayed from learned literals. BpeSpec pins the
+    * driver fold against the distributed fold and a brute-force
+    * reference (PERF.md "Round 10 BPE trainer scale modes": 64
+    * merges in 0.32 s on the driver against 24.5 s distributed,
+    * identical merge list). */
   private[graft] def q123(s: SparkSession, dir: String): DataFrame =
-    Bpe.trainMerges(t(s, dir, "documents"), "text", iterations = 8,
-        mergesPerAction = 16)
+    Bpe.trainMerges(t(s, dir, "documents"), "text", iterations = 8)
       .orderBy("iteration")
 
   /** Unicode NFC normalization
@@ -436,8 +434,7 @@ private[graft] trait EntryTextQueries { this: SparkEntry.type =>
     * engines. */
   private[graft] def q152(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val merges = Bpe.trainMerges(docs, "text", iterations = 8,
-      mergesPerAction = 16)
+    val merges = Bpe.trainMerges(docs, "text", iterations = 8)
     Bpe.encodeStats(docs, "doc_id", "text", merges).orderBy("doc_id")
   }
 

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
 
@@ -21,17 +21,11 @@ import org.apache.spark.sql.functions.udf
   */
 object GraftUdfs {
 
-  val cleanTokenUdf: UserDefinedFunction =
-    udf((w: String) => TextNlp.cleanToken(w))
-
   val cleanLabelUdf: UserDefinedFunction =
     udf((s: String) => TextNlp.cleanLabel(s))
 
   val tokensCleanDedupUdf: UserDefinedFunction =
     udf((s: String, maxLen: Int) => TextNlp.tokensCleanDedup(s, maxLen))
-
-  val embedTextUdf: UserDefinedFunction =
-    udf((s: String, maxLen: Int) => TextNlp.embedText(s, maxLen))
 
   val rootWordUdf: UserDefinedFunction =
     udf((w: String) => if (w == null) null else TextNlp.getRootWord(w))
@@ -39,20 +33,8 @@ object GraftUdfs {
   val numberWordsUdf: UserDefinedFunction =
     udf((d: String) => if (d == null) null else TextNlp.numberToWords(d))
 
-  def cleanToken(c: Column): Column = cleanTokenUdf(c)
   def cleanLabel(c: Column): Column = cleanLabelUdf(c)
   def rootWord(c: Column): Column = rootWordUdf(c)
   def numberWords(c: Column): Column = numberWordsUdf(c)
   def tokensCleanDedup(c: Column, maxLen: Column): Column = tokensCleanDedupUdf(c, maxLen)
-  def embedText(c: Column, maxLen: Column): Column = embedTextUdf(c, maxLen)
-
-  /** Register the UDF surface for `spark.sql(...)` users. */
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("clean_token", (w: String) => TextNlp.cleanToken(w))
-    spark.udf.register("clean_label", (s: String) => TextNlp.cleanLabel(s))
-    spark.udf.register("tokens_clean_dedup",
-      (s: String, n: Int) => TextNlp.tokensCleanDedup(s, n))
-    spark.udf.register("embed_text",
-      (s: String, n: Int) => TextNlp.embedText(s, n))
-  }
 }

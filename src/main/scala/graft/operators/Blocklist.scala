@@ -17,9 +17,8 @@ import graft.functions.AhoCorasickCountsExpr
   * corpus.
   *
   * Match semantics are leftmost non-overlapping per pattern (replace
-  * arithmetic — see the expression Scaladoc), exact-case; callers
-  * wanting case-insensitive screening pass `lower(text)` patterns
-  * and let [[hitCounts]] lower the text (the default).
+  * arithmetic — see the expression Scaladoc) over the lower-cased
+  * text, so the screen is case-insensitive for lower-case patterns.
   */
 object Blocklist {
 
@@ -33,10 +32,9 @@ object Blocklist {
     * still a pure projection (explode of a parameter-sized array),
     * no join against a pattern table. */
   def hitCounts(docs: DataFrame, idCol: String, textCol: String,
-      patterns: Seq[String], lowerCase: Boolean = true): DataFrame = {
-    val text = if (lowerCase) lower(col(textCol)) else col(textCol)
+      patterns: Seq[String]): DataFrame = {
     val pats = array(patterns.map(lit): _*)
-    docs.select(col(idCol), posexplode(acCounts(text, patterns))
+    docs.select(col(idCol), posexplode(acCounts(lower(col(textCol)), patterns))
         .as(Seq("__pos", "hits")))
       .filter(col("hits") > 0)
       .select(col(idCol),
@@ -57,17 +55,15 @@ object Blocklist {
     * Output: idCol, one `hits_<category>` column per category, and
     * `topic`. */
   def categorize(docs: DataFrame, idCol: String, textCol: String,
-      categories: Seq[(String, Seq[String])],
-      lowerCase: Boolean = true): DataFrame = {
+      categories: Seq[(String, Seq[String])]): DataFrame = {
     require(categories.nonEmpty && categories.forall(_._2.nonEmpty),
       "need at least one category, each with at least one keyword")
     require(categories.map(_._1).distinct.size == categories.size,
       "category names must be unique")
     val cats = categories.sortBy(_._1)
     val flat = cats.flatMap(_._2)
-    val text = if (lowerCase) lower(col(textCol)) else col(textCol)
     val offsets = cats.map(_._2.size).scanLeft(0)(_ + _)
-    val withCounts = docs.withColumn("__ac", acCounts(text, flat))
+    val withCounts = docs.withColumn("__ac", acCounts(lower(col(textCol)), flat))
     val hitCols = cats.zipWithIndex.map { case ((name, pats), i) =>
       aggregate(slice(col("__ac"), offsets(i) + 1, pats.size), lit(0L),
         (acc, h) => acc + h).as(s"hits_$name")
@@ -91,11 +87,9 @@ object Blocklist {
     * rollup is an in-row `aggregate` fold over the count array — the
     * whole report stays a single shuffle-free projection. */
   def screen(docs: DataFrame, idCol: String, textCol: String,
-      patterns: Seq[String], maxHits: Int = 1,
-      lowerCase: Boolean = true): DataFrame = {
+      patterns: Seq[String], maxHits: Int = 1): DataFrame = {
     require(maxHits >= 0, "maxHits must be non-negative")
-    val text = if (lowerCase) lower(col(textCol)) else col(textCol)
-    docs.withColumn("__hits", acCounts(text, patterns))
+    docs.withColumn("__hits", acCounts(lower(col(textCol)), patterns))
       .withColumn("total_hits",
         aggregate(col("__hits"), lit(0L), (acc, h) => acc + h))
       .withColumn("n_patterns_hit",

@@ -16,19 +16,23 @@ import org.apache.spark.sql.types._
   *   - The corpus is scanned ONCE. BPE operates on the word-frequency
   *     table (vocabulary ≪ corpus at any scale — the heavy-tail
   *     collapse is exactly why BPE works), which this operator
-  *     persists; every merge round is a map-combined aggregate over
-  *     the vocabulary, never a corpus rescan.
-  *   - Pair counting is a pure projection (slice + `zip_with`, no
-  *     per-row UDF) fanned through one `explode`, then ONE map-side
-  *     combinable `sum(freq)` aggregate keyed on the pair — the same
-  *     bounded-shuffle shape as the n-gram counters (q58/q104/q122).
-  *   - The merge DECISION is parameter-sized: a 1-row
-  *     `orderBy.limit(1).collect()` per round (count DESC, then
-  *     lexical on the pair — deterministic across engines and
-  *     partitionings, both sides binary string collation).
-  *   - The merge APPLICATION is a literal string `replace` on the
-  *     bracket-encoded state — see below — a codegen'd projection,
-  *     no shuffle.
+  *     aggregates once and persists; no merge round rescans the
+  *     corpus.
+  *   - A vocabulary of at most 2^20 distinct words (every real
+  *     corpus: Heaps' law) is collected and folded exactly on the
+  *     driver, so training runs one distributed aggregate whatever
+  *     the merge budget.
+  *   - A larger vocabulary falls back to the distributed fold: per
+  *     round, pair counting is a pure projection (slice + `zip_with`,
+  *     no per-row UDF) fanned through one `explode`, then ONE
+  *     map-side combinable `sum(freq)` aggregate keyed on the pair —
+  *     the same bounded-shuffle shape as the n-gram counters
+  *     (q58/q104/q122). The merge DECISION is a 1-row `min_by`
+  *     collect (count DESC, then lexical on the pair — deterministic
+  *     across engines and partitionings, both sides binary string
+  *     collation), and the merge APPLICATION is a literal string
+  *     `replace` on the bracket-encoded state — see below — a
+  *     codegen'd projection, no shuffle.
   *
   * Bracket encoding: a word's symbol sequence is carried as
   * `<l><o><w><_>` ('_' = end-of-word marker). The alphabet is pinned
@@ -78,19 +82,10 @@ object Bpe {
         .as("__state"),
       col("__freq"))
 
-  /** [[wordFreq]] bracket-encoded. */
-  private def vocab(docs: DataFrame, textCol: String): DataFrame =
-    encodeStates(wordFreq(docs, textCol))
-
   /** Split a bracket-encoded state back into its symbol array
     * (strip the outer brackets, split on the inner `><` seams). */
   private def symbols(state: org.apache.spark.sql.Column) =
     split(state.substr(lit(2), length(state) - 2), "><")
-
-  /** Driver-side Spark-action count of the most recent
-    * [[trainMerges]] run — the rounds-per-action scale probe the
-    * batched trainer exists for. */
-  val lastTrainActions = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Adjacent-pair frequency table of the current vocabulary states:
     * (lft, rgt, pair_count), map-side combinable. */
@@ -107,72 +102,48 @@ object Bpe {
       .agg(sum(col("__freq")).as("pair_count"))
   }
 
+  /** Distinct words [[trainMerges]] collects to the driver at most:
+    * a vocabulary this size or smaller trains with the driver fold. */
+  private val DriverVocabBudget = 1 << 20
+
   /** Learn `iterations` merges over the corpus. Stops early (fewer
     * rows) if the vocabulary runs out of adjacent pairs.
     *
-    * `mergesPerAction` > 1 turns on BATCHED training: each Spark
-    * action pulls the top pairs once and applies a PROVABLY
-    * sequential-equivalent prefix of them (see
-    * [[trainMergesBatched]]) — the scale fix for the one-driver-
-    * round-trip-per-merge shape, which at a production ~32k-merge
-    * vocabulary would mean ~32k actions. Output is identical to the
-    * sequential fold for ANY corpus (BpeSpec pins 128-round
-    * equality); default 1 preserves the original loop.
-    *
-    * `localVocabThreshold` > 0 enables the DRIVER-LOCAL tail: after
-    * the one corpus-sized word-frequency aggregation, if the distinct
-    * vocabulary has at most that many rows it is collected once and
-    * ALL merge rounds run locally — zero further Spark actions. This
-    * is the production contract for real (≈32k-merge) vocabularies:
-    * the word-freq table is Heaps-law bounded (≪ corpus; frequency
-    * floors shrink it further), so a 100 TB corpus trains with ONE
-    * distributed aggregate + a driver fold, while an unbounded
-    * vocabulary falls back to the distributed (optionally batched)
-    * rounds. The local fold is the same algorithm on the same data —
-    * merge lists are identical by construction (BpeSpec pins all
-    * three modes against each other and the brute-force reference). */
-  def trainMerges(docs: DataFrame, textCol: String, iterations: Int,
-      persistVocab: Boolean = true, mergesPerAction: Int = 1,
-      localVocabThreshold: Long = 0L): DataFrame = {
-    require(iterations >= 1, "iterations must be >= 1")
-    require(mergesPerAction >= 1, "mergesPerAction must be >= 1")
-    lastTrainActions.set(0)
-    if (localVocabThreshold > 0L) {
-      val spark = docs.sparkSession
-      // driver-collect budgets beyond Int.MaxValue rows are not a
-      // thing — clamp instead of letting toInt wrap negative
-      val cap = math.min(localVocabThreshold, (Int.MaxValue - 1).toLong).toInt
-      val wf = wordFreq(docs, textCol).persist()
-      lastTrainActions.incrementAndGet()
-      // one aggregate returns BOTH the gate count and (if small
-      // enough) the rows: collect with a limit guard
-      val rows = wf.limit(cap + 1).collect()
-      if (rows.length <= cap) {
-        wf.unpersist()
-        val words = rows.map(r => r.getString(0) -> r.getLong(1))
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(trainLocal(words, iterations), 1),
-          mergeSchema)
-      }
-      // vocabulary larger than the driver budget: distributed rounds
-      // over the ALREADY-AGGREGATED (persisted) word-freq table — the
-      // corpus is not rescanned, and the probe action stays counted
-      val out =
-        if (mergesPerAction > 1)
-          trainMergesBatched(encodeStates(wf), spark, iterations,
-            persistVocab = false, mergesPerAction)
-        else
-          trainMergesSequential(encodeStates(wf), spark, iterations,
-            persistVocab = false)
-      wf.unpersist()
-      return out
+    * The word-frequency table is aggregated once and persisted, and
+    * at most [[DriverVocabBudget]] + 1 of its rows are collected. A
+    * vocabulary that fits the budget trains with the exact driver
+    * fold ([[trainLocal]]): one distributed aggregate, then every
+    * round on the driver. The word-frequency table is Heaps-law
+    * bounded (≪ corpus), so this is the path real corpora take. A
+    * larger vocabulary falls back to the distributed fold
+    * ([[foldDistributed]]) over the persisted table, one action per
+    * round; the corpus is not rescanned. Both folds are the same
+    * algorithm on the same data, so their merge lists are identical
+    * (BpeSpec pins both against each other and a brute-force
+    * reference). */
+  def trainMerges(docs: DataFrame, textCol: String, iterations: Int): DataFrame =
+    withWordFreq(docs, textCol, iterations) { wf =>
+      val rows = wf.limit(DriverVocabBudget + 1).collect()
+      if (rows.length <= DriverVocabBudget)
+        trainLocal(rows.map(r => r.getString(0) -> r.getLong(1)), iterations)
+      else foldDistributed(wf, iterations)
     }
-    if (mergesPerAction > 1)
-      trainMergesBatched(vocab(docs, textCol), docs.sparkSession, iterations,
-        persistVocab, mergesPerAction)
-    else
-      trainMergesSequential(vocab(docs, textCol), docs.sparkSession, iterations,
-        persistVocab)
+
+  /** [[trainMerges]] forced onto the distributed fold whatever the
+    * vocabulary size, so tests can compare the two folds. */
+  private[graft] def trainMergesDistributed(docs: DataFrame, textCol: String,
+      iterations: Int): DataFrame =
+    withWordFreq(docs, textCol, iterations)(foldDistributed(_, iterations))
+
+  /** Persist the word-frequency table of `textCol` around `train`
+    * and return its merges as a [[mergeSchema]] frame. */
+  private def withWordFreq(docs: DataFrame, textCol: String, iterations: Int)
+      (train: DataFrame => Seq[Row]): DataFrame = {
+    require(iterations >= 1, "iterations must be >= 1")
+    val spark = docs.sparkSession
+    val wf = wordFreq(docs, textCol).persist()
+    val merges = try train(wf) finally wf.unpersist()
+    spark.createDataFrame(spark.sparkContext.parallelize(merges, 1), mergeSchema)
   }
 
   /** The exact sequential fold, driver-side, over the collected
@@ -215,13 +186,10 @@ object Bpe {
     out.toSeq
   }
 
-  private def trainMergesSequential(words0: DataFrame,
-      spark: org.apache.spark.sql.SparkSession,
-      iterations: Int, persistVocab: Boolean): DataFrame = {
-    // vocabulary ≪ corpus by contract: persist so the merge rounds
-    // never rescan the corpus (the one corpus-sized scan is upstream)
-    val base = if (persistVocab) words0.persist() else words0
-    var states = base
+  /** The distributed fold over the word-frequency table `wf`, one
+    * action per merge round. */
+  private def foldDistributed(wf: DataFrame, iterations: Int): Seq[Row] = {
+    var states = encodeStates(wf)
     val out = collection.mutable.ArrayBuffer.empty[Row]
     // ONE action per merge round. The round's single aggregate row
     // carries BOTH the merge decision (min_by over the ordering
@@ -231,10 +199,9 @@ object Bpe {
     // (symbols - 1) pairs, so tokens = total_pairs + total_freq,
     // with total_freq constant across rounds (one tiny job up
     // front). Only the final round needs a dedicated post-merge
-    // count — the pre-r9 form ran that aggregate every round.
-    val totalFreq = base.agg(coalesce(sum(col("__freq")), lit(0L)))
+    // count.
+    val totalFreq = wf.agg(coalesce(sum(col("__freq")), lit(0L)))
       .head().getLong(0)
-    lastTrainActions.incrementAndGet()
     var pending: Option[(Long, String, String, Long)] = None
     var exhausted = false
     for (i <- 1 to iterations if !exhausted) {
@@ -246,7 +213,6 @@ object Bpe {
         min_by(struct(col("lft"), col("rgt"), col("pair_count")),
           struct((-col("pair_count")).as("nc"), col("lft"), col("rgt")))
           .as("best")).head()
-      lastTrainActions.incrementAndGet()
       pending.foreach { case (pi, l, r, c) =>
         out += Row(pi, l, r, l + r, c, agg.getLong(0) + totalFreq)
       }
@@ -267,158 +233,9 @@ object Bpe {
         .agg(coalesce(sum(col("__freq")
           * size(symbols(col("__state"))).cast("long")), lit(0L)))
         .head().getLong(0)
-      lastTrainActions.incrementAndGet()
       out += Row(pi, l, r, l + r, c, tokensAfter)
     }
-    if (persistVocab) base.unpersist()
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toSeq, 1), mergeSchema)
-  }
-
-  /** Batched trainer: ONE `orderBy.limit(topM).collect()` action
-    * pulls the round's top pairs, and a maximal prefix of them is
-    * applied before the next recount. The prefix is chosen so the
-    * result is PROVABLY identical to the one-merge-per-round fold —
-    * a candidate (lft, rgt, c) joins the batch only if
-    *
-    *  1. it does not CHAIN-overlap any accepted pair — no accepted
-    *     rgt equals its lft and its rgt equals no accepted lft.
-    *     Two occurrences can only share a string position through
-    *     such a chain (`a b c` for (a,b)/(b,c)); merely sharing a
-    *     left or right symbol ((a,_) vs (b,_) — the dominant shape,
-    *     every word ends in '_') can never overlap, so counts stay
-    *     invariant and the literal replaces commute;
-    *  2. `lft != rgt` (greedy replacement then merges EVERY counted
-    *     occurrence, so tokens_after falls by exactly `c` — overlap
-    *     runs like `aaa` break that identity);
-    *  3. its merged string is a FRESH symbol (never in the initial
-    *     a-z/_ alphabet nor produced by any earlier merge): merging
-    *     can then only create brand-new pair TYPES, never add
-    *     occurrences to an existing type;
-    *  4. its merged string differs from every accepted merged
-    *     string (each new pair type then maps occurrence-injectively
-    *     to ONE pre-existing pair type across the merge boundary —
-    *     (x, l_j) or (r_j, y) — which chain-overlaps P_j and is
-    *     therefore excluded, bounding the new type's count by F);
-    *
-    * the walk stops at the first rejection (the batch must stay a
-    * PREFIX of the sorted order), and each member beyond the first
-    * must STRICTLY dominate its new-pair THREAT bound: the maximum
-    * count over visible excluded pairs chain-overlapping an EARLIER
-    * accepted member, with the horizon (last visible count) standing
-    * in for parents hiding below the window. Under 1-4 + the threat
-    * bound, at sequential step i every competitor is either an
-    * original excluded pair — count never increased, sorted after
-    * the prefix, so it loses on count or on the lex tie-break — or a
-    * new pair type, whose count is bounded by a chain-overlapping
-    * excluded parent's ≤ threat < c_i. Hence the sequential argmax
-    * picks exactly the accepted pairs in order. An inadmissible
-    * top-1 (l==r or symbol collision) falls back to a solo
-    * sequential step. BpeSpec pins 128-round merge-list equality
-    * with the sequential fold plus a randomized cross-mode fuzz;
-    * q123's oracle hash is unchanged by construction. */
-  private def trainMergesBatched(words0: DataFrame,
-      spark: org.apache.spark.sql.SparkSession,
-      iterations: Int, persistVocab: Boolean, batchMax: Int): DataFrame = {
-    val base = if (persistVocab) words0.persist() else words0
-    var states = base
-    val out = collection.mutable.ArrayBuffer.empty[Row]
-    def measuredTokens(): Long = {
-      lastTrainActions.incrementAndGet()
-      states.agg(coalesce(sum(col("__freq")
-          * size(symbols(col("__state"))).cast("long")), lit(0L)))
-        .head().getLong(0)
-    }
-    var tokens = measuredTokens()
-    // conservative superset of every symbol that has ever existed:
-    // vocab() states are single [a-z] chars plus '_', and each merge
-    // adds exactly its merged string
-    val knownSymbols = collection.mutable.Set[String]("_") ++
-      ('a' to 'z').map(_.toString)
-    def applyMerge(l: String, r: String): Unit = {
-      states = states.withColumn("__state",
-        replace(col("__state"), lit(s"<$l><$r>"), lit(s"<$l$r>")))
-      knownSymbols += (l + r)
-    }
-    var done = 0
-    var exhausted = false
-    while (done < iterations && !exhausted) {
-      val m = math.min(batchMax, iterations - done)
-      // wide visibility: the horizon (count bound for unseen pairs)
-      // is the LAST visible count, and the new-pair threat check
-      // falls back to it whenever a parent could be hiding below —
-      // an 8× window costs nothing (driver-side rows) and drops the
-      // horizon far enough that threats resolve to exact visible
-      // chain-overlap counts
-      val topM = 8 * m + 1
-      lastTrainActions.incrementAndGet()
-      val top = pairCounts(states)
-        .orderBy(col("pair_count").desc, col("lft"), col("rgt"))
-        .limit(topM).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      if (top.isEmpty) {
-        exhausted = true
-      } else {
-        // any pair NOT in the visible list has count ≤ the last
-        // visible count (total-order sort); 0 when the whole table fits
-        val horizon: Long = if (top.length == topM) top.last._3 else 0L
-        val accepted = collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-        var idx = 0
-        var stop = false
-        while (idx < top.length && accepted.size < m && !stop) {
-          val (l, r, c) = top(idx)
-          val structural = l != r &&
-            !accepted.exists(a => a._2 == l || r == a._1) && // no chain overlap
-            !knownSymbols.contains(l + r) &&
-            !accepted.exists(a => a._1 + a._2 == l + r)
-          // new-pair-type threat at this member's sequential turn: a
-          // new type's count is bounded by a parent pair that
-          // chain-overlaps an EARLIER accepted member — parents are
-          // therefore excluded rows (visible ones scanned exactly,
-          // unseen ones ≤ horizon). Excluded ORIGINAL pairs need no
-          // margin: they sort after this prefix, so at equal counts
-          // the comparator (count DESC, lft, rgt) still picks the
-          // accepted member. Hence strict dominance over the parent
-          // bound alone suffices.
-          val threat: Long =
-            if (accepted.isEmpty) Long.MinValue
-            else {
-              var t = horizon
-              var j = idx + 1
-              while (j < top.length) {
-                val q = top(j)
-                if (accepted.exists(a => a._2 == q._1 || q._2 == a._1) &&
-                    q._3 > t) t = q._3
-                j += 1
-              }
-              t
-            }
-          if (structural && (accepted.isEmpty || c > threat)) {
-            accepted += ((l, r, c)); idx += 1
-          } else stop = true
-        }
-        if (accepted.size >= 2) {
-          accepted.foreach { case (l, r, c) =>
-            applyMerge(l, r)
-            done += 1
-            tokens -= c // every counted occurrence merges (rule 2)
-            out += Row(done.toLong, l, r, l + r, c, tokens)
-          }
-        } else {
-          // solo sequential step: the true argmax, whatever its shape
-          val (l, r, c) = top(0)
-          applyMerge(l, r)
-          done += 1
-          // the count-c subtraction needs only rule 2 (no overlap);
-          // an l==r run merges fewer than c occurrences → measure
-          if (l != r) tokens -= c else tokens = measuredTokens()
-          out += Row(done.toLong, l, r, l + r, c, tokens)
-        }
-      }
-    }
-    if (persistVocab) base.unpersist()
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toSeq, 1), mergeSchema)
+    out.toSeq
   }
 
   /** Tokenize every document with an already-learned merge list:

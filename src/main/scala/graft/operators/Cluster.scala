@@ -46,8 +46,7 @@ import org.apache.spark.sql.types.DecimalType
   *
   * Iteration count is a parameter, not a convergence test, for the
   * same reason as [[Graph.pageRank]]: fixed budgets keep the plan
-  * bounded; pass `checkpoint = true` for deep budgets to cut lineage
-  * at each iteration instead of compounding joins.
+  * bounded, so the loop runs unpinned.
   */
 object Cluster {
 
@@ -100,10 +99,8 @@ object Cluster {
     * squared L2 distance, in micros², to the centroid the row was
     * assigned to in that round. */
   def kmeansMicro(vectors: DataFrame, idCol: String, vecCol: String,
-      k: Int, iterations: Int, salt: String = "km",
-      checkpoint: Boolean = false): DataFrame =
-    kmeansMicroModel(vectors, idCol, vecCol, k, iterations, salt, checkpoint)
-      .assign
+      k: Int, iterations: Int, salt: String = "km"): DataFrame =
+    kmeansMicroModel(vectors, idCol, vecCol, k, iterations, salt).assign
 
   /** A fitted deterministic k-means index: the final-round assignment
     * (idCol, cell, dist2_q) plus the centroids that PRODUCED that
@@ -117,8 +114,7 @@ object Cluster {
   /** [[kmeansMicro]] returning the full model (assignment +
     * assigning centroids) for index-build/probe compositions. */
   def kmeansMicroModel(vectors: DataFrame, idCol: String, vecCol: String,
-      k: Int, iterations: Int, salt: String = "km",
-      checkpoint: Boolean = false): KmeansMicroModel = {
+      k: Int, iterations: Int, salt: String = "km"): KmeansMicroModel = {
     require(k >= 1, "k must be >= 1")
     require(iterations >= 1, "iterations must be >= 1")
     val reserved = vectors.columns.filter(_.startsWith("__"))
@@ -171,10 +167,9 @@ object Cluster {
         .agg(transform(
           sort_array(collect_list(struct(col("__j"), col("__cv")))),
           s => s.getField("__cv")).as("__ncvec"))
-      val next = cents.join(upd, Seq("cell"), "left")
+      cents = cents.join(upd, Seq("cell"), "left")
         .select(col("cell"),
           coalesce(col("__ncvec"), col("cvec")).as("cvec"))
-      cents = if (checkpoint) next.localCheckpoint(true) else next
     }
     KmeansMicroModel(
       lastAssign.select(col(idCol), col("cell"), col("dist2_q")),

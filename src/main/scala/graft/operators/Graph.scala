@@ -33,11 +33,10 @@ import org.apache.spark.sql.functions._
   * Iteration count is a parameter, not a convergence test — a
   * convergence test is a per-iteration driver round-trip and an
   * unbounded plan; production runs fix the budget (10-20 iterations)
-  * and measure residual offline. For deep budgets pass
-  * `checkpoint = true` so each iteration's plan is cut at a
-  * materialized boundary instead of compounding 2·k joins of lineage
-  * into one tree (at harness depth the linear plan is fine and keeps
-  * the operator lazy for plan inspection).
+  * and measure residual offline. The loop is unpinned: the plan
+  * grows by 2 joins per iteration, and at the board's budgets that
+  * linear plan beats eager per-round pins (tried r16 and reverted;
+  * see [[pageRank]]) and keeps the operator lazy for plan inspection.
   *
   * Dangling mass (nodes with no outgoing edges) leaks rather than
   * redistributes — the simple-variant semantics, stated so the
@@ -50,8 +49,8 @@ object Graph {
     * over micro-quantized ranks starting at 10⁶ per node. Nodes =
     * distinct src ∪ dst. Output: (node, rank_micro). */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-      weightCol: String, iterations: Int, damping: Double = 0.85,
-      checkpoint: Boolean = false): DataFrame = {
+      weightCol: String, iterations: Int, damping: Double = 0.85)
+      : DataFrame = {
     require(iterations >= 0, "iterations must be >= 0")
     require(damping > 0.0 && damping < 1.0, "damping must be in (0, 1)")
     val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"),
@@ -77,12 +76,11 @@ object Graph {
           round(col("rank_micro").cast("double") * col("__ratio"))
             .cast("long").as("__c"))
         .groupBy(col("node")).agg(sum(col("__c")).as("__in"))
-      val next = nodes.join(contribs, Seq("node"), "left")
+      ranks = nodes.join(contribs, Seq("node"), "left")
         .select(col("node"),
           round(lit(base) + lit(damping)
             * coalesce(col("__in"), lit(0L)).cast("double"))
             .cast("long").as("rank_micro"))
-      ranks = if (checkpoint) next.localCheckpoint(true) else next
     }
     ranks
   }
@@ -109,8 +107,8 @@ object Graph {
     * rank_micro) for every node. */
   def personalizedPageRank(edges: DataFrame, srcCol: String,
       dstCol: String, weightCol: String, seeds: DataFrame,
-      seedIdCol: String, iterations: Int, damping: Double = 0.85,
-      checkpoint: Boolean = false): DataFrame = {
+      seedIdCol: String, iterations: Int, damping: Double = 0.85)
+      : DataFrame = {
     require(iterations >= 0, "iterations must be >= 0")
     require(damping > 0.0 && damping < 1.0, "damping must be in (0, 1)")
     val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"),
@@ -139,12 +137,11 @@ object Graph {
           round(col("rank_micro").cast("double") * col("__ratio"))
             .cast("long").as("__c"))
         .groupBy(col("node")).agg(sum(col("__c")).as("__in"))
-      val next = nodes.join(contribs, Seq("node"), "left")
+      ranks = nodes.join(contribs, Seq("node"), "left")
         .select(col("node"), col("__seed"),
           round(when(col("__seed"), lit(base)).otherwise(lit(0.0))
             + lit(damping) * coalesce(col("__in"), lit(0L)).cast("double"))
             .cast("long").as("rank_micro"))
-      ranks = if (checkpoint) next.localCheckpoint(true) else next
     }
     ranks.select(col("node"), col("rank_micro"))
   }
@@ -172,7 +169,7 @@ object Graph {
     * 1-row max broadcast. Output: (node, auth_micro, hub_micro) for
     * every node of the graph. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-           iterations: Int, checkpoint: Boolean = false): DataFrame = {
+           iterations: Int): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     // Eagerly pin the simple edge set and the node list: both are
     // referenced TWICE per half-round (join side + normalize), so an
@@ -214,10 +211,6 @@ object Graph {
         .groupBy(col("__src").as("node"))
         .agg(sum(col("auth_micro")).as("__raw"))
       hubs = normalized(hr, "hub_micro")
-      if (checkpoint) {
-        auths = auths.localCheckpoint(true)
-        hubs = hubs.localCheckpoint(true)
-      }
     }
     auths.join(hubs, Seq("node"))
   }

@@ -66,15 +66,13 @@ object Sinks {
 
   /** JSONL (newline-delimited JSON) sink — the de-facto interchange
     * format for LLM training corpora (one document object per line;
-    * what tokenizer and trainer toolchains ingest). Gzip by default:
+    * what tokenizer and trainer toolchains ingest). Always gzip:
     * JSONL is verbose and the write is IO-bound; per-file gzip keeps
     * files independently readable. One file per partition — feed
     * through [[graft.operators.Layout.clusterByZ]] or a repartition
     * to control file count/size. */
-  def jsonl(df: DataFrame, path: String, compress: Boolean = true): Unit = {
-    val w = df.write.mode("overwrite")
-    (if (compress) w.option("compression", "gzip") else w).json(path)
-  }
+  def jsonl(df: DataFrame, path: String): Unit =
+    df.write.mode("overwrite").option("compression", "gzip").json(path)
 
   /** ORC sink — the other big columnar warehouse format (Hive-world
     * interchange); Spark's native ORC writer keeps min/max/bloom

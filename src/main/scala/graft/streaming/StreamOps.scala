@@ -189,6 +189,23 @@ object StreamOps {
       checkpoint.fold(each)(each.option("checkpointLocation", _))
     }
 
+  /** [[replayEachBatch]] with a checkpoint under `work` that appends
+    * the frame `f` builds from each micro-batch to `work/out`, then
+    * reads the output back with the schema the batches wrote, so the
+    * read runs no schema-inference job. */
+  private def replayToParquet(spark: SparkSession, inputs: Seq[String],
+      work: String)(stream: SparkSession => DataFrame)(
+      f: DataFrame => DataFrame): DataFrame = {
+    val outDir = s"$work/out"
+    val written = new java.util.concurrent.atomic.AtomicReference[StructType]()
+    replayEachBatch(spark, inputs, Some(s"$work/ckpt"))(stream) { (b, _) =>
+      val out = f(b)
+      written.set(out.schema)
+      out.write.mode("append").options(Map(noSuccessMarker)).parquet(outDir)
+    }
+    Option(written.get).fold(spark.read)(spark.read.schema(_)).parquet(outDir)
+  }
+
   /** Stream-static enrichment — the most common production streaming
     * shape: each micro-batch of the event stream hash/broadcast-joins
     * a STATIC dimension (no state store, no watermark; the dim is
@@ -1009,10 +1026,8 @@ object StreamOps {
       docs, "text", "doc_id").localCheckpoint(true)
     val staged = stagedDir(spark, "neardupgate", dir)(
       crawlWaves(neardupArrivals(docs), "doc_id", "text"))
-    val work = graft.WorkDirs.create("graft_neardupgate_run_")
-    val outDir = s"$work/out"
-    replayEachBatch(spark, Seq(staged.path), Some(s"$work/ckpt"))(
-        staged.stream) { (b: DataFrame, _: Long) =>
+    replayToParquet(spark, Seq(staged.path),
+        graft.WorkDirs.create("graft_neardupgate_run_"))(staged.stream) { b =>
       graft.operators.Dedup.neardupAdmission(idxSigs,
           graft.operators.Dedup.minhashSignatures(
             b.select(col("doc_id"), col("text")), "text", "doc_id"),
@@ -1020,9 +1035,7 @@ object StreamOps {
         .join(b.select(col("doc_id"), col("wave")), Seq("doc_id"))
         .select(col("doc_id"), col("wave"), col("n_partners"),
           col("best_match_id"), col("best_agree"), col("admitted"))
-        .write.mode("append").parquet(outDir)
     }
-    spark.read.parquet(outDir)
   }
 
   /** STREAMING topic-mixture monitor: the q252 keyword tagger
@@ -1255,10 +1268,8 @@ object StreamOps {
     val staged = stagedDir(spark, "retrieval", dir)(queryWaves(spark, dir))
     val corpus = Tables.read(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-    val work = graft.WorkDirs.create("graft_retrieval_run_")
-    val outDir = s"$work/out"
-    replayEachBatch(spark, Seq(staged.path), Some(s"$work/ckpt"))(
-        staged.stream) { (batch: DataFrame, _: Long) =>
+    replayToParquet(spark, Seq(staged.path),
+        graft.WorkDirs.create("graft_retrieval_run_"))(staged.stream) { batch =>
       val queries = batch.select(col("wave"), col("vec_id"),
         col("embedding").cast("array<double>").as("embedding"))
       graft.operators.Ann.retrievalCascade(
@@ -1268,9 +1279,7 @@ object StreamOps {
           Seq("q_id"))
         .select(col("wave"), col("q_id"), col("rank"), col("c_id"),
           col("score"), col("exact_rank"))
-        .write.mode("append").parquet(outDir)
     }
-    spark.read.parquet(outDir)
   }
 
   // --- streaming count-min sketch ---------------------------------------
@@ -1878,17 +1887,6 @@ object StreamOps {
     fs.delete(delta, true)
   }
 
-  /** Incremental embedding upsert, end to end: stream staged
-    * (doc_id, version, text) files one micro-batch per file, embed
-    * ONLY the rows that arrive, and upsert them into `targetDir` with
-    * max-version-wins semantics. AvailableNow drains the staging
-    * directory and terminates.
-    *
-    * `nBuckets` sizes the target's hash partitioning: pick it so ONE
-    * bucket is an executor-memory-sized slice of the final target
-    * (per-batch cost is |batch| + the touched buckets' bytes — the
-    * ScaleProbe `upsert_fixed_batch` row measures this staying flat
-    * when buckets are sized to the target). */
   /** Incremental ANN-INDEX maintenance: the [[embeddingUpsert]] merge
     * with the IVF cell as the partition key. Arriving documents are
     * embedded, assigned to their nearest codebook cell
@@ -2072,10 +2070,8 @@ object StreamOps {
       .select(col("vec_id"), col("embedding"))
     val graph = graft.operators.Ann.nnDescentGraphMemo(
       spark, dir, degree, rounds)
-    val work = graft.WorkDirs.create("graft_graphserve_run_")
-    val outDir = s"$work/out"
-    replayEachBatch(spark, Seq(staged.path), Some(s"$work/ckpt"))(
-        staged.stream) { (b: DataFrame, _: Long) =>
+    replayToParquet(spark, Seq(staged.path),
+        graft.WorkDirs.create("graft_graphserve_run_"))(staged.stream) { b =>
       graft.operators.Ann.graphBeamTopK(graph,
           b.select(col("vec_id"), col("embedding")), corpus,
           "vec_id", "embedding", beam, hops, topK)
@@ -2083,9 +2079,7 @@ object StreamOps {
           Seq("q_id"))
         .select(col("wave"), col("q_id"), col("rank"),
           col("vec_id"), col("dist2"), col("exact_rank"))
-        .write.mode("append").parquet(outDir)
     }
-    spark.read.parquet(outDir)
   }
 
   /** STREAMING SEMANTIC-DRIFT MONITOR — q299's MAUVE-lite frontier
@@ -2115,10 +2109,8 @@ object StreamOps {
     val staged = stagedDir(spark, "semdrift", dir)(
       wavesBy(e.filter(col("label") >= 5).select(col("vec_id"), col("embedding")),
         col("vec_id") % 3 === 0, col("vec_id") % 3 =!= 0))
-    val work = graft.WorkDirs.create("graft_semdrift_run_")
-    val outDir = s"$work/out"
-    replayEachBatch(spark, Seq(staged.path), Some(s"$work/ckpt"))(
-        staged.stream) { (b: DataFrame, _: Long) =>
+    replayToParquet(spark, Seq(staged.path),
+        graft.WorkDirs.create("graft_semdrift_run_"))(staged.stream) { b =>
       val wave = b.select(col("wave")).head().getLong(0)
       val asg = graft.operators.Cluster.assignToCentroids(
         b, "vec_id", "embedding", centroids)
@@ -2129,9 +2121,7 @@ object StreamOps {
         .withColumn("wave", lit(wave))
         .select(col("wave"), col("lambda_num"), col("kl_p_nano"),
           col("kl_q_nano"))
-        .write.mode("append").options(Map(noSuccessMarker)).parquet(outDir)
     }
-    spark.read.parquet(outDir)
   }
 
   /** STREAMING CDC MERGE — the delete-aware sibling of
@@ -2197,6 +2187,17 @@ object StreamOps {
     fs.delete(delta, true)
   }
 
+  /** Incremental embedding upsert, end to end: stream staged
+    * (doc_id, version, text) files one micro-batch per file, embed
+    * ONLY the rows that arrive, and upsert them into `targetDir` with
+    * max-version-wins semantics. AvailableNow drains the staging
+    * directory and terminates.
+    *
+    * `nBuckets` sizes the target's hash partitioning: pick it so ONE
+    * bucket is an executor-memory-sized slice of the final target
+    * (per-batch cost is |batch| + the touched buckets' bytes — the
+    * ScaleProbe `upsert_fixed_batch` row measures this staying flat
+    * when buckets are sized to the target). */
   def embeddingUpsert(spark: SparkSession, stagingDir: String, targetDir: String,
                       checkpointDir: String,
                       embedder: graft.embed.Embedder,

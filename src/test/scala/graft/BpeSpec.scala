@@ -3,6 +3,7 @@ package graft
 import org.scalatest.matchers.should.Matchers
 
 import graft.operators.Bpe
+import graft.tools.JobCounter
 
 class BpeSpec extends SparkSpec with Matchers {
   import spark.implicits._
@@ -112,8 +113,8 @@ class BpeSpec extends SparkSpec with Matchers {
     a shouldBe b
   }
 
-  test("batched training equals the sequential fold over 128 rounds " +
-       "(and the brute-force reference) with >4 merges per action") {
+  test("driver fold equals the distributed fold and the brute-force " +
+       "reference over 128 rounds; its job count does not grow with rounds") {
     // a corpus rich enough for 128 distinct merges: seeded random
     // words over a 12-letter alphabet with Zipf-ish repetition
     val rnd = new scala.util.Random(42)
@@ -128,73 +129,84 @@ class BpeSpec extends SparkSpec with Matchers {
     }
     val docs = words.grouped(20).map(_.mkString(" ")).toSeq.toDF("text")
 
-    val seq128 = collectMerges(
-      Bpe.trainMerges(docs, "text", iterations = 128, mergesPerAction = 1))
-    val seqActions = Bpe.lastTrainActions.get()
-    val bat128 = collectMerges(
-      Bpe.trainMerges(docs, "text", iterations = 128, mergesPerAction = 16))
-    val batActions = Bpe.lastTrainActions.get()
-
-    bat128 shouldBe seq128 // identical merge list, counts, trajectories
-    seq128.size shouldBe 128
-    // batched: strictly fewer driver round-trips, same output
-    batActions should be < seqActions
-    // driver-local tail (the bounded-vocabulary production contract):
-    // ONE distributed action, identical merges
-    val loc128 = collectMerges(Bpe.trainMerges(docs, "text",
-      iterations = 128, localVocabThreshold = 1000000L))
-    val locActions = Bpe.lastTrainActions.get()
-    loc128 shouldBe seq128
-    locActions shouldBe 1L
-    (loc128.size.toDouble / locActions) should be > 4.0 // 128 rounds/action
-    // and the local brute-force reference agrees with all of them
+    val (loc128, locJobs) = JobCounter.count(spark)(
+      collectMerges(Bpe.trainMerges(docs, "text", iterations = 128)))
+    val dist128 = collectMerges(
+      Bpe.trainMergesDistributed(docs, "text", iterations = 128))
     val freq = words.groupBy(identity).map { case (w, g) => w -> g.size.toLong }
-    bat128.take(32) shouldBe bruteMerges(freq, 32)
+
+    loc128.size shouldBe 128
+    loc128 shouldBe dist128 // identical merge list, counts, trajectories
+    loc128 shouldBe bruteMerges(freq, 128)
+    // the driver fold runs every round locally: training 8 merges and
+    // training 128 submit the same jobs
+    val (_, jobs8) = JobCounter.count(spark)(
+      collectMerges(Bpe.trainMerges(docs, "text", iterations = 8)))
+    locJobs shouldBe jobs8
   }
 
-  test("driver-local threshold smaller than the vocabulary falls back " +
-       "to distributed rounds with identical output") {
-    val docs = (Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
-      Seq.fill(6)("newest") ++ Seq.fill(3)("widest"))
-      .grouped(4).map(_.mkString(" ")).toSeq.toDF("text")
-    val dist = collectMerges(Bpe.trainMerges(docs, "text", iterations = 4))
-    val fellBack = collectMerges(Bpe.trainMerges(docs, "text", iterations = 4,
-      localVocabThreshold = 2L)) // 4 distinct words > 2
-    fellBack shouldBe dist
-  }
-
-  test("batched training equals sequential on the overlap-heavy corpus " +
-       "(l==r runs force solo re-measured steps)") {
+  test("driver fold equals the distributed fold on the overlap-heavy " +
+       "corpus (l==r runs)") {
     val docs = (Seq.fill(9)("aaaa") ++ Seq.fill(5)("aabb") ++
       Seq.fill(4)("bbbb") ++ Seq.fill(3)("abab"))
       .grouped(3).map(_.mkString(" ")).toSeq.toDF("text")
     val a = collectMerges(
-      Bpe.trainMerges(docs, "text", iterations = 8, mergesPerAction = 1))
-    val b = collectMerges(
-      Bpe.trainMerges(docs, "text", iterations = 8, mergesPerAction = 8))
+      Bpe.trainMergesDistributed(docs, "text", iterations = 8))
+    val b = collectMerges(Bpe.trainMerges(docs, "text", iterations = 8))
     b shouldBe a
   }
 
-  test("randomized cross-mode equality: batched-distributed vs " +
-       "driver-local (independent code paths) over seeded corpora") {
-    // the batched trainer's admission rules (chain-overlap, fresh
-    // merged symbol, parent-threat bound) are novel — fuzz them
-    // against the driver-local exact fold, which shares NO code with
-    // the distributed rounds
+  test("randomized fold equality: distributed vs driver-local " +
+       "(independent code paths) over seeded corpora") {
+    // the driver fold shares NO code with the distributed rounds, so
+    // fuzz the two against each other on a tiny alphabet that
+    // maximizes chain collisions and ties
     for (seed <- Seq(1, 7, 13, 99)) {
       val rnd = new scala.util.Random(seed)
-      val letters = "abcde" // tiny alphabet maximizes chain collisions
+      val letters = "abcde"
       val pool = (0 until 60).map(_ =>
         (0 until (2 + rnd.nextInt(5)))
           .map(_ => letters(rnd.nextInt(letters.length))).mkString)
       val words = (0 until 600).map(_ => pool(rnd.nextInt(pool.length)))
       val docs = words.grouped(15).map(_.mkString(" ")).toSeq.toDF("text")
-      val bat = collectMerges(Bpe.trainMerges(docs, "text",
-        iterations = 24, mergesPerAction = 8))
-      val loc = collectMerges(Bpe.trainMerges(docs, "text",
-        iterations = 24, localVocabThreshold = 100000L))
-      withClue(s"seed=$seed: ") { bat shouldBe loc }
+      val dist = collectMerges(
+        Bpe.trainMergesDistributed(docs, "text", iterations = 24))
+      val loc = collectMerges(Bpe.trainMerges(docs, "text", iterations = 24))
+      withClue(s"seed=$seed: ") { dist shouldBe loc }
     }
+  }
+
+  test("empty corpus and all-null text: 0 merges with the merge schema") {
+    val noDocs = Seq.empty[String].toDF("text")
+    val nulls = Seq[String](null, null, null).toDF("text")
+    for ((name, docs) <- Seq("empty" -> noDocs, "all-null" -> nulls)) {
+      withClue(s"$name: ") {
+        val out = Bpe.trainMerges(docs, "text", iterations = 4)
+        out.schema shouldBe Bpe.mergeSchema
+        val got = collectMerges(out)
+        got shouldBe empty
+        got shouldBe bruteMerges(Map.empty, 4)
+      }
+    }
+  }
+
+  test("one-word corpus matches the brute-force reference") {
+    val docs = Seq("banana").toDF("text")
+    collectMerges(Bpe.trainMerges(docs, "text", iterations = 8)) shouldBe
+      bruteMerges(Map("banana" -> 1L), 8)
+  }
+
+  test("every document repeated 3x: both folds match the brute-force " +
+       "reference at tripled counts") {
+    val once = (Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
+      Seq.fill(6)("newest") ++ Seq.fill(3)("widest"))
+      .grouped(4).map(_.mkString(" ")).toSeq
+    val docs = Seq.fill(3)(once).flatten.toDF("text")
+    val want = bruteMerges(
+      Map("low" -> 15L, "lower" -> 6L, "newest" -> 18L, "widest" -> 9L), 10)
+    collectMerges(Bpe.trainMerges(docs, "text", iterations = 10)) shouldBe want
+    collectMerges(
+      Bpe.trainMergesDistributed(docs, "text", iterations = 10)) shouldBe want
   }
 
   test("encodeStats: learned merges compress, zero merges degenerate to chars") {

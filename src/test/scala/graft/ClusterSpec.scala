@@ -66,16 +66,6 @@ class ClusterSpec extends SparkSpec with Matchers {
     a shouldBe b
   }
 
-  test("checkpoint = true leaves the trajectory unchanged") {
-    val pts = (1L to 40L)
-      .map(i => (i, Seq((i % 5).toFloat, (i % 3).toFloat)))
-      .toDF("id", "v")
-    val a = asMap(Cluster.kmeansMicro(pts, "id", "v", k = 3, iterations = 3))
-    val b = asMap(Cluster.kmeansMicro(pts, "id", "v", k = 3, iterations = 3,
-      checkpoint = true))
-    a shouldBe b
-  }
-
   test("empty cell keeps its previous centroid") {
     // all points identical except one far outlier that seeds a cell of
     // its own; with k = 2 one cell may end up empty after round 1 —

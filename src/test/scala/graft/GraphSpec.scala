@@ -38,17 +38,14 @@ class GraphSpec extends SparkSpec with Matchers {
     out shouldBe Map(1L -> 1000000L, 2L -> 1000000L, 3L -> 1000000L)
   }
 
-  test("partition-invariant and checkpoint-invariant") {
+  test("partition-invariant") {
     val edges = (1L to 200L).map(i => (i, i * 7 % 200 + 1, i % 3 + 1))
     val df = edges.toDF("src", "dst", "w")
     val plain = Graph.pageRank(df, "src", "dst", "w", 4)
       .orderBy("node").collect().toSeq
     val repart = Graph.pageRank(df.repartition(8), "src", "dst", "w", 4)
       .orderBy("node").collect().toSeq
-    val ckpt = Graph.pageRank(df, "src", "dst", "w", 4, checkpoint = true)
-      .orderBy("node").collect().toSeq
     plain shouldBe repart
-    plain shouldBe ckpt
   }
 
   test("rank mass is conserved up to damping leak on a closed graph") {
